@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_pipeline_sam_gov_spark.registry import query
-from etl_pipeline_sam_gov_spark.slots import session_slots
+from etl_pipeline_sam_gov_spark.slots import release, session_slots
 from etl_pipeline_sam_gov_spark.tables import load_tables
 
 SESSION_GAP_S = 1800
@@ -1447,9 +1447,7 @@ def ts_level_shift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     # executions feeding the local windows and the per-slice overlap
     # carry, so slices mis-joined their frame overlap). The persist
     # pins ONE execution's pids; see ab_sequential_sprt for the class.
-    prev = session_slots(spark).pop("lshift", None)
-    if prev is not None:
-        prev.unpersist()
+    release(spark, "lshift")
     ranged = (
         seq.repartitionByRange(n_parts, "event_type", "ts_us", "event_id")
         .withColumn("pid", F.spark_partition_id())
@@ -3279,10 +3277,7 @@ def ts_exponential_fit_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregation, granged feeds the in-slice ECDF prefix AND the
     # per-slice subtotals; each pair must see one execution's sampled
     # boundaries). See ab_sequential_sprt for the class.
-    prev = session_slots(spark).pop("ks", None)
-    if prev is not None:
-        for df in prev:
-            df.unpersist()
+    release(spark, "ks")
     ranged = (
         seq.repartitionByRange(n_parts, "event_type", "ts", "event_id")
         .withColumn("pid", F.spark_partition_id())

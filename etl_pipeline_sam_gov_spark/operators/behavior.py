@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_pipeline_sam_gov_spark.registry import query
-from etl_pipeline_sam_gov_spark.slots import session_slots
+from etl_pipeline_sam_gov_spark.slots import release, session_slots
 from etl_pipeline_sam_gov_spark.tables import load_tables
 
 # ---------------------------------------------------------------------------
@@ -515,9 +515,7 @@ def reco_item_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     super-linear (5.1×/4×) purely from the repeated grouping (the
     PageRank/k-core persist discipline)."""
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
-    prev = session_slots(spark).pop("basket", None)
-    if prev is not None:
-        prev.unpersist()
+    release(spark, "basket")
     arrs = (
         li.select("l_orderkey", "l_partkey")
         .groupBy("l_orderkey")
@@ -2380,9 +2378,7 @@ def ab_sequential_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two reads to one execution; the persist makes the consistency a
     # property of the PLAN rather than of a physical-dedup optimization
     # (tests/test_reuse_independence.py).
-    prev = session_slots(spark).pop("sprt", None)
-    if prev is not None:
-        prev.unpersist()
+    release(spark, "sprt")
     ranged = (
         tagged.repartitionByRange(n_parts, "arm", "ts", "event_id")
         .withColumn("pid", F.spark_partition_id())
@@ -2586,9 +2582,7 @@ def ab_propensity_caliper_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-slice extreme aggregation — pid consistency across the two
     # reads must not depend on ReuseExchange deduping the sampled
     # range exchange.
-    prev = session_slots(spark).pop("caliper", None)
-    if prev is not None:
-        prev.unpersist()
+    release(spark, "caliper")
     ranged = (
         lab.repartitionByRange(
             spark.sparkContext.defaultParallelism, "bp", "user_id"

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_sam_gov_spark.operators.dedup import spread_docs, tokens_col
 from etl_pipeline_sam_gov_spark.registry import query
-from etl_pipeline_sam_gov_spark.slots import session_slots
+from etl_pipeline_sam_gov_spark.slots import release, session_slots
 from etl_pipeline_sam_gov_spark.tables import load_tables
 
 BPE_ROUNDS = 3
@@ -162,10 +162,7 @@ def _merge_chain(
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("wc"))
     )
-    prev = session_slots(spark).pop(("bpe", tag), None)
-    if prev is not None:
-        for df in prev:
-            df.unpersist()
+    release(spark, ("bpe", tag))
     cached: list[DataFrame] = []
     vocab = words.select(
         "word", "wc", F.expr("regexp_extract_all(word, '.', 0)").alias("s")

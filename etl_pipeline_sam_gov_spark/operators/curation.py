@@ -22,7 +22,7 @@ from etl_pipeline_sam_gov_spark.operators.dedup import (
     tokens_col,
 )
 from etl_pipeline_sam_gov_spark.registry import query
-from etl_pipeline_sam_gov_spark.slots import session_slots
+from etl_pipeline_sam_gov_spark.slots import release, session_slots
 from etl_pipeline_sam_gov_spark.tables import load_tables
 
 #: train/val/test bucket edges out of 100.
@@ -76,9 +76,7 @@ def packed_prev_tokens(
     # BEFORE persisting: CacheManager matches entries by logical-plan
     # equality, and same-args invocations build identical plans — an
     # unpersist after the new persist would evict the new entry too.
-    prev = session_slots(spark).pop(("pack", tuple(group_cols)), None)
-    if prev is not None:
-        prev.unpersist()
+    release(spark, ("pack", tuple(group_cols)))
     stamped = (
         toks.repartitionByRange(n_parts, *group_cols, "doc_id")
         .withColumn("_pid", F.spark_partition_id())

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_sam_gov_spark.registry import query
+from etl_pipeline_sam_gov_spark.slots import release, session_slots
 from etl_pipeline_sam_gov_spark.tables import load_tables
 
 # ---------------------------------------------------------------------------
@@ -412,6 +413,20 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_duplicate_pairs(docs)
 
 
+def cached_shingle_arrays(docs: DataFrame) -> DataFrame:
+    """with_shingle_arrays(docs), persisted under the session's
+    "minhash" slot (slots.session_slots). Every caller builds the same
+    plan from the same documents, so they share ONE slot: the previous
+    call's relation is released before the new one is persisted.
+    Without the slot the relation was never released, and a later
+    plan-identical persist was served the first call's blocks."""
+    spark = docs.sparkSession
+    release(spark, "minhash")
+    arrs = with_shingle_arrays(docs).persist()
+    session_slots(spark)["minhash"] = arrs
+    return arrs
+
+
 def minhash_duplicate_pairs(docs: DataFrame) -> DataFrame:
     """Verified (doc1, doc2, jaccard) near-dup pairs via MinHash-LSH —
     the edge set shared by the pair query and the clustering query."""
@@ -422,7 +437,7 @@ def minhash_duplicate_pairs(docs: DataFrame) -> DataFrame:
     # cached array also can't hit the InferFiltersFromGenerate cloning
     # trap doc_shingles guards against. At 100 TB the persist becomes a
     # checkpoint of the same relation.
-    arrs = with_shingle_arrays(docs).persist()
+    arrs = cached_shingle_arrays(docs)
     sh = arrs.select("doc_id", F.explode("arr").alias("shingle"))
     cand = lsh_candidate_pairs(minhash_signatures(sh))
     # Verification joins the (small) candidate set against per-doc
@@ -818,7 +833,7 @@ def dedup_crossdoc_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # being pushed below the projection, where InferFilters would clone
     # the whole shingle construction into a pre-Exchange single-task
     # filter over raw text (the doc_shingles trap).
-    arrs = with_shingle_arrays(docs).persist()
+    arrs = cached_shingle_arrays(docs)
     base = arrs.select(
         "doc_id", F.size("arr").cast("bigint").alias("n_shingles")
     ).filter(F.col("n_shingles") > 0)
@@ -1204,7 +1219,7 @@ def dedup_minhash_estimate_quality(spark: SparkSession, sf_dir: str) -> DataFram
     dedup_minhash_lsh verification shape). Estimates are exact-int
     ratios; everything renders through round(6)."""
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    arrs = with_shingle_arrays(docs).persist()
+    arrs = cached_shingle_arrays(docs)
     sh = arrs.select("doc_id", F.explode("arr").alias("shingle"))
     sigs = minhash_signatures(sh)
     cand = lsh_candidate_pairs(sigs)

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_pipeline_sam_gov_spark.registry import query
-from etl_pipeline_sam_gov_spark.slots import session_slots
+from etl_pipeline_sam_gov_spark.slots import release, session_slots
 from etl_pipeline_sam_gov_spark.tables import load_tables
 
 #: PageRank damping factor and fixed iteration count.
@@ -152,10 +152,7 @@ def graph_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # new relations: CacheManager matches entries by logical-plan
     # equality, and repeated invocations build identical plans — an
     # unpersist AFTER the new persist would evict the new entry too.
-    prev = session_slots(spark).pop("pagerank", None)
-    if prev is not None:
-        for df in prev:
-            df.unpersist()
+    release(spark, "pagerank")
     # r7: the edge cache is hash-partitioned by src ONCE at setup —
     # the degree groupBy then reuses that partitioning exchange-free
     # (so the repartition largely pays for itself), and every round's
@@ -422,10 +419,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # evict entries this query still holds (ADVICE r08). Whichever
     # family member runs releases the previous member's relations and
     # owns the slot until the next family invocation.
-    prev = session_slots(spark).pop("co_supply", None)
-    if prev is not None:
-        for df in prev:
-            df.unpersist()
+    release(spark, "co_supply")
     edges, scored = _co_supply_edges(spark, sf_dir)
     edges = edges.persist()
     session_slots(spark)["co_supply"] = (edges, scored)
@@ -646,10 +640,7 @@ def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey") * 2 + 1).alias("s"),
         )
     )
-    prev = session_slots(spark).pop("kcore", None)
-    if prev is not None:
-        for df in prev:
-            df.unpersist()
+    release(spark, "kcore")
     # r9: one exchange builds the deduped symmetric edge cache — the
     # dedup runs exchange-free above the src repartition (subset
     # clustered distribution), replacing the old pairs-level distinct
@@ -783,10 +774,7 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
     )
-    prev = session_slots(spark).pop("hits", None)
-    if prev is not None:
-        for df in prev:
-            df.unpersist()
+    release(spark, "hits")
     pairs = pairs.persist()
     cached: list[DataFrame] = [pairs]
     hub = pairs.select("c").distinct().select("c", F.lit(1.0).alias("hub"))
@@ -910,10 +898,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey") * 2 + 1).alias("s"),
         )
     )
-    prev = session_slots(spark).pop("bfs", None)
-    if prev is not None:
-        for df in prev:
-            df.unpersist()
+    release(spark, "bfs")
     # r9: one-exchange edge cache (the PageRank r9 setup shape) — the
     # dedup runs exchange-free above the src repartition, and hash(src)
     # in the cache co-partitions every round's frontier⋈edges join.
@@ -1048,10 +1033,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey") * 2 + 1).alias("s"),
         )
     )
-    prev = session_slots(spark).pop("rw", None)
-    if prev is not None:
-        for df in prev:
-            df.unpersist()
+    release(spark, "rw")
     # r8 persisted the shared setup relation (deg and the ranked
     # neighbor window are SEPARATE consumers; unpersisted, each re-ran
     # the lineitem ⋈ orders derivation — 2.35 s → 1.83 s interleaved).
@@ -1351,10 +1333,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     # equality — a pop after the persists would evict the NEW entries
     # and the returned plan would re-run the lineitem self-join ~5x;
     # ADVICE r08). Shared "co_supply" slot: see graph_triangle_count.
-    prev = session_slots(spark).pop("co_supply", None)
-    if prev is not None:
-        for df in prev:
-            df.unpersist()
+    release(spark, "co_supply")
     edges, scored = _co_supply_edges(spark, sf_dir)
     # Referenced by three self-join aliases, the degree count, AND
     # the triangle total — persist so the lineitem self-join +
@@ -1488,10 +1467,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Shared family slot — see graph_triangle_count for why tri/cc/lp
     # share one key (plan-identical scored/edges, no CacheManager
     # refcounting).
-    prev = session_slots(spark).pop("co_supply", None)
-    if prev is not None:
-        for df in prev:
-            df.unpersist()
+    release(spark, "co_supply")
     edges, scored = _co_supply_edges(spark, sf_dir)
     sym = (
         edges.select(F.col("s1").alias("src"), F.col("s2").alias("dst"))
@@ -1953,10 +1929,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey") * 2 + 1).alias("s"),
         )
     )
-    prev = session_slots(spark).pop("ppr", None)
-    if prev is not None:
-        for df in prev:
-            df.unpersist()
+    release(spark, "ppr")
     # r9: one-exchange edge cache — dedup runs exchange-free above the
     # src repartition (the graph_pagerank_bipartite r9 setup shape).
     edges = (

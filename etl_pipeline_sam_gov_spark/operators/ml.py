@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_pipeline_sam_gov_spark.registry import query
-from etl_pipeline_sam_gov_spark.slots import session_slots
+from etl_pipeline_sam_gov_spark.slots import release, session_slots
 from etl_pipeline_sam_gov_spark.tables import load_tables
 
 #: cluster count, Lloyd iterations, and the fixed-point scale (2^10).
@@ -544,10 +544,7 @@ def ml_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ci",
         F.posexplode("arr").alias("j0", "cj"),
     )
-    prev = session_slots(spark).pop("pca", None)
-    if prev is not None:
-        for df in prev:
-            df.unpersist()
+    release(spark, "pca")
     cov = (
         pairs.groupBy("i", (F.col("j0") + 1).alias("j"))
         .agg(
@@ -1921,9 +1918,7 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same bounded cache-slot discipline as the pagerank edge cache:
     # release the previous invocation's relation BEFORE persisting the
     # new one (CacheManager matches by logical-plan equality).
-    prev = session_slots(spark).pop("iso", None)
-    if prev is not None:
-        prev.unpersist()
+    release(spark, "iso")
     rows = ranged.mapInPandas(pav_slices, row_schema).persist()
     session_slots(spark)["iso"] = rows
     blocks = rows.groupBy("source", "pid", "blk").agg(
@@ -2035,9 +2030,7 @@ def ml_lift_gain_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SAME boundaries, so the fan-out is PERSISTED (r8 reuse-off sweep
     # class, see ab_sequential_sprt: the sampler is rdd.id-seeded, two
     # physical executions of the exchange can split differently).
-    prev = session_slots(spark).pop("lift", None)
-    if prev is not None:
-        prev.unpersist()
+    release(spark, "lift")
     ranged = (
         scored.repartitionByRange(
             LIFT_RANK_PARTS, F.desc("score"), F.asc("doc_id")

@@ -22,6 +22,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_pipeline_sam_gov_spark.slots import rearm, session_slots, written_since
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
@@ -37,13 +39,11 @@ ORACLES: dict[str, str] = {}
 #: The cached plan still EXECUTES in full on every action — nothing is
 #: materialized — so bench numbers keep measuring real engine work.
 #:
-#: Opt-in and structurally gated: queries that persist()/collect()
-#: internally (iterative graph loops, shared-scan dedup, prefix-sum
-#: packing) are excluded, because returning their cached DataFrame
-#: would serve re-runs from the persisted relations and measure
-#: Spark's block cache instead of the query. tests/test_plans.py
-#: asserts every name below builds a plan with ZERO InMemoryRelation
-#: nodes, so a stateful helper sneaking into a cached query fails CI.
+#: Opt-in and structurally gated: tests/test_plans.py asserts every
+#: name below builds a plan with ZERO InMemoryRelation nodes, so a
+#: stateful helper sneaking into a cached query fails CI. Queries that
+#: persist through session slots are cached only via PLAN_CACHED_REARM
+#: below; queries that collect or count while building stay out.
 PLAN_CACHED: frozenset[str] = frozenset(
     {
         "q1_pricing_summary",
@@ -97,10 +97,39 @@ PLAN_CACHED: frozenset[str] = frozenset(
         "agg_table_profile",
         "dq_constraint_suite",
         "retrieval_hybrid_rrf",
+        # No persist, no collect: the GD steps chain lazy broadcast
+        # 1-row weight relations, and the flagship's SQL resolves the
+        # contracts view when it is built, so a later re-registration
+        # of the view cannot change the cached plan.
+        "contracts_flagship",
+        "ml_logistic_regression_gd",
     }
 )
 
-#: session → {(query name, sf_dir) → prepared DataFrame}. Weak-keyed so
+#: Prepared plans for queries whose build persists relations through
+#: session slots (slots.py). A hit must not read the previous call's
+#: blocks, so the cache records the slots the first build wrote and
+#: every hit re-arms them (slots.rearm): unpersist, then persist again
+#: at the recorded levels. The hit therefore costs a few persist calls
+#: instead of 100s-1000s of py4j calls, and its next action recomputes
+#: every cached relation, launching the same jobs as a cold call.
+#: Only queries whose plan construction launches ZERO Spark jobs
+#: qualify (kcore, isotonic, CDC ... count or collect while building
+#: and stay out); tests/test_plans.py gates each name on a
+#: job-free build, unloaded cache entries after a hit, and the cold
+#: call's job count and rows on the hit's execution.
+PLAN_CACHED_REARM: frozenset[str] = frozenset(
+    {
+        "graph_pagerank_bipartite",
+        "text_bpe_merge_rounds",
+        "reco_item_lift",
+        "dedup_minhash_lsh",
+        "curate_pack_token_shards",
+    }
+)
+
+#: session → {(query name, sf_dir) → (prepared DataFrame, the slots its
+#: build wrote as slots.written_since records them)}. Weak-keyed so
 #: a stopped session's plans (bound to a dead JVM handle) can never be
 #: served to a new session that reuses the same id().
 _PLAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
@@ -180,6 +209,12 @@ def _pin_cached_plan_conf(name: str, fn: QueryFn) -> QueryFn:
 
 
 def _plan_cached(name: str, fn: QueryFn) -> QueryFn:
+    """Memoize ``fn``'s DataFrame per (session, sf_dir). A repeat call
+    returns the same object after re-arming the slots the first build
+    wrote (none for a pure plan). Execute it through a fresh
+    Dataset (``df.select("*")``): a second action on the same object
+    reuses its executed plan, cache bindings included."""
+
     @functools.wraps(fn)
     def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
@@ -187,12 +222,19 @@ def _plan_cached(name: str, fn: QueryFn) -> QueryFn:
         except TypeError:  # non-weakref-able session stub in tests
             return fn(spark, sf_dir)
         key = (name, sf_dir)
-        df = per.get(key)
-        if df is None:
-            df = per[key] = fn(spark, sf_dir)
+        hit = per.get(key)
+        if hit is not None:
+            df, armed = hit
+            for slot, value, levels in armed:
+                rearm(spark, slot, value, levels)
+            return df
+        before = dict(session_slots(spark))
+        df = fn(spark, sf_dir)
+        per[key] = (df, written_since(spark, before))
         return df
 
     return wrapper
+
 
 #: Deliberately non-scalable ground-truth twins: query name → the
 #: registered scale-path variant that is the engine's production answer
@@ -222,7 +264,10 @@ def query(
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
         QUERIES[name] = _pin_cached_plan_conf(
-            name, _plan_cached(name, fn) if name in PLAN_CACHED else fn
+            name,
+            _plan_cached(name, fn)
+            if name in PLAN_CACHED | PLAN_CACHED_REARM
+            else fn,
         )
         if oracle is not None:
             ORACLES[name] = oracle

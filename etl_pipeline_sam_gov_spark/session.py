@@ -138,6 +138,15 @@ def get_spark(app_name: str = "etl_pipeline_sam_gov_spark") -> SparkSession:
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # PySpark wraps every Column/functions call to record its
+        # Python call site: 4 py4j round trips plus a stack walk per
+        # call, 60-75% of the py4j calls of the iterative queries'
+        # plan builds. The trade: DataFrame errors lose the Python
+        # call-site fragment, which mostly shows on ANSI runtime
+        # errors, and ANSI is off here (RUNTIME_CONFS). PySpark reads
+        # this once per process, from the first active session, so it
+        # is set here, when the session is created.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -39,6 +39,7 @@ from pyspark.sql import types as T
 from etl_pipeline_sam_gov_spark.operators import curation as _cur
 from etl_pipeline_sam_gov_spark.registry import query
 from etl_pipeline_sam_gov_spark.session import configure_runtime
+from etl_pipeline_sam_gov_spark.slots import session_slots
 
 _counter = itertools.count()
 
@@ -1056,15 +1057,25 @@ def stream_cdc_snapshot_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the rewrite becomes a partitioned overwrite of touched
     partitions (write_partitioned_snapshot) or a table-format MERGE.
     The availableNow replay is one epoch; the out-of-order multi-batch
-    path is pinned in tests/test_streaming.py."""
+    path is pinned in tests/test_streaming.py.
+
+    Each call merges into a fresh temp dir, kept in the session's
+    "cdc" slot: the previous call's dir is deleted before the next one
+    is created (the slots' release-before-create rule), so a session
+    holds one snapshot dir, and the DataFrame a previous call returned
+    can no longer be read."""
+    import shutil
     import tempfile
 
     events = read_events_stream(spark, sf_dir).select(
         "user_id", F.unix_micros("ts").alias("ts_us"), "event_id", "value"
     )
-    snap = os.path.join(
-        tempfile.mkdtemp(prefix="spark_graft_cdc_"), "snapshot"
-    )
+    prev = session_slots(spark).pop("cdc", None)
+    if prev is not None:
+        shutil.rmtree(prev, ignore_errors=True)
+    root = tempfile.mkdtemp(prefix="spark_graft_cdc_")
+    session_slots(spark)["cdc"] = root
+    snap = os.path.join(root, "snapshot")
     q = cdc_upsert_stream(events, snap)
     q.processAllAvailable()
     q.stop()

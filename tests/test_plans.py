@@ -13,6 +13,7 @@ from etl_pipeline_sam_gov_spark.plans.introspect import (
     physical_plan as plan,
 )
 from etl_pipeline_sam_gov_spark.tables import load_tables
+from oracle_compare import canonical_rows
 
 
 def fresh(name):
@@ -830,6 +831,134 @@ def test_plan_cached_queries_exist_and_hold_no_state(spark, sf_dir):
         assert eng.QUERIES[name](spark, sf_dir) is eng.QUERIES[name](
             spark, sf_dir
         ), f"{name}: prepared-plan cache miss"
+
+
+def _last_job_id(spark) -> int:
+    """Id of the newest job in the status store (jobsList is newest
+    first), once the listener bus has delivered every event."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+
+def _jobs_launched(spark, thunk):
+    """(Spark jobs ``thunk`` launched, its return value)."""
+    first = _last_job_id(spark)
+    out = thunk()
+    return _last_job_id(spark) - first, out
+
+
+def _run(df):
+    """Canonical rows of ``df``, executed through a fresh Dataset as a
+    prepared plan's caller must (a second action on the same object
+    would reuse its executed plan)."""
+    out = df.select("*")
+    return canonical_rows(out.columns, [tuple(r) for r in out.collect()])
+
+
+def _cache_loads(df) -> list[bool]:
+    """isCachedColumnBuffersLoaded of every InMemoryRelation the plan
+    of ``df`` reads, as CacheManager substitutes them now."""
+    leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
+    return [
+        leaves.apply(i).cacheBuilder().isCachedColumnBuffersLoaded()
+        for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "InMemoryRelation"
+    ]
+
+
+def test_rearmed_prepared_plans_rebuild_their_caches(spark, sf_dir):
+    """registry.PLAN_CACHED_REARM names persisting queries whose
+    prepared plan is served again after slots.rearm swaps in fresh
+    cache entries. For each: the raw build launches no job (a build
+    that counts or collects cannot be replayed by a re-arm); a repeat
+    call returns the same object; right after that hit every cache the
+    plan reads is still unloaded, so the hit cannot read the previous
+    call's blocks; and executing the hit launches as many jobs as the
+    cold call and returns the same rows."""
+    from etl_pipeline_sam_gov_spark.registry import (
+        _PLAN_CACHE,
+        PLAN_CACHED,
+        PLAN_CACHED_REARM,
+    )
+
+    missing = PLAN_CACHED_REARM - set(eng.QUERIES)
+    assert not missing, f"PLAN_CACHED_REARM names not in registry: {sorted(missing)}"
+    assert not PLAN_CACHED_REARM & PLAN_CACHED
+    # The first read of a table in a session infers its parquet schema
+    # with a Spark job; that is table loading, not plan building.
+    load_tables(spark, sf_dir)
+    for name in sorted(PLAN_CACHED_REARM):
+        n, _ = _jobs_launched(spark, lambda: fresh(name)(spark, sf_dir))
+        assert n == 0, f"{name}: the build launched {n} Spark job(s)"
+        # Start from a cold prepared plan: an earlier test may have
+        # executed the cached object itself.
+        _PLAN_CACHE.get(spark, {}).pop((name, sf_dir), None)
+        cold = eng.QUERIES[name](spark, sf_dir)
+        cold_jobs, cold_rows = _jobs_launched(spark, lambda: _run(cold))
+        hit = eng.QUERIES[name](spark, sf_dir)
+        assert hit is cold, f"{name}: prepared-plan cache miss"
+        loads = _cache_loads(hit)
+        assert loads and not any(loads), (
+            f"{name}: the hit reads loaded cache entries {loads} before "
+            "any action — it would measure the previous call's blocks"
+        )
+        hit_jobs, hit_rows = _jobs_launched(spark, lambda: _run(hit))
+        assert hit_jobs == cold_jobs, (
+            f"{name}: hit ran {hit_jobs} jobs, the cold call {cold_jobs}"
+        )
+        assert hit_rows == cold_rows and len(hit_rows) > 0, (
+            f"{name}: the re-armed plan drifted from its cold call"
+        )
+
+
+#: Each re-armed query → the queries that release its slot key, or
+#: persist plan-identical relations under a key of their own.
+REARM_SIBLINGS = {
+    "dedup_minhash_lsh": [
+        "dedup_cluster_components",
+        "dedup_crossdoc_ngrams",
+        "dedup_minhash_estimate_quality",
+    ],
+    "text_bpe_merge_rounds": ["text_bpe_encode"],
+    "curate_pack_token_shards": ["pipeline_training_corpus"],
+}
+
+
+def test_rearmed_prepared_plans_interleave_with_slot_siblings(spark, sf_dir):
+    """A sibling's build releases the re-armed query's relations (or
+    shares them through CacheManager's plan equality); interleaving
+    the two must leave both outputs stable."""
+    for name, sibs in REARM_SIBLINGS.items():
+        want = _run(eng.QUERIES[name](spark, sf_dir))
+        for sib in sibs:
+            sib_want = _run(eng.QUERIES[sib](spark, sf_dir))
+            assert _run(eng.QUERIES[name](spark, sf_dir)) == want, (
+                f"{name} drifted after {sib}"
+            )
+            assert _run(eng.QUERIES[sib](spark, sf_dir)) == sib_want, (
+                f"{sib} drifted after {name}"
+            )
+
+
+def test_iterative_mix_keeps_persisted_rdds_bounded(spark, sf_dir):
+    """The six iterative queries of the benchmark's registry_mix, two
+    passes in one session: the second pass may not leave more persisted
+    RDDs than the first (each slot holds one call's relations). Spark
+    tracks persisted RDDs weakly, so a collected leftover of an earlier
+    test can only lower the second count."""
+    mix = [
+        "graph_pagerank_bipartite", "text_bpe_merge_rounds", "reco_item_lift",
+        "dedup_minhash_lsh", "curate_pack_token_shards",
+        "ml_logistic_regression_gd",
+    ]
+    counts = []
+    for _ in range(2):
+        for name in mix:
+            _run(eng.QUERIES[name](spark, sf_dir))
+        counts.append(spark.sparkContext._jsc.getPersistentRDDs().size())
+    assert counts[1] <= counts[0], f"persisted RDDs grew across passes: {counts}"
 
 
 def test_salted_join_hot_lane_is_populated_and_bounded(spark, sf_dir):

@@ -24,7 +24,10 @@ from oracle_compare import canonical_rows
 SLOT_QUERIES = [
     "reco_item_lift",            # "basket"
     "graph_bfs_hops",            # "bfs"
-    "dedup_cluster_components",  # "cc"
+    "dedup_cluster_components",  # "minhash"
+    "dedup_minhash_lsh",         # "minhash"
+    "dedup_crossdoc_ngrams",     # "minhash"
+    "dedup_minhash_estimate_quality",  # "minhash"
     "graph_hits_scores",         # "hits"
     "ml_isotonic_calibration",   # "iso"
     "graph_kcore_membership",    # "kcore"
@@ -49,8 +52,9 @@ SLOT_QUERIES = [
 
 
 def _fresh(name):
-    """Bypass the prepared-plan cache (slot queries are excluded from
-    it anyway, but stay robust to registry changes)."""
+    """Bypass the prepared-plan cache: each call must run the build's
+    own release-before-persist path (the re-armed prepared plans are
+    gated in tests/test_plans.py)."""
     fn = eng.QUERIES[name]
     return getattr(fn, "__wrapped__", fn)
 

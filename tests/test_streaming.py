@@ -431,6 +431,22 @@ def test_cdc_upsert_accumulates_out_of_order_microbatches(spark, tmp_path):
     assert got == expect and len(got) > 0
 
 
+def test_cdc_query_keeps_one_temp_dir_per_session(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """stream_cdc_snapshot_upsert merges into a fresh temp dir per call;
+    the next call deletes the previous one first, so repeated calls in
+    one session leave exactly one spark_graft_cdc_* dir behind."""
+    import tempfile
+
+    import etl_pipeline_sam_gov_spark as eng
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for _ in range(2):
+        assert eng.QUERIES["stream_cdc_snapshot_upsert"](spark, sf_dir).count() > 0
+    assert len(list(tmp_path.glob("spark_graft_cdc_*"))) == 1
+
+
 def test_directory_source_streams_part_files(spark, sf_dir, tmp_path):
     """A directory-shaped source (a real landing zone, or a
     Spark-written table like the stress amplifier's) must stream its
