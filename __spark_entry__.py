@@ -29,7 +29,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def _touched_since_cert(last_round: dict[str, int]) -> dict[str, int]:
     """Names whose implementing module was committed AFTER the
-    CORRECTNESS artifact holding their latest driver row — i.e. code
+    CORRECTNESS artifact holding their latest driver row, or in the
+    same commit (a fix committed with the artifact it answers was not
+    what the artifact certified) — i.e. code
     changed since the last certification, so the old green row no
     longer certifies the current plan (VERDICT r09 #2) — mapped to the
     module's last commit time (the tier sorts newest code first: the
@@ -80,7 +82,7 @@ def _touched_since_cert(last_round: dict[str, int]) -> dict[str, int]:
         if rel not in file_ts:
             file_ts[rel] = commit_ts(rel)
         fts = file_ts[rel]
-        if fts is not None and fts > cts:
+        if fts is not None and fts >= cts:
             touched[name] = fts
     return touched
 

@@ -118,10 +118,13 @@ def main() -> None:
 
     # Best of 3 runs per query: the first run pays one-time whole-stage
     # codegen + JVM JIT for that query's generated code (~2-3 s for the
-    # widest expression chains — measured, not guessed); at any real
-    # data scale that cost amortizes to nothing, so steady-state is the
-    # number that predicts cluster throughput. Three runs (vs two) give
-    # the min a second post-warmup sample, so one noisy run can't set it.
+    # widest expression chains — measured, not guessed). Compiled classes
+    # are cached across queries, up to session.CODEGEN_CACHE_ENTRIES
+    # (1000), so later runs and later queries with the same generated
+    # code skip the compile; at any real data scale that cost amortizes
+    # to nothing, so steady-state is the number that predicts cluster
+    # throughput. Three runs (vs two) give the min a second post-warmup
+    # sample, so one noisy run can't set it.
     RUNS = 3
     floor = load_floor() if sf == 0.1 else {}
 

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_pipeline_sam_gov_spark.registry import query
-from etl_pipeline_sam_gov_spark.slots import release, session_slots
+from etl_pipeline_sam_gov_spark.slots import release, session_slots, slot_persist
 from etl_pipeline_sam_gov_spark.tables import load_tables
 
 SESSION_GAP_S = 1800
@@ -1447,13 +1447,12 @@ def ts_level_shift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     # executions feeding the local windows and the per-slice overlap
     # carry, so slices mis-joined their frame overlap). The persist
     # pins ONE execution's pids; see ab_sequential_sprt for the class.
-    release(spark, "lshift")
-    ranged = (
+    ranged = slot_persist(
+        spark,
+        "lshift",
         seq.repartitionByRange(n_parts, "event_type", "ts_us", "event_id")
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
+        .withColumn("pid", F.spark_partition_id()),
     )
-    session_slots(spark)["lshift"] = ranged
     w_loc = W.partitionBy("event_type", "pid").orderBy("ts_us", "event_id")
     w_loc_d = W.partitionBy("event_type", "pid").orderBy(
         F.desc("ts_us"), F.desc("event_id")

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_pipeline_sam_gov_spark.registry import query
-from etl_pipeline_sam_gov_spark.slots import release, session_slots
+from etl_pipeline_sam_gov_spark.slots import slot_persist
 from etl_pipeline_sam_gov_spark.tables import load_tables
 
 # ---------------------------------------------------------------------------
@@ -515,18 +515,17 @@ def reco_item_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     super-linear (5.1×/4×) purely from the repeated grouping (the
     PageRank/k-core persist discipline)."""
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
-    release(spark, "basket")
-    arrs = (
+    arrs = slot_persist(
+        spark,
+        "basket",
         li.select("l_orderkey", "l_partkey")
         .groupBy("l_orderkey")
         .agg(
             F.array_sort(
                 F.array_distinct(F.collect_list("l_partkey"))
             ).alias("ps")
-        )
-        .persist()
+        ),
     )
-    session_slots(spark)["basket"] = arrs
     item = (
         arrs.select(F.explode("ps").alias("l_partkey"))
         .groupBy("l_partkey")
@@ -2378,13 +2377,12 @@ def ab_sequential_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two reads to one execution; the persist makes the consistency a
     # property of the PLAN rather than of a physical-dedup optimization
     # (tests/test_reuse_independence.py).
-    release(spark, "sprt")
-    ranged = (
+    ranged = slot_persist(
+        spark,
+        "sprt",
         tagged.repartitionByRange(n_parts, "arm", "ts", "event_id")
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
+        .withColumn("pid", F.spark_partition_id()),
     )
-    session_slots(spark)["sprt"] = ranged
     w_rank = W.partitionBy("arm", "pid").orderBy("ts", "event_id")
     w_in = w_rank.rowsBetween(W.unboundedPreceding, W.currentRow)
     local = ranged.select(
@@ -2582,15 +2580,14 @@ def ab_propensity_caliper_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-slice extreme aggregation — pid consistency across the two
     # reads must not depend on ReuseExchange deduping the sampled
     # range exchange.
-    release(spark, "caliper")
-    ranged = (
+    ranged = slot_persist(
+        spark,
+        "caliper",
         lab.repartitionByRange(
             spark.sparkContext.defaultParallelism, "bp", "user_id"
         )
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
+        .withColumn("pid", F.spark_partition_id()),
     )
-    session_slots(spark)["caliper"] = ranged
     w_prev = W.partitionBy("pid").orderBy("bp", "user_id").rowsBetween(
         W.unboundedPreceding, W.currentRow
     )

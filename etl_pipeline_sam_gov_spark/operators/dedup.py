@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_sam_gov_spark.registry import query
-from etl_pipeline_sam_gov_spark.slots import release, session_slots
+from etl_pipeline_sam_gov_spark.slots import release, session_slots, slot_persist
 from etl_pipeline_sam_gov_spark.tables import load_tables
 
 # ---------------------------------------------------------------------------
@@ -165,6 +165,14 @@ def doc_shingles(docs: DataFrame) -> DataFrame:
     )
 
 
+def cached_doc_shingles(docs: DataFrame) -> DataFrame:
+    """doc_shingles(docs), persisted under the session's "shingles"
+    slot. The Jaccard and containment queries persist this same plan,
+    so they share the slot: each call releases the previous call's
+    relation before persisting its own."""
+    return slot_persist(docs.sparkSession, "shingles", doc_shingles(docs))
+
+
 #: DuckDB equivalent of doc_shingles (kept in lockstep).
 _SQL_SHINGLES = r"""
 toks AS (SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents),
@@ -258,7 +266,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The shingle relation feeds the pair join (twice) and the size agg:
     # persist it so the text is shingled once, not three times. At
     # 100 TB this would be a checkpoint to cluster storage instead.
-    sh = doc_shingles(docs).persist()
+    sh = cached_doc_shingles(docs)
     return _verified_jaccard_pairs(
         sh,
         sh.alias("a")
@@ -420,11 +428,7 @@ def cached_shingle_arrays(docs: DataFrame) -> DataFrame:
     call's relation is released before the new one is persisted.
     Without the slot the relation was never released, and a later
     plan-identical persist was served the first call's blocks."""
-    spark = docs.sparkSession
-    release(spark, "minhash")
-    arrs = with_shingle_arrays(docs).persist()
-    session_slots(spark)["minhash"] = arrs
-    return arrs
+    return slot_persist(docs.sparkSession, "minhash", with_shingle_arrays(docs))
 
 
 def minhash_duplicate_pairs(docs: DataFrame) -> DataFrame:
@@ -562,7 +566,7 @@ def dedup_simhash_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist is the rare win here (multi-consumed relation, like
     # ngram_jaccard's shingle self-join); single-pass stages stay
     # unpersisted (recompute beats the cache round-trip).
-    sigs = simhash_signatures(docs).persist()
+    sigs = slot_persist(spark, "simhash", simhash_signatures(docs))
     n_bands = SIMHASH_BITS // 8
     bands = sigs.select(
         "doc_id",
@@ -726,7 +730,10 @@ CC_CHECKPOINT_EVERY = 3
 def propagate_min_labels(bidir: DataFrame) -> DataFrame:
     """Min-label propagation over a symmetric edge list (a, b) until
     fixpoint; returns (node, label). See dedup_cluster_components for
-    the scale argument."""
+    the scale argument. The returned labels stay persisted in the
+    session's "cc_labels" slot until the next call releases them."""
+    spark = bidir.sparkSession
+    release(spark, "cc_labels")
     labels = (
         bidir.select(F.col("a").alias("node"))
         .distinct()
@@ -761,6 +768,7 @@ def propagate_min_labels(bidir: DataFrame) -> DataFrame:
         raise RuntimeError(
             f"label propagation did not converge in {CC_MAX_ITERS} rounds"
         )
+    session_slots(spark)["cc_labels"] = labels
     return labels
 
 
@@ -1000,17 +1008,19 @@ def semantic_keep(
         ),
     )
     rn = F.row_number().over(W.partitionBy("vec_id").orderBy("d", "cid"))
-    assign = (
+    # materialize ONCE: the pair stage self-joins this relation, and
+    # without the persist each alias re-runs the whole quantize +
+    # distance + argmin chain (measured ~40% of end-to-end at sf0.1).
+    # At cluster scale this is the natural stage boundary a real
+    # pipeline writes to storage between clustering and pruning. The
+    # capped and uncapped paths persist the same plan: one slot.
+    assign = slot_persist(
+        emb.sparkSession,
+        "semdedup",
         dist.withColumn("rn", rn)
         .filter(F.col("rn") == 1)
         .select("vec_id", "cid")
-        .join(norms, "vec_id")
-        # materialize ONCE: the pair stage self-joins this relation, and
-        # without the persist each alias re-runs the whole quantize +
-        # distance + argmin chain (measured ~40% of end-to-end at sf0.1).
-        # At cluster scale this is the natural stage boundary a real
-        # pipeline writes to storage between clustering and pruning.
-        .persist()
+        .join(norms, "vec_id"),
     )
     work = assign
     if max_cluster_size is not None:
@@ -1141,7 +1151,7 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller side. The shingle relation persists once and feeds the
     pair join and both size lookups."""
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    sh = doc_shingles(docs).persist()
+    sh = cached_doc_shingles(docs)
     inter = (
         sh.alias("a")
         .join(

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_pipeline_sam_gov_spark.registry import query
-from etl_pipeline_sam_gov_spark.slots import release, session_slots
+from etl_pipeline_sam_gov_spark.slots import release, session_slots, slot_persist
 from etl_pipeline_sam_gov_spark.tables import load_tables
 
 #: cluster count, Lloyd iterations, and the fixed-point scale (2^10).
@@ -1918,9 +1918,7 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same bounded cache-slot discipline as the pagerank edge cache:
     # release the previous invocation's relation BEFORE persisting the
     # new one (CacheManager matches by logical-plan equality).
-    release(spark, "iso")
-    rows = ranged.mapInPandas(pav_slices, row_schema).persist()
-    session_slots(spark)["iso"] = rows
+    rows = slot_persist(spark, "iso", ranged.mapInPandas(pav_slices, row_schema))
     blocks = rows.groupBy("source", "pid", "blk").agg(
         F.sum("label").alias("s"), F.count(F.lit(1)).alias("c")
     )
@@ -2030,15 +2028,14 @@ def ml_lift_gain_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SAME boundaries, so the fan-out is PERSISTED (r8 reuse-off sweep
     # class, see ab_sequential_sprt: the sampler is rdd.id-seeded, two
     # physical executions of the exchange can split differently).
-    release(spark, "lift")
-    ranged = (
+    ranged = slot_persist(
+        spark,
+        "lift",
         scored.repartitionByRange(
             LIFT_RANK_PARTS, F.desc("score"), F.asc("doc_id")
         )
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
+        .withColumn("pid", F.spark_partition_id()),
     )
-    session_slots(spark)["lift"] = ranged
     w_part = W.partitionBy("pid").orderBy(F.desc("score"), "doc_id")
     local = ranged.withColumn("rn", F.row_number().over(w_part))
     # Per-partition counts: a <= LIFT_RANK_PARTS-row relation; the

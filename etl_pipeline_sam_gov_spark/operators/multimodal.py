@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_pipeline_sam_gov_spark.registry import query
+from etl_pipeline_sam_gov_spark.slots import slot_persist
 from etl_pipeline_sam_gov_spark.tables import load_tables
 
 #: Output schema of the media feature extractor (real header decode).
@@ -739,7 +740,7 @@ def multimodal_image_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-expansion joins, intra-cluster pairs) consumes the hash
     # relation: persist so the BMP decode runs once (the
     # dedup_simhash_blocked discipline).
-    return dhash_pairs_from_hashes(hashes.persist())
+    return dhash_pairs_from_hashes(slot_persist(spark, "dhash", hashes))
 
 
 def dhash_pairs_from_hashes(hashes: DataFrame) -> DataFrame:

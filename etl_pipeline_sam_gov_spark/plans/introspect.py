@@ -12,7 +12,7 @@ operators' own assertions) can gate on them. Used by
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def physical_plan(df: DataFrame) -> str:
@@ -90,6 +90,32 @@ def execution_metrics(df: DataFrame) -> dict[str, dict[str, int]]:
 
     walk(df._jdf.queryExecution().executedPlan())
     return out
+
+
+def cache_loads(df: DataFrame) -> list[bool]:
+    """isCachedColumnBuffersLoaded of every InMemoryRelation the plan
+    of ``df`` reads, as CacheManager substitutes them now: True where
+    the plan would read blocks an earlier action already stored."""
+    leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
+    return [
+        leaves.apply(i).cacheBuilder().isCachedColumnBuffersLoaded()
+        for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "InMemoryRelation"
+    ]
+
+
+def codegen_stats(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, compile ms) by Janino since the JVM started,
+    from Spark's process-wide CodegenMetrics. Every codegen cache miss
+    compiles one class, so the count's delta across a run is the run's
+    misses. The milliseconds are the histogram's mean × its count: the
+    mean comes from a sampled reservoir, so they are an estimate."""
+    hist = (
+        spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    n = hist.getCount()
+    return n, hist.getSnapshot().getMean() * n
 
 
 def total_metric(df: DataFrame, metric_key: str) -> int:

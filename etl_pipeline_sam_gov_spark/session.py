@@ -53,6 +53,16 @@ RUNTIME_CONFS = {
     # UTC the wall-clock values are bit-identical to DuckDB's naive read,
     # and the streaming sources inherit a watermarkable event-time column.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # Keep the whole-stage codegen stage id out of the generated class
+    # name. AQE numbers stages in the order they become ready, which
+    # varies run to run, and the id made the same generated code a new
+    # codegen cache key (one Janino compile each) under every
+    # numbering: repeated passes of the benchmark's iterative queries
+    # kept compiling 0-8 classes even with every class cached. With it
+    # out they compile 178 instead of ~204 classes cold and none when
+    # repeated (sf0.001, 4 cores). Only stack traces lose the stage
+    # suffix of the class name.
+    "spark.sql.codegen.useIdInClassName": "false",
     # Scan-split sizing. The local fixtures are single small files whose
     # row groups are ~1 MB — the 128 MB default packs each table into ONE
     # task and serializes the scan stage on a 32-core box. 1 MB splits
@@ -63,6 +73,23 @@ RUNTIME_CONFS = {
         "SPARK_GRAFT_MAX_PARTITION_BYTES", str(1024 * 1024)
     ),
 }
+
+
+#: Capacity of Spark's LRU cache of Janino-compiled codegen classes
+#: (spark.sql.codegen.cache.maxEntries, default 100). The benchmark's
+#: 13-query registry_mix needs 346 distinct classes (268 with the stage
+#: id out of class names, see RUNTIME_CONFS) and contracts_etl 55, so
+#: at 100 the cache evicted every registry_mix class before its reuse
+#: and each steady pass recompiled 300-345 of them (1.8-3.3 s of an
+#: ~8-9 s pass on 4 cores, sf0.01); at 1000 it recompiles none. 1000 is
+#: about 3x the largest working set measured; a full-registry sweep
+#: still evicts in LRU order, as before. Cost: about 140 KB of driver
+#: heap per entry (invalidating a 346-entry cache freed 48 MB), so at
+#: most ~140 MB. The conf is static: it is set by get_spark's builder
+#: and cannot be applied by configure_runtime, so a pre-built session
+#: handed in by a driver keeps its own value. SPARK_GRAFT_EXTRA_CONFS
+#: overrides it.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 #: Sessions already configured — configure_runtime is called by every
@@ -147,6 +174,7 @@ def get_spark(app_name: str = "etl_pipeline_sam_gov_spark") -> SparkSession:
         # this once per process, from the first active session, so it
         # is set here, when the session is created.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

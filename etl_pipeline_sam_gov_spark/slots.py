@@ -60,6 +60,16 @@ def release(spark: SparkSession, key) -> None:
         df.unpersist()
 
 
+def slot_persist(spark: SparkSession, key, df: DataFrame) -> DataFrame:
+    """Persist ``df`` as the sole content of ``key``'s slot: release
+    what the slot held, persist ``df``, store it, return it. Queries
+    that persist plan-identical relations share one key."""
+    release(spark, key)
+    df = df.persist()
+    session_slots(spark)[key] = df
+    return df
+
+
 def written_since(spark: SparkSession, before: dict) -> tuple:
     """(key, value, storage levels) of every slot holding DataFrames
     whose value object is not the one in ``before`` (a copy of

@@ -160,12 +160,13 @@ def test_queries_dict_is_verification_priority_ordered():
     assert [rank[c] for c in classes] == sorted(rank[c] for c in classes)
 
 
-def test_touched_since_cert_flags_recently_rewritten_files():
+def test_touched_since_cert_flags_recently_rewritten_files(monkeypatch):
     """The stale-cert tier must key on git commit times: a query whose
-    implementing module was committed after its CORRECTNESS artifact is
-    'touched'; one whose module predates its cert row is not. Run only
-    when git history is available (the helper degrades to set() without
-    it, which the priority test above already covers)."""
+    implementing module was committed after its CORRECTNESS artifact,
+    or in the same commit, is 'touched'; one whose module predates its
+    cert row is not. Run only when git history is available (the
+    helper degrades to set() without it, which the priority test above
+    already covers)."""
     import os
     import subprocess
 
@@ -215,12 +216,21 @@ def test_touched_since_cert_flags_recently_rewritten_files():
         file_c = commit_ts(src)
         if cert is None or file_c is None:
             continue
-        assert (name in touched) == (file_c > cert), (
+        assert (name in touched) == (file_c >= cert), (
             name,
             src,
             file_c,
             cert,
         )
+
+    # A file committed in the same commit as the certifying artifact
+    # (equal commit times) is stale: the artifact certified the code
+    # before that commit's fix.
+    def same_commit(args, **kwargs):
+        return subprocess.CompletedProcess(args, 0, stdout="1700000000\n")
+
+    monkeypatch.setattr(subprocess, "run", same_commit)
+    assert ent._touched_since_cert(probes) == dict.fromkeys(probes, 1700000000)
 
 
 # ---------------------------------------------------------------------------

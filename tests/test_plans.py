@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 
 import etl_pipeline_sam_gov_spark as eng
 from etl_pipeline_sam_gov_spark.plans.introspect import (
+    cache_loads,
+    codegen_stats,
     explain_formatted as formatted,
     physical_plan as plan,
 )
@@ -857,17 +859,6 @@ def _run(df):
     return canonical_rows(out.columns, [tuple(r) for r in out.collect()])
 
 
-def _cache_loads(df) -> list[bool]:
-    """isCachedColumnBuffersLoaded of every InMemoryRelation the plan
-    of ``df`` reads, as CacheManager substitutes them now."""
-    leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
-    return [
-        leaves.apply(i).cacheBuilder().isCachedColumnBuffersLoaded()
-        for i in range(leaves.size())
-        if leaves.apply(i).getClass().getSimpleName() == "InMemoryRelation"
-    ]
-
-
 def test_rearmed_prepared_plans_rebuild_their_caches(spark, sf_dir):
     """registry.PLAN_CACHED_REARM names persisting queries whose
     prepared plan is served again after slots.rearm swaps in fresh
@@ -899,7 +890,7 @@ def test_rearmed_prepared_plans_rebuild_their_caches(spark, sf_dir):
         cold_jobs, cold_rows = _jobs_launched(spark, lambda: _run(cold))
         hit = eng.QUERIES[name](spark, sf_dir)
         assert hit is cold, f"{name}: prepared-plan cache miss"
-        loads = _cache_loads(hit)
+        loads = cache_loads(hit)
         assert loads and not any(loads), (
             f"{name}: the hit reads loaded cache entries {loads} before "
             "any action — it would measure the previous call's blocks"
@@ -942,23 +933,42 @@ def test_rearmed_prepared_plans_interleave_with_slot_siblings(spark, sf_dir):
             )
 
 
+#: The six iterative queries of the benchmark's registry_mix.
+ITERATIVE_MIX = [
+    "graph_pagerank_bipartite", "text_bpe_merge_rounds", "reco_item_lift",
+    "dedup_minhash_lsh", "curate_pack_token_shards",
+    "ml_logistic_regression_gd",
+]
+
+
 def test_iterative_mix_keeps_persisted_rdds_bounded(spark, sf_dir):
-    """The six iterative queries of the benchmark's registry_mix, two
-    passes in one session: the second pass may not leave more persisted
-    RDDs than the first (each slot holds one call's relations). Spark
-    tracks persisted RDDs weakly, so a collected leftover of an earlier
-    test can only lower the second count."""
-    mix = [
-        "graph_pagerank_bipartite", "text_bpe_merge_rounds", "reco_item_lift",
-        "dedup_minhash_lsh", "curate_pack_token_shards",
-        "ml_logistic_regression_gd",
-    ]
+    """ITERATIVE_MIX, two passes in one session: the second pass may
+    not leave more persisted RDDs than the first (each slot holds one
+    call's relations). Spark tracks persisted RDDs weakly, so a
+    collected leftover of an earlier test can only lower the second
+    count."""
     counts = []
     for _ in range(2):
-        for name in mix:
+        for name in ITERATIVE_MIX:
             _run(eng.QUERIES[name](spark, sf_dir))
         counts.append(spark.sparkContext._jsc.getPersistentRDDs().size())
     assert counts[1] <= counts[0], f"persisted RDDs grew across passes: {counts}"
+
+
+def test_repeated_iterative_mix_compiles_no_code(spark, sf_dir):
+    """ITERATIVE_MIX after one warm pass: a second pass finds every
+    generated class in Spark's codegen cache. At the default cache
+    size (100 entries) the mix's ~180 classes evicted each other and
+    every pass recompiled ~200 of them. The bound leaves room for one
+    class pair (driver and task class loaders compile separately) of a
+    plan AQE has not produced before."""
+    for name in ITERATIVE_MIX:
+        _run(eng.QUERIES[name](spark, sf_dir))
+    before, _ = codegen_stats(spark)
+    for name in ITERATIVE_MIX:
+        _run(eng.QUERIES[name](spark, sf_dir))
+    compiled = codegen_stats(spark)[0] - before
+    assert compiled <= 5, f"a repeated pass compiled {compiled} classes"
 
 
 def test_salted_join_hot_lane_is_populated_and_bounded(spark, sf_dir):

@@ -17,14 +17,27 @@ from __future__ import annotations
 import pytest
 
 import etl_pipeline_sam_gov_spark as eng
+from etl_pipeline_sam_gov_spark.plans.introspect import cache_loads
 from oracle_compare import canonical_rows
 
+#: Slot queries whose build launches no Spark job, so a fresh build
+#: must plan over unloaded caches only. (The re-armed prepared plans
+#: are job-free too; tests/test_plans.py gates them.)
+JOB_FREE_SLOT_QUERIES = [
+    "dedup_ngram_jaccard",       # "shingles"
+    "dedup_shingle_containment",  # "shingles"
+    "dedup_simhash_blocked",     # "simhash"
+    "dedup_semantic_clusters",   # "semdedup"
+    "dedup_semantic_capped",     # "semdedup"
+    "multimodal_image_dhash_pairs",  # "dhash"
+]
+
 #: Every registry query whose module stashes persisted relations in
-#: session_slots (grep: `session_slots(spark)[...] =`).
+#: session_slots (grep: `session_slots(spark)[...] =`, `slot_persist`).
 SLOT_QUERIES = [
     "reco_item_lift",            # "basket"
     "graph_bfs_hops",            # "bfs"
-    "dedup_cluster_components",  # "minhash"
+    "dedup_cluster_components",  # "minhash", "cc_labels"
     "dedup_minhash_lsh",         # "minhash"
     "dedup_crossdoc_ngrams",     # "minhash"
     "dedup_minhash_estimate_quality",  # "minhash"
@@ -48,6 +61,7 @@ SLOT_QUERIES = [
     "ts_level_shift_detect",     # "lshift"
     "ts_exponential_fit_ks",     # ("ks", two relations)
     "ml_lift_gain_table",        # "lift"
+    *JOB_FREE_SLOT_QUERIES,
 ]
 
 
@@ -91,3 +105,31 @@ def test_co_supply_family_interleaving(spark, sf_dir):
         assert again == first[name] and len(again) > 0, (
             f"{name} drifted under family interleaving"
         )
+
+
+@pytest.mark.parametrize("name", JOB_FREE_SLOT_QUERIES)
+def test_repeat_build_reads_no_previous_blocks(spark, sf_dir, name):
+    """After one executed call, a second build must plan over fresh,
+    unloaded cache entries. A persist no slot released would find the
+    first call's plan-identical entry, already loaded, and the second
+    call would read its blocks."""
+    _fresh(name)(spark, sf_dir).collect()
+    loads = cache_loads(_fresh(name)(spark, sf_dir))
+    assert loads and not any(loads), f"{name} reads loaded caches: {loads}"
+
+
+def test_label_propagation_releases_previous_labels(spark):
+    """propagate_min_labels keeps its final labels persisted in the
+    "cc_labels" slot; the next call releases them."""
+    from pyspark import StorageLevel
+
+    from etl_pipeline_sam_gov_spark.operators.dedup import propagate_min_labels
+
+    def edges(a, b):
+        return spark.createDataFrame([(a, b), (b, a)], "a long, b long")
+
+    first = propagate_min_labels(edges(0, 1))
+    assert first.storageLevel != StorageLevel.NONE
+    second = propagate_min_labels(edges(5, 6))
+    assert first.storageLevel == StorageLevel.NONE, "first labels still cached"
+    assert {r["label"] for r in second.collect()} == {5}

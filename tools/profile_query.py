@@ -3,7 +3,9 @@
 For each named registry query at the given sf dir:
 
 - times the full plan end-to-end with the noop sink, best-of-N (the
-  bench methodology), with the job labelled via setJobDescription;
+  bench methodology), with the job labelled via setJobDescription,
+  and prints each run's plan-build time and the classes Janino
+  compiled during it (introspect.codegen_stats);
 - dumps ``explain("formatted")`` to an output directory (the judge's
   plan evidence: plans/rNN/<query>_{before,after}.txt);
 - prints a per-operator metrics digest of the EXECUTED plan (rows,
@@ -27,6 +29,7 @@ sys.path.insert(0, ROOT)
 
 import etl_pipeline_sam_gov_spark as eng  # noqa: E402
 from etl_pipeline_sam_gov_spark.plans.introspect import (  # noqa: E402
+    codegen_stats,
     execution_metrics,
     explain_formatted,
 )
@@ -77,13 +80,21 @@ def main() -> None:
         df = None
         for i in range(args.runs):
             spark.sparkContext.setJobDescription(f"profile:{name}#{i}")
+            n0, ms0 = codegen_stats(spark)
             t0 = time.perf_counter()
             df = fn(spark, args.sf)
             t_build = time.perf_counter() - t0
             df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             times.append(dt)
-            print(f"{name} run{i}: {dt:.3f}s (plan build {t_build:.3f}s)", flush=True)
+            n1, ms1 = codegen_stats(spark)
+            # Classes compiled during the run: nonzero on a repeat run
+            # means the codegen cache evicted this query's classes.
+            print(
+                f"{name} run{i}: {dt:.3f}s (plan build {t_build:.3f}s, "
+                f"codegen {n1 - n0} classes ~{ms1 - ms0:.0f} ms)",
+                flush=True,
+            )
         spark.sparkContext.setJobDescription(None)
         print(f"{name} best: {min(times):.3f}s  all={['%.3f' % t for t in times]}")
         if args.plans_out:
