@@ -23,6 +23,9 @@ Import the package to populate the registry::
     eng.QUERIES["q1_pricing_summary"](spark, "/root/testdata/sf0.01")
 """
 
+# First, so it runs in every Python worker that unpickles engine code
+# (see pyworker's docstring); a no-op in the driver.
+from etl_pipeline_sam_gov_spark import pyworker as _pyworker  # noqa: F401
 from etl_pipeline_sam_gov_spark.registry import BASELINE_OF, ORACLES, QUERIES, query
 
 # Importing these modules registers every query in the registry.

@@ -424,8 +424,12 @@ def run_pipeline(
     if snapshot_path is not None:
         snapshot_sink(contracts, snapshot_path)
         # re-register the view over the PERSISTED snapshot, mirroring the
-        # reference's read-it-back-from-S3 topology (:126-138,:173-179)
-        spark.read.parquet(snapshot_path).createOrReplaceTempView("contracts")
+        # reference's read-it-back-from-S3 topology (:126-138,:173-179),
+        # with the schema just written: inferring it launches a Spark
+        # job to read the footers on every call
+        spark.read.schema(contracts.schema).parquet(
+            snapshot_path
+        ).createOrReplaceTempView("contracts")
     elif obs is not None:
         contracts.write.format("noop").mode("overwrite").save()
     if obs is not None:

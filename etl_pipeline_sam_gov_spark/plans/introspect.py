@@ -118,6 +118,35 @@ def codegen_stats(spark: SparkSession) -> tuple[int, float]:
     return n, hist.getSnapshot().getMean() * n
 
 
+def _pyworker_probe(_rows):
+    import importlib
+    import sys
+    import time
+
+    jars = [p for p in sys.path if isinstance(p, str) and p.endswith(".jar")]
+    t0 = time.perf_counter()
+    importlib.invalidate_caches()
+    yield jars, (time.perf_counter() - t0) * 1e3
+
+
+def pyworker_import_cost(spark: SparkSession) -> dict:
+    """What a Python worker pays for imports at the start of each
+    request, read inside one worker by a one-row task that imports the
+    engine: ``{"jars": [...], "invalidate_ms": ms}``, the ``.jar``
+    entries on that worker's ``sys.path`` and the milliseconds of one
+    ``importlib.invalidate_caches()`` (the call PySpark makes before
+    every planner call and task). ``pyworker`` brings these to no jars
+    and about 2 ms; without it each zip and jar on the path is re-read,
+    about 220 ms a request with the spark-core jar (4 cores, CPython
+    3.11)."""
+    jars, ms = (
+        spark.sparkContext.parallelize([0], 1)
+        .mapPartitions(_pyworker_probe)
+        .collect()[0]
+    )
+    return {"jars": jars, "invalidate_ms": ms}
+
+
 def total_metric(df: DataFrame, metric_key: str) -> int:
     """Sum of one metric key across all operators (e.g. "spillSize",
     "shuffleBytesWritten", "numOutputRows")."""

@@ -189,7 +189,14 @@ def _pin_cached_plan_conf(name: str, fn: QueryFn) -> QueryFn:
     Set BEFORE the builder (iterative builders may run setup jobs) and
     re-asserted AFTER it (composed builders invoke other registered
     queries inline, whose own pins would otherwise leak into this
-    query's execution, which happens after the wrapper returns)."""
+    query's execution, which happens after the wrapper returns).
+
+    Assumes each query is built right before it executes, as the driver
+    contract, the bench and the benchmark all do: the pin is session
+    conf, read when the DataFrame runs. A DataFrame built earlier but
+    executed after another query's build runs under that later query's
+    pin. Results do not depend on partitioning, so only speed is
+    affected."""
     val = "true" if name in CACHED_PLAN_AQE_REPARTITION else "false"
 
     @functools.wraps(fn)

@@ -21,6 +21,21 @@ short page ⇒ end of feed — plus a bounded-retry lane for transient
 second chance; a warehouse backfill needs one). stdlib ``urllib``
 keeps the lane dependency-free. Registered under the short name
 ``paginated_opportunities``.
+
+Cost per action: at small page counts an action on this source is
+bound by Spark<->Python round trips, not by pages. Each is one Python
+worker request, in this order:
+
+1. ``load()`` asks a planner worker for the schema and the
+   ``DataSource`` instance (``PaginatedApiDataSource.schema``);
+2. planning the scan asks one more for the partitions
+   (``PaginatedReader.partitions``);
+3. each partition is one task on an executor's Python worker
+   (``PaginatedReader.read``).
+
+Workers are reused, and ``pyworker`` keeps a reused worker from
+re-reading the spark-core jar and ``pyspark.zip`` at the start of every
+request; a worker's first request still imports the engine package.
 """
 
 from __future__ import annotations

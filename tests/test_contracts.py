@@ -202,6 +202,20 @@ def test_run_pipeline_end_to_end_with_snapshot(spark, sf_dir, tmp_path):
     assert spark.read.parquet(out).count() == n1
 
 
+def test_run_pipeline_view_matches_inferred_snapshot_read(spark, sf_dir, tmp_path):
+    """run_pipeline registers the view with the schema it just wrote
+    instead of inferring it from the parquet footers: the view's schema
+    and the flagship rows are those of a plain parquet read."""
+    from etl_pipeline_sam_gov_spark.pipeline.contracts import FLAGSHIP_SQL, run_pipeline
+
+    out = str(tmp_path / "snap")
+    rows = run_pipeline(spark, sf_dir, snapshot_path=out).collect()
+    assert rows
+    assert spark.table("contracts").schema == spark.read.parquet(out).schema
+    spark.read.parquet(out).createOrReplaceTempView("contracts")
+    assert spark.sql(FLAGSHIP_SQL).collect() == rows
+
+
 def test_run_pipeline_observe_metrics_match_recompute(spark, sf_dir, tmp_path):
     """Observation metrics (the reference's per-stage count logging,
     lambda_function.py:211, done the zero-extra-pass Spark way) must

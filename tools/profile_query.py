@@ -10,7 +10,10 @@ For each named registry query at the given sf dir:
   plan evidence: plans/rNN/<query>_{before,after}.txt);
 - prints a per-operator metrics digest of the EXECUTED plan (rows,
   shuffle bytes, spill) so the expensive exchange/operator is named by
-  measurement, not guesswork.
+  measurement, not guesswork;
+- prints, once per run, the jars on a Python worker's path and what
+  one worker-side ``importlib.invalidate_caches()`` costs
+  (introspect.pyworker_import_cost).
 
 Usage:
     python tools/profile_query.py <query> [<query> ...] \
@@ -32,6 +35,7 @@ from etl_pipeline_sam_gov_spark.plans.introspect import (  # noqa: E402
     codegen_stats,
     execution_metrics,
     explain_formatted,
+    pyworker_import_cost,
 )
 from etl_pipeline_sam_gov_spark.session import get_spark  # noqa: E402
 
@@ -73,6 +77,14 @@ def main() -> None:
     # Warm page cache / codegen on the fixture tables (bench parity).
     for _, df in load_tables(spark, args.sf, TABLE_NAMES).items():
         df.write.format("noop").mode("overwrite").save()
+    # What each Python-worker request pays before it runs (UDF,
+    # pandas-function and DataSource queries start one).
+    cost = pyworker_import_cost(spark)
+    print(
+        f"python worker: {len(cost['jars'])} jar(s) on sys.path, "
+        f"invalidate_caches {cost['invalidate_ms']:.1f} ms",
+        flush=True,
+    )
 
     for name in args.queries:
         fn = eng.QUERIES[name]
