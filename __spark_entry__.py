@@ -6,11 +6,17 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 value-hash → CORRECTNESS_r{N}.json).
 
 All real logic lives in the ``etl_pipeline_sam_gov_spark`` package; this
-module just exposes its registry.
+module exposes its registry, ordered so that a driver sampling a prefix
+re-certifies what most needs it (``_verification_priority``).
 """
 
 from __future__ import annotations
 
+import glob
+import inspect
+import json
+import os
+import subprocess
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -19,6 +25,7 @@ import etl_pipeline_sam_gov_spark as eng
 from etl_pipeline_sam_gov_spark.pipeline.contracts import flagship_verbatim
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
+HERE = os.path.dirname(os.path.abspath(__file__))
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -27,122 +34,86 @@ def entry(spark: SparkSession) -> DataFrame:
     return flagship_verbatim(spark, SMOKE_SF_DIR)
 
 
-def _touched_since_cert(last_round: dict[str, int]) -> dict[str, int]:
-    """Names whose implementing module was committed AFTER the
-    CORRECTNESS artifact holding their latest driver row, or in the
-    same commit (a fix committed with the artifact it answers was not
-    what the artifact certified) — i.e. code
-    changed since the last certification, so the old green row no
-    longer certifies the current plan (VERDICT r09 #2) — mapped to the
-    module's last commit time (the tier sorts newest code first: the
-    most recently rewritten queries are the ones a driver sample must
-    re-prove soonest). Resolution is per-FILE (a touched
-    operators/graph.py re-prioritizes every query it defines — exactly
-    the queries whose rows went stale). Uses git commit times, never
-    filesystem mtimes (a fresh checkout stamps every file alike); any
-    git failure degrades to the empty mapping, so a .git-less
-    deployment keeps the plain three-tier order."""
-    import inspect
-    import os
-    import subprocess
+def _verification_priority(root: str = HERE) -> list[str]:
+    """Registry names ordered by certification need, from the driver's
+    ``CORRECTNESS_r*.json`` artifacts in ``root`` (tests point it at
+    fakes):
 
-    here = os.path.dirname(os.path.abspath(__file__))
+    1. queries whose latest driver row failed (they carry fixes to
+       re-prove), oldest failure first;
+    2. stale certifications — the implementing module was committed
+       after the artifact holding the query's latest row, or in the
+       same commit (the artifact certified the code before that fix) —
+       newest module commit first, so this round's rewrites are
+       re-proved before old comment edits;
+    3. everything else from least- to most-recently certified; a query
+       no driver round sampled counts as certified at round 0.
 
-    def commit_ts(relpath: str) -> int | None:
+    Ties keep registration order. A driver sampling a prefix of this
+    order certifies the tail fastest.
+
+    Staleness is per module file (checkout-relative path) and reads git
+    commit times, never filesystem mtimes (a fresh checkout stamps every
+    file alike): one ``git log`` walk, newest commit first, whose first
+    timestamp per path is that path's last commit. An artifact or module
+    the walk does not list (untracked) flags nothing stale, and any git
+    failure leaves the stale tier empty."""
+    latest: dict[str, tuple[int, str, bool]] = {}  # (round, artifact, ok)
+    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
         try:
-            out = subprocess.run(
-                ["git", "log", "-1", "--format=%ct", "--", relpath],
-                capture_output=True,
-                text=True,
-                cwd=here,
-                timeout=10,
-            )
-        except (OSError, subprocess.SubprocessError):
-            return None
-        s = out.stdout.strip()
-        return int(s) if out.returncode == 0 and s.isdigit() else None
-
-    cert_ts: dict[int, int | None] = {}
-    for rnd in set(last_round.values()):
-        cert_ts[rnd] = commit_ts(f"CORRECTNESS_r{rnd:02d}.json")
-
-    file_ts: dict[str, int | None] = {}
-    touched: dict[str, int] = {}
-    for name, rnd in last_round.items():
-        cts = cert_ts.get(rnd)
-        if cts is None:
-            continue
-        try:
-            src = inspect.unwrap(eng.QUERIES[name]).__code__.co_filename
-        except (AttributeError, ValueError):
-            continue
-        rel = os.path.relpath(src, here)
-        if rel.startswith(".."):
-            continue
-        if rel not in file_ts:
-            file_ts[rel] = commit_ts(rel)
-        fts = file_ts[rel]
-        if fts is not None and fts >= cts:
-            touched[name] = fts
-    return touched
-
-
-def _verification_priority() -> list[str]:
-    """Registry names ordered by certification need: queries whose last
-    driver CORRECTNESS row failed first (they carry fixes to re-prove),
-    then green-certified queries whose implementing file changed since
-    that row was written (the old cert no longer covers the current
-    code), then queries never sampled by any driver round, then the
-    rest from least- to most-recently certified. Dict order IS the
-    declared sweep order — a driver sampling a prefix certifies the
-    tail fastest."""
-    import glob
-    import json
-    import os
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    last_round: dict[str, int] = {}
-    last_ok: dict[str, bool] = {}
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        try:
-            rows = json.load(open(path))
+            with open(path) as f:
+                rows = json.load(f)
         except (OSError, ValueError):
             continue
-        rnd = int("".join(c for c in os.path.basename(path) if c.isdigit()) or 0)
+        artifact = os.path.basename(path)
+        rnd = int("".join(c for c in artifact if c.isdigit()) or 0)
         for name, row in rows.items():
-            last_round[name] = rnd
-            last_ok[name] = bool(
+            ok = bool(
                 row.get("rows_match")
                 and row.get("schema_match")
                 and row.get("hash_match")
             )
+            latest[name] = (rnd, artifact, ok)
 
-    touched = _touched_since_cert(last_round)
+    # NUL marks the commit lines (no path holds one); paths are relative
+    # to root, and a rename lists its old path too.
+    committed: dict[str, int] = {}
+    try:
+        out = subprocess.run(
+            ["git", "log", "--no-renames", "--relative", "--format=%x00%ct",
+             "--name-only"],
+            capture_output=True,
+            text=True,
+            cwd=root,
+            timeout=10,
+        )
+    except (OSError, subprocess.SubprocessError):
+        out = None
+    if out is not None and out.returncode == 0:
+        ts = 0
+        for line in out.stdout.splitlines():
+            if line.startswith("\0"):
+                ts = int(line[1:])
+            elif line:
+                committed.setdefault(line, ts)
 
-    # Registry dict order encodes the package's own priority queue
-    # (family order + the _DEFER_IN_TIER policy that keeps brand-new
-    # recombinations of green lanes BEHIND the longest-waiting
-    # never-sampled queries) — so the never-sampled tier must follow
-    # it, not the alphabet.
-    registry_pos = {name: i for i, name in enumerate(eng.QUERIES)}
+    def key(name: str) -> tuple[int, int]:
+        rnd, artifact, ok = latest.get(name, (0, "", True))
+        if not ok:
+            return (0, rnd)
+        cert = committed.get(artifact)
+        src = inspect.unwrap(eng.QUERIES[name]).__code__.co_filename
+        module = committed.get(os.path.relpath(src, HERE))
+        if cert is not None and module is not None and module >= cert:
+            return (1, -module)
+        return (2, rnd)
 
-    def key(name: str) -> tuple:
-        if name in last_ok and not last_ok[name]:
-            return (0, last_round[name], registry_pos[name])  # failed first
-        if name in touched:
-            # Stale cert: newest code first — this round's rewrites
-            # get re-proved before last year's comment edits.
-            return (1, -touched[name], registry_pos[name])
-        if name not in last_round:
-            return (2, 0, registry_pos[name])  # never sampled
-        return (3, last_round[name], registry_pos[name])  # oldest cert first
-
-    return sorted(eng.QUERIES, key=key)
+    return sorted(eng.QUERIES, key=key)  # stable: ties keep registration order
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2, in
-    verification-priority order (see _verification_priority)."""
+    certification-priority order (see _verification_priority)."""
     return {name: eng.QUERIES[name] for name in _verification_priority()}
 
 

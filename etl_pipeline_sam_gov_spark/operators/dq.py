@@ -970,6 +970,50 @@ def dq_missing_hours_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _psi_band_contrib(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(band, n_ref, n_cur, psi_c): the events value distribution split
+    at the stream's time midpoint into power-of-two cents bands, with
+    each band's add-one-smoothed PSI term. The half totals come from a
+    single-partition window over the ≤64 band rows, so the cells stay
+    one plan branch. Shared by dq_psi_value_drift and
+    pipeline_health_report so the two cannot drift apart."""
+    ev = load_tables(spark, sf_dir, ("events",))["events"]
+    bounds = ev.agg(
+        F.expr(
+            "min(ts) + make_dt_interval(0, 0, 0, "
+            "CAST((unix_micros(max(ts)) - unix_micros(min(ts))) div 2000000 "
+            "AS INT))"
+        ).alias("mid")
+    )
+    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cells = (
+        ev.filter(F.col("value") > 0)
+        .crossJoin(F.broadcast(bounds))
+        .select(
+            F.when(F.col("ts") <= F.col("mid"), 0).otherwise(1).alias("half"),
+            (F.length(F.bin(cents)) - 1).cast("int").alias("band"),
+        )
+        .groupBy("band")
+        .agg(
+            F.sum(F.when(F.col("half") == 0, 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_ref"),
+            F.sum(F.when(F.col("half") == 1, 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_cur"),
+        )
+    )
+    w_all = W.partitionBy(F.lit(1))
+    p_cur = (F.col("n_cur") + 1).cast("double") / (F.sum("n_cur").over(w_all) + 1)
+    p_ref = (F.col("n_ref") + 1).cast("double") / (F.sum("n_ref").over(w_all) + 1)
+    return cells.select(
+        "band",
+        "n_ref",
+        "n_cur",
+        ((p_cur - p_ref) * F.log(p_cur / p_ref)).alias("psi_c"),
+    )
+
+
 @query(
     "dq_psi_value_drift",
     oracle="""
@@ -1027,45 +1071,9 @@ def dq_psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     one ln (round(6) absorbs libm ulps — the transcendental
     convention), and the total sums ≤64 such terms. Scale shape: one
     scan collapses to (half, band) cells; everything else lives on the
-    ≤64-row band relation with 1-row totals riding broadcast cross
-    joins."""
-    ev = load_tables(spark, sf_dir, ("events",))["events"]
-    bounds = ev.agg(
-        F.expr(
-            "min(ts) + make_dt_interval(0, 0, 0, "
-            "CAST((unix_micros(max(ts)) - unix_micros(min(ts))) div 2000000 "
-            "AS INT))"
-        ).alias("mid")
-    )
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    banded = (
-        ev.filter(F.col("value") > 0)
-        .crossJoin(F.broadcast(bounds))
-        .select(
-            F.when(F.col("ts") <= F.col("mid"), 0).otherwise(1).alias("half"),
-            (F.length(F.bin(cents)) - 1).cast("int").alias("band"),
-        )
-    )
-    cells = banded.groupBy("band").agg(
-        F.sum(F.when(F.col("half") == 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_ref"),
-        F.sum(F.when(F.col("half") == 1, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_cur"),
-    )
-    tot = cells.agg(
-        F.sum("n_ref").cast("bigint").alias("tr"),
-        F.sum("n_cur").cast("bigint").alias("tc"),
-    )
-    p_cur = (F.col("n_cur") + 1).cast("double") / (F.col("tc") + 1)
-    p_ref = (F.col("n_ref") + 1).cast("double") / (F.col("tr") + 1)
-    contrib = cells.crossJoin(F.broadcast(tot)).select(
-        "band",
-        "n_ref",
-        "n_cur",
-        ((p_cur - p_ref) * F.log(p_cur / p_ref)).alias("psi_c"),
-    )
+    ≤64-row band relation, whose half totals ride a single-partition
+    window and whose 1-row PSI total rides a broadcast cross join."""
+    contrib = _psi_band_contrib(spark, sf_dir)
     psum = contrib.agg(F.sum("psi_c").alias("psi"))
     return contrib.crossJoin(F.broadcast(psum)).select(
         "band",
@@ -1119,67 +1127,34 @@ def pipeline_health_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     DQ counterpart of pipeline_training_corpus_v2's composition rule:
     each component is individually driver-certified, the composition's
     oracle embeds those oracles verbatim, so the report is provably
-    the sum of its certified parts. Catalyst plans the whole union
-    lazily — shared scans dedupe via exchange reuse where shapes
-    align, and nothing materializes between components.
+    the sum of its certified parts. The constraint, gap and orphan
+    rows call their components' registered builders; the PSI row
+    sums the per-band terms dq_psi_value_drift is built from
+    (``_psi_band_contrib``) into its one scalar instead of
+    aggregating the component's per-band output. Catalyst plans the
+    whole union lazily, and nothing materializes between components.
 
-    Scale shape: inherits each component's (one aggregation per table,
-    bounded band/gap/edge relations); the union adds no shuffle."""
+    Scale shape: each component's (one aggregation per table, bounded
+    band/gap/edge relations); events is scanned three times (PSI
+    bounds, PSI band cells, gaps). The PSI totals add one
+    single-partition exchange over ≤64 band rows; the union itself
+    adds no shuffle."""
     from etl_pipeline_sam_gov_spark.registry import QUERIES as _Q
 
     suite = _Q["dq_constraint_suite"](spark, sf_dir).select(
         "check_name", "target", "metric", "passed"
     )
-    # r10 (VERDICT r09 #4): the PSI branch needs only the psi SCALAR —
-    # on dq_psi_value_drift's output, psi_total and drifted are
-    # constant over the band rows (both derive solely from the psum
-    # subtree), so any_value(psi_total) ≡ round(psi, 6) + 0.0 and
-    # NOT bool_or(drifted) ≡ NOT (round(psi, 6) > 0.2), including the
-    # empty-cells edge (agg over zero rows yields NULL on both paths).
-    # Composing the full component here made Catalyst plan its
-    # contrib ⨯ broadcast(psum) self-reference TWICE — four events
-    # scans for one scalar. This computes the band cells once and
-    # rides a single-partition window over the ≤64-row band relation
-    # for the totals (scan count in the composed plan: events 5 → 3).
-    # The per-band psi_c arithmetic below is expression-identical to
-    # dq_psi_value_drift's; only the summation order differs, which
-    # round(6) absorbs (the transcendental convention).
-    ev = load_tables(spark, sf_dir, ("events",))["events"]
-    psi_bounds = ev.agg(
-        F.expr(
-            "min(ts) + make_dt_interval(0, 0, 0, "
-            "CAST((unix_micros(max(ts)) - unix_micros(min(ts))) div 2000000 "
-            "AS INT))"
-        ).alias("mid")
-    )
-    psi_cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    psi_cells = (
-        ev.filter(F.col("value") > 0)
-        .crossJoin(F.broadcast(psi_bounds))
-        .select(
-            F.when(F.col("ts") <= F.col("mid"), 0).otherwise(1).alias("half"),
-            (F.length(F.bin(psi_cents)) - 1).cast("int").alias("band"),
-        )
-        .groupBy("band")
-        .agg(
-            F.sum(F.when(F.col("half") == 0, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_ref"),
-            F.sum(F.when(F.col("half") == 1, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_cur"),
-        )
-    )
-    w_all = W.partitionBy(F.lit(1))
-    p_cur = (F.col("n_cur") + 1).cast("double") / (
-        F.sum("n_cur").over(w_all) + 1
-    )
-    p_ref = (F.col("n_ref") + 1).cast("double") / (
-        F.sum("n_ref").over(w_all) + 1
-    )
-    psi_scalar = psi_cells.select(
-        ((p_cur - p_ref) * F.log(p_cur / p_ref)).alias("psi_c")
-    ).agg(F.sum("psi_c").alias("psi"))
+    # The PSI branch needs only the psi SCALAR: on
+    # dq_psi_value_drift's output, psi_total and drifted are constant
+    # over the band rows (both derive solely from the psum subtree), so
+    # any_value(psi_total) ≡ round(psi, 6) + 0.0 and NOT bool_or(drifted)
+    # ≡ NOT (round(psi, 6) > 0.2), including the empty-cells edge (agg
+    # over zero rows yields NULL on both paths). Composing the whole
+    # component would bring in its contrib ⨯ broadcast(psum) self-join,
+    # a second pass over the cells (events scans 3 → 5). The per-band
+    # terms are the component's own; only the summation order can
+    # differ, which round(6) absorbs (the transcendental convention).
+    psi_scalar = _psi_band_contrib(spark, sf_dir).agg(F.sum("psi_c").alias("psi"))
     psi = psi_scalar.select(
         F.lit("psi_value_drift").alias("check_name"),
         F.lit("events").alias("target"),

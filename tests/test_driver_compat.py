@@ -16,6 +16,12 @@ enforcement rides inside ``compare()`` (run for all queries by
 
 from __future__ import annotations
 
+import glob
+import inspect
+import json
+import os
+import subprocess
+
 import pytest
 
 import etl_pipeline_sam_gov_spark as eng
@@ -116,41 +122,128 @@ def test_every_query_has_an_oracle_or_declared_rows_only():
     )
 
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+GREEN = {"rows_match": True, "schema_match": True, "hash_match": True}
+FAILED = {"rows_match": True, "schema_match": True, "hash_match": False}
+
+
+def _module(name: str) -> str:
+    """Checkout-relative path of the file implementing ``name``."""
+    src = inspect.unwrap(eng.QUERIES[name]).__code__.co_filename
+    return os.path.relpath(src, REPO)
+
+
+def _git_last_commit(rel: str) -> int | None:
+    """Reference commit time: one ``git log -1`` per path, or None."""
+    try:
+        out = subprocess.run(
+            ["git", "log", "-1", "--format=%ct", "--", rel],
+            capture_output=True,
+            text=True,
+            cwd=REPO,
+            timeout=10,
+        )
+    except (OSError, subprocess.SubprocessError):
+        return None
+    s = out.stdout.strip()
+    return int(s) if out.returncode == 0 and s.isdigit() else None
+
+
+def _ok(row: dict) -> bool:
+    return bool(
+        row.get("rows_match") and row.get("schema_match") and row.get("hash_match")
+    )
+
+
+def _latest_rows() -> tuple[dict[str, dict], dict[str, int]]:
+    """Each sampled name's latest driver row and its round, from the
+    committed CORRECTNESS artifacts."""
+    latest: dict[str, dict] = {}
+    last_round: dict[str, int] = {}
+    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
+        with open(path) as f:
+            rows = json.load(f)
+        rnd = int("".join(c for c in os.path.basename(path) if c.isdigit()) or 0)
+        for n, row in rows.items():
+            latest[n] = row
+            last_round[n] = rnd
+    return latest, last_round
+
+
+def _reference_stale(last_round: dict[str, int]) -> dict[str, int]:
+    """Stale certifications by per-file ``git log -1``: name -> its
+    module's commit time, when that is at or after the commit of the
+    artifact holding the name's latest row."""
+    cert = {
+        r: _git_last_commit(f"CORRECTNESS_r{r:02d}.json")
+        for r in set(last_round.values())
+    }
+    module = {m: _git_last_commit(m) for m in {_module(n) for n in last_round}}
+    stale = {}
+    for n, r in last_round.items():
+        m = module[_module(n)]
+        if cert[r] is not None and m is not None and m >= cert[r]:
+            stale[n] = m
+    return stale
+
+
+def _has_git() -> bool:
+    try:
+        return (
+            subprocess.run(
+                ["git", "rev-parse", "--git-dir"],
+                capture_output=True,
+                cwd=REPO,
+                timeout=10,
+            ).returncode
+            == 0
+        )
+    except (OSError, subprocess.SubprocessError):
+        return False
+
+
+def _write_artifacts(root, rounds: dict[int, dict[str, dict]]) -> None:
+    for rnd, rows in rounds.items():
+        (root / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+
+
+def _walk_stub(commits: list[tuple[int, list[str]]]):
+    """A ``subprocess.run`` that answers the priority function's git walk
+    with ``commits`` (newest first, as ``git log`` prints them)."""
+    stdout = "".join(
+        f"\0{ts}\n\n" + "".join(f"{p}\n" for p in paths) + "\n"
+        for ts, paths in commits
+    )
+
+    def run(args, **kwargs):
+        return subprocess.CompletedProcess(args, 0, stdout=stdout, stderr="")
+
+    return run
+
+
 def test_queries_dict_is_verification_priority_ordered():
     """queries() must lead with whatever the driver most needs to
     (re-)certify: last-round failures first, then green queries whose
-    implementing file changed since their cert row (stale certs —
-    VERDICT r09 #2), then never-sampled, then oldest certifications —
-    so a prefix sample burns down the tail."""
-    import glob
-    import json
-    import os
-
+    implementing file changed since their cert row (stale certs),
+    then the rest from oldest certification, where a
+    never-sampled query counts as round 0 — so a prefix sample burns
+    down the tail."""
     import __spark_entry__ as ent
 
     names = list(ent.queries())
+    assert names == list(dict.fromkeys(names))
     assert set(names) == set(eng.QUERIES)
 
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sampled: dict[str, dict] = {}
-    last_round: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        rows = json.load(open(path))
-        sampled.update(rows)
-        rnd = int("".join(c for c in os.path.basename(path) if c.isdigit()) or 0)
-        for n in rows:
-            last_round[n] = rnd
-    if not sampled:
+    latest, last_round = _latest_rows()
+    if not latest:
         return  # round 1: no artifacts yet, any order is fine
 
-    touched = ent._touched_since_cert(last_round)
+    touched = _reference_stale(last_round)
 
     def cls(n):
-        if n not in sampled:
+        if n not in latest:
             return "never"
-        row = sampled[n]
-        ok = row.get("rows_match") and row.get("schema_match") and row.get("hash_match")
-        if not ok:
+        if not _ok(latest[n]):
             return "failed"
         return "touched" if n in touched else "green"
 
@@ -158,79 +251,134 @@ def test_queries_dict_is_verification_priority_ordered():
     # failed < stale-cert (touched) < never-sampled < green
     rank = {"failed": 0, "touched": 1, "never": 2, "green": 3}
     assert [rank[c] for c in classes] == sorted(rank[c] for c in classes)
+    tail = [last_round.get(n, 0) for n, c in zip(names, classes) if rank[c] >= 2]
+    assert tail == sorted(tail)  # oldest certification first
 
 
-def test_touched_since_cert_flags_recently_rewritten_files(monkeypatch):
+def test_touched_since_cert_flags_recently_rewritten_files(monkeypatch, tmp_path):
     """The stale-cert tier must key on git commit times: a query whose
     implementing module was committed after its CORRECTNESS artifact,
-    or in the same commit, is 'touched'; one whose module predates its
-    cert row is not. Run only when git history is available (the
-    helper degrades to set() without it, which the priority test above
-    already covers)."""
-    import os
-    import subprocess
-
+    or in the same commit, is stale; one whose module predates its
+    cert row is not. The one-walk commit times are checked against
+    per-file ``git log -1`` (the reference) over the whole registry.
+    Run only when git history is available (without it the stale tier
+    is empty, which the fallback test covers)."""
     import __spark_entry__ as ent
 
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    try:
-        ok = (
-            subprocess.run(
-                ["git", "rev-parse", "--git-dir"],
-                capture_output=True,
-                cwd=here,
-                timeout=10,
-            ).returncode
-            == 0
-        )
-    except (OSError, subprocess.SubprocessError):
-        ok = False
-    if not ok:
-        import pytest
-
+    if not _has_git():
         pytest.skip("no git history in this checkout")
 
-    # Differential check against git itself: for each probe query the
-    # helper must flag it exactly when its implementing module's last
-    # commit is newer than its cert artifact's commit.
-    import inspect
+    latest, last_round = _latest_rows()
+    failed = {n for n, row in latest.items() if not _ok(row)}
+    stale = {
+        n: t for n, t in _reference_stale(last_round).items() if n not in failed
+    }
+    names = list(ent.queries())
+    # The stale tier follows the failed rows, newest module commit first.
+    tier = names[len(failed) : len(failed) + len(stale)]
+    assert set(tier) == set(stale)
+    times = [stale[n] for n in tier]
+    assert times == sorted(times, reverse=True)
 
-    def commit_ts(rel):
-        out = subprocess.run(
-            ["git", "log", "-1", "--format=%ct", "--", rel],
-            capture_output=True,
-            text=True,
-            cwd=here,
-            timeout=10,
-        )
-        s = out.stdout.strip()
-        return int(s) if out.returncode == 0 and s.isdigit() else None
-
-    probes = {"q1_pricing_summary": 9, "graph_pagerank_bipartite": 8}
-    touched = ent._touched_since_cert(probes)
-    for name, rnd in probes.items():
-        cert = commit_ts(f"CORRECTNESS_r{rnd:02d}.json")
-        src = os.path.relpath(
-            inspect.unwrap(eng.QUERIES[name]).__code__.co_filename, here
-        )
-        file_c = commit_ts(src)
-        if cert is None or file_c is None:
-            continue
-        assert (name in touched) == (file_c >= cert), (
-            name,
-            src,
-            file_c,
-            cert,
-        )
-
-    # A file committed in the same commit as the certifying artifact
+    # A module committed in the same commit as the certifying artifact
     # (equal commit times) is stale: the artifact certified the code
     # before that commit's fix.
-    def same_commit(args, **kwargs):
-        return subprocess.CompletedProcess(args, 0, stdout="1700000000\n")
+    probe, other = "q1_pricing_summary", "graph_pagerank_bipartite"
+    _write_artifacts(tmp_path, {1: {probe: GREEN, other: GREEN}})
+    monkeypatch.setattr(
+        subprocess,
+        "run",
+        _walk_stub([(1700000000, ["CORRECTNESS_r01.json", _module(probe)])]),
+    )
+    names = ent._verification_priority(str(tmp_path))
+    assert names[0] == probe  # stale: ahead of every never-sampled name
+    assert names[-1] == other  # module not in the walk: round-1 green
 
-    monkeypatch.setattr(subprocess, "run", same_commit)
-    assert ent._touched_since_cert(probes) == dict.fromkeys(probes, 1700000000)
+
+def test_verification_priority_tiers_on_synthetic_artifacts(monkeypatch, tmp_path):
+    """Every tier on fake artifacts and a stubbed git walk: the failed
+    row first, then the stale cert, then never-sampled names (round 0,
+    registration order), then greens by round. The r02 artifact is
+    untracked (the walk does not list it), so its rows are not stale
+    even though their module is newer than r01."""
+    import __spark_entry__ as ent
+
+    failed, stale, green, untracked = (
+        "q1_pricing_summary",  # relational.py
+        "graph_pagerank_bipartite",  # graph.py
+        "dq_psi_value_drift",  # dq.py
+        "graph_kcore_membership",  # graph.py
+    )
+    _write_artifacts(
+        tmp_path,
+        {
+            1: {failed: GREEN, stale: GREEN, green: GREEN},
+            2: {failed: FAILED, untracked: GREEN},
+        },
+    )
+    monkeypatch.setattr(
+        subprocess,
+        "run",
+        _walk_stub(
+            [
+                (300, [_module(stale)]),
+                (100, ["CORRECTNESS_r01.json"]),
+                (50, [_module(green), _module(failed)]),
+            ]
+        ),
+    )
+    sampled = {failed, stale, green, untracked}
+    never = [n for n in eng.QUERIES if n not in sampled]
+    assert ent._verification_priority(str(tmp_path)) == [
+        failed,
+        stale,
+        *never,
+        green,
+        untracked,
+    ]
+
+
+@pytest.mark.parametrize("git", ["missing", "failing"])
+def test_verification_priority_without_git(monkeypatch, tmp_path, git):
+    """No git binary, or a git that fails (no repository): the stale tier
+    is empty, leaving failed rows first, then oldest round."""
+    import __spark_entry__ as ent
+
+    def run(args, **kwargs):
+        if git == "missing":
+            raise FileNotFoundError(args[0])
+        return subprocess.CompletedProcess(args, 128, stdout="", stderr="fatal")
+
+    _write_artifacts(
+        tmp_path,
+        {
+            1: {"graph_pagerank_bipartite": GREEN, "q1_pricing_summary": FAILED},
+            2: {"dq_psi_value_drift": GREEN},
+        },
+    )
+    monkeypatch.setattr(subprocess, "run", run)
+    names = ent._verification_priority(str(tmp_path))
+    assert names[0] == "q1_pricing_summary"
+    assert names[-2:] == ["graph_pagerank_bipartite", "dq_psi_value_drift"]
+    assert set(names) == set(eng.QUERIES)
+
+
+def test_queries_spawns_one_git_subprocess(monkeypatch):
+    """Commit times come from ONE ``git log`` walk per queries() call,
+    not one ``git log -1`` per artifact and module."""
+    import __spark_entry__ as ent
+
+    spawned: list[list[str]] = []
+    real_popen = subprocess.Popen
+
+    class CountingPopen(real_popen):
+        def __init__(self, args, *a, **kw):
+            spawned.append(list(args))
+            super().__init__(args, *a, **kw)
+
+    monkeypatch.setattr(subprocess, "Popen", CountingPopen)
+    assert len(ent.queries()) == len(eng.QUERIES)
+    assert len(spawned) == 1 and spawned[0][:2] == ["git", "log"], spawned
 
 
 # ---------------------------------------------------------------------------

@@ -739,8 +739,22 @@ def test_dq_suite_scans_each_table_once(spark, sf_dir):
     """All constraint metrics for a table must ride ONE aggregation
     over one scan — a per-constraint rescan pattern multiplies 100 TB
     scan cost by the number of checks."""
-    s = formatted(fresh("dq_constraint_suite")(spark, sf_dir))
+    # physical_plan, not the formatted text: EXPLAIN FORMATTED spells
+    # scans "Scan parquet", so counting "FileScan parquet" there is 0.
+    s = plan(fresh("dq_constraint_suite")(spark, sf_dir))
     assert s.count("FileScan parquet") <= 3  # orders + lineitem + customer
+
+
+def test_health_report_scans_events_three_times(spark, sf_dir):
+    """The composed health report reads events three times: the PSI
+    bounds, the PSI band cells and the gap report. Its PSI row sums the
+    per-band terms it shares with dq_psi_value_drift; composing that
+    whole query instead brings in its contrib ⨯ psum self-join, a
+    second pass over the cells (five events scans)."""
+    import re
+
+    s = plan(fresh("pipeline_health_report")(spark, sf_dir))
+    assert len(re.findall(r"FileScan parquet [^\n]*/events\.parquet", s)) == 3
 
 
 def test_kcore_rounds_reuse_persisted_relations(spark, sf_dir):

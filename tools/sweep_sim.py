@@ -1,7 +1,9 @@
 """Simulate the driver's CORRECTNESS sweep locally.
 
-Runs every registered query at the given sf dir in registry order, with
-its DuckDB oracle, through the same type-aware comparison the local
+Runs every registered query at the given sf dir in the driver's
+certification order (``__spark_entry__.queries()``, so a ``limit``
+prefix is the sample a budget-limited driver would take), with its
+DuckDB oracle, through the same type-aware comparison the local
 parity tests use — and times each side. Output: one line per query
 (spark_s, oracle_s, status) plus a total, so we can see how many
 queries fit a given driver time budget and which ones to speed up.
@@ -32,6 +34,7 @@ sys.path.insert(0, os.path.join(ROOT, "tests"))
 
 from oracle_compare import compare  # noqa: E402
 
+import __spark_entry__ as ent  # noqa: E402
 import etl_pipeline_sam_gov_spark as eng  # noqa: E402
 from etl_pipeline_sam_gov_spark.session import get_spark  # noqa: E402
 
@@ -70,7 +73,7 @@ def main() -> None:
         dt = time.monotonic() - t0
         return name, {"sec": round(dt, 2), "status": status, "err": err}
 
-    todo = list(eng.QUERIES)[:limit]
+    todo = list(ent.queries())[:limit]
     with ThreadPoolExecutor(max_workers=jobs) as pool:
         for name, row in pool.map(run_one, todo):
             results[name] = row
