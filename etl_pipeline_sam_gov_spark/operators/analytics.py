@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_pipeline_sam_gov_spark.registry import query
-from etl_pipeline_sam_gov_spark.slots import release, session_slots, slot_persist
+from etl_pipeline_sam_gov_spark.slots import slot, slot_persist
 from etl_pipeline_sam_gov_spark.tables import load_tables
 
 SESSION_GAP_S = 1800
@@ -3276,61 +3276,53 @@ def ts_exponential_fit_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregation, granged feeds the in-slice ECDF prefix AND the
     # per-slice subtotals; each pair must see one execution's sampled
     # boundaries). See ab_sequential_sprt for the class.
-    release(spark, "ks")
-    ranged = (
-        seq.repartitionByRange(n_parts, "event_type", "ts", "event_id")
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
-    )
-    # Slot claimed immediately after the persist: an exception between
-    # here and the second persist below must not leave ranged's cache
-    # entry with no slot reference (ADVICE r08) — the slot grows to
-    # (ranged, granged) once the second fan-out is persisted.
-    session_slots(spark)["ks"] = (ranged,)
-    w_loc = W.partitionBy("event_type", "pid").orderBy("ts", "event_id")
-    local = ranged.select(
-        "event_type", "pid", "t_us",
-        F.lag("t_us").over(w_loc).alias("prev_us"),
-    )
-    # Boundary carry: each (type, slice)'s last timestamp, carried to
-    # the NEXT slice holding that type (last non-null over preceding
-    # slices — the bounded |types| x n_parts edge relation).
-    edges = ranged.groupBy("event_type", "pid").agg(
-        F.max("t_us").alias("last_us")
-    )
-    w_c = W.partitionBy("event_type").orderBy("pid").rowsBetween(
-        W.unboundedPreceding, -1
-    )
-    carry = edges.select(
-        "event_type", "pid",
-        F.last("last_us", ignorenulls=True).over(w_c).alias("carry_us"),
-    )
-    gaps = (
-        local.join(F.broadcast(carry), ["event_type", "pid"])
-        .select(
-            "event_type",
-            (
-                F.col("t_us") - F.coalesce(F.col("prev_us"), F.col("carry_us"))
-            ).alias("g"),
+    with slot(spark, "ks") as keep:
+        ranged = keep(
+            seq.repartitionByRange(n_parts, "event_type", "ts", "event_id")
+            .withColumn("pid", F.spark_partition_id())
         )
-        .filter(F.col("g").isNotNull())
-    )
-    tot = gaps.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("g").cast("bigint").alias("sg"),
-    )
-    byval = gaps.groupBy("event_type", "g").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
-    )
-    # Two-phase distinct-gap prefix: |V| grows with the corpus.
-    # Persisted: second fan-out of the same class (see the ranged
-    # persist above — slot "ks" releases both).
-    granged = (
-        byval.repartitionByRange(n_parts, "event_type", "g")
-        .withColumn("gpid", F.spark_partition_id())
-        .persist()
-    )
-    session_slots(spark)["ks"] = (ranged, granged)
+        w_loc = W.partitionBy("event_type", "pid").orderBy("ts", "event_id")
+        local = ranged.select(
+            "event_type", "pid", "t_us",
+            F.lag("t_us").over(w_loc).alias("prev_us"),
+        )
+        # Boundary carry: each (type, slice)'s last timestamp, carried to
+        # the NEXT slice holding that type (last non-null over preceding
+        # slices — the bounded |types| x n_parts edge relation).
+        edges = ranged.groupBy("event_type", "pid").agg(
+            F.max("t_us").alias("last_us")
+        )
+        w_c = W.partitionBy("event_type").orderBy("pid").rowsBetween(
+            W.unboundedPreceding, -1
+        )
+        carry = edges.select(
+            "event_type", "pid",
+            F.last("last_us", ignorenulls=True).over(w_c).alias("carry_us"),
+        )
+        gaps = (
+            local.join(F.broadcast(carry), ["event_type", "pid"])
+            .select(
+                "event_type",
+                (
+                    F.col("t_us") - F.coalesce(F.col("prev_us"), F.col("carry_us"))
+                ).alias("g"),
+            )
+            .filter(F.col("g").isNotNull())
+        )
+        tot = gaps.groupBy("event_type").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum("g").cast("bigint").alias("sg"),
+        )
+        byval = gaps.groupBy("event_type", "g").agg(
+            F.count(F.lit(1)).cast("bigint").alias("c")
+        )
+        # Two-phase distinct-gap prefix: |V| grows with the corpus.
+        # Persisted: second fan-out of the same class (see the ranged
+        # persist above — slot "ks" releases both).
+        granged = keep(
+            byval.repartitionByRange(n_parts, "event_type", "g")
+            .withColumn("gpid", F.spark_partition_id())
+        )
     w_in = W.partitionBy("event_type", "gpid").orderBy("g").rowsBetween(
         W.unboundedPreceding, W.currentRow
     )

@@ -515,6 +515,7 @@ def reco_item_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     super-linear (5.1×/4×) purely from the repeated grouping (the
     PageRank/k-core persist discipline)."""
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
+    # Adaptive cache width: 1.94 → 1.07 s at sf0.1 (r10 A/B).
     arrs = slot_persist(
         spark,
         "basket",
@@ -525,6 +526,7 @@ def reco_item_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array_distinct(F.collect_list("l_partkey"))
             ).alias("ps")
         ),
+        adaptive=True,
     )
     item = (
         arrs.select(F.explode("ps").alias("l_partkey"))

@@ -22,7 +22,7 @@ from etl_pipeline_sam_gov_spark.operators.dedup import (
     tokens_col,
 )
 from etl_pipeline_sam_gov_spark.registry import query
-from etl_pipeline_sam_gov_spark.slots import release, session_slots
+from etl_pipeline_sam_gov_spark.slots import slot_persist
 from etl_pipeline_sam_gov_spark.tables import load_tables
 
 #: train/val/test bucket edges out of 100.
@@ -33,7 +33,7 @@ SHARD_TOKENS = 1000
 
 #: The currently-persisted range-split relation of packed_prev_tokens
 #: lives under the session's ("pack", group-cols) slot
-#: (slots.session_slots), released on the next same-shape call.
+#: (slots.slot_persist), released on the next same-shape call.
 
 
 def packed_prev_tokens(
@@ -72,17 +72,14 @@ def packed_prev_tokens(
     # Bound the cache: repeated invocations (bench loops, amplification
     # sweeps) would otherwise pin every past run's projection in storage
     # memory forever. One slot per (session, grouping): the previous
-    # same-shape relation is released when a new one is built. Release
-    # BEFORE persisting: CacheManager matches entries by logical-plan
-    # equality, and same-args invocations build identical plans — an
-    # unpersist after the new persist would evict the new entry too.
-    release(spark, ("pack", tuple(group_cols)))
-    stamped = (
-        toks.repartitionByRange(n_parts, *group_cols, "doc_id")
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
+    # same-shape relation is released when a new one is built.
+    stamped = slot_persist(
+        spark,
+        ("pack", tuple(group_cols)),
+        toks.repartitionByRange(n_parts, *group_cols, "doc_id").withColumn(
+            "_pid", F.spark_partition_id()
+        ),
     )
-    session_slots(spark)[("pack", tuple(group_cols))] = stamped
     subtot = stamped.groupBy("_pid", *group_cols).agg(F.sum("n_tokens").alias("_sub"))
     w_off = (
         W.partitionBy(*group_cols)

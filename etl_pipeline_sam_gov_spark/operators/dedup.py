@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_sam_gov_spark.registry import query
-from etl_pipeline_sam_gov_spark.slots import release, session_slots, slot_persist
+from etl_pipeline_sam_gov_spark.slots import slot, slot_persist
 from etl_pipeline_sam_gov_spark.tables import load_tables
 
 # ---------------------------------------------------------------------------
@@ -418,22 +418,27 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduces the exact candidate set — the check covers the LSH
     mechanics, not just the final Jaccard filter."""
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return minhash_duplicate_pairs(docs)
+    # Static cache widths: adaptive ones ran 7-10% slower at sf0.1 (r10 A/B).
+    return minhash_duplicate_pairs(docs, adaptive=False)
 
 
-def cached_shingle_arrays(docs: DataFrame) -> DataFrame:
+def cached_shingle_arrays(docs: DataFrame, adaptive: bool) -> DataFrame:
     """with_shingle_arrays(docs), persisted under the session's
-    "minhash" slot (slots.session_slots). Every caller builds the same
-    plan from the same documents, so they share ONE slot: the previous
-    call's relation is released before the new one is persisted.
-    Without the slot the relation was never released, and a later
-    plan-identical persist was served the first call's blocks."""
-    return slot_persist(docs.sparkSession, "minhash", with_shingle_arrays(docs))
+    "minhash" slot with the caller's AQE pin (slots.slot). Every caller
+    builds the same plan from the same documents, so they share ONE
+    slot: the previous call's relation is released before the new one
+    is persisted. Without the slot the relation was never released,
+    and a later plan-identical persist was served the first call's
+    blocks."""
+    return slot_persist(
+        docs.sparkSession, "minhash", with_shingle_arrays(docs), adaptive
+    )
 
 
-def minhash_duplicate_pairs(docs: DataFrame) -> DataFrame:
+def minhash_duplicate_pairs(docs: DataFrame, adaptive: bool) -> DataFrame:
     """Verified (doc1, doc2, jaccard) near-dup pairs via MinHash-LSH —
-    the edge set shared by the pair query and the clustering query."""
+    the edge set shared by the pair query and the clustering query,
+    whose shingle cache persists under the caller's AQE pin."""
     # ONE tokenize+shingle pass: persist the per-doc shingle arrays and
     # derive the exploded (doc_id, shingle) relation from the cache —
     # the signature and verification passes otherwise re-shingle the
@@ -441,7 +446,7 @@ def minhash_duplicate_pairs(docs: DataFrame) -> DataFrame:
     # cached array also can't hit the InferFiltersFromGenerate cloning
     # trap doc_shingles guards against. At 100 TB the persist becomes a
     # checkpoint of the same relation.
-    arrs = cached_shingle_arrays(docs)
+    arrs = cached_shingle_arrays(docs, adaptive)
     sh = arrs.select("doc_id", F.explode("arr").alias("shingle"))
     cand = lsh_candidate_pairs(minhash_signatures(sh))
     # Verification joins the (small) candidate set against per-doc
@@ -712,14 +717,14 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Connected Components in MapReduce") — same join primitive,
     O(log n) rounds."""
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    edges = minhash_duplicate_pairs(docs).select("doc1", "doc2")
-    bidir = (
-        edges.union(edges.select(F.col("doc2"), F.col("doc1")))
-        .toDF("a", "b")
-        .persist()
-    )
-    labels = propagate_min_labels(bidir)
-    bidir.unpersist()
+    # Adaptive cache widths: 3.91 → 3.44 s at sf0.1 (r10 A/B).
+    edges = minhash_duplicate_pairs(docs, adaptive=True).select("doc1", "doc2")
+    with slot(spark, "cc_bidir", adaptive=True) as keep:
+        bidir = keep(
+            edges.union(edges.select(F.col("doc2"), F.col("doc1"))).toDF("a", "b")
+        )
+        labels = propagate_min_labels(bidir)
+        keep.drop(bidir)
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("component"))
 
 
@@ -730,45 +735,45 @@ CC_CHECKPOINT_EVERY = 3
 def propagate_min_labels(bidir: DataFrame) -> DataFrame:
     """Min-label propagation over a symmetric edge list (a, b) until
     fixpoint; returns (node, label). See dedup_cluster_components for
-    the scale argument. The returned labels stay persisted in the
-    session's "cc_labels" slot until the next call releases them."""
-    spark = bidir.sparkSession
-    release(spark, "cc_labels")
-    labels = (
-        bidir.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .persist()
-    )
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    for it in range(CC_MAX_ITERS):
-        neigh = (
-            bidir.join(labels, F.col("b") == F.col("node"))
-            .groupBy("a")
-            .agg(F.min("label").alias("nl"))
+    the scale argument and its adaptive cache pin. The returned labels
+    stay persisted in the session's "cc_labels" slot until the next
+    call releases them; each round drops the previous round's."""
+    with slot(bidir.sparkSession, "cc_labels", adaptive=True) as keep:
+        labels = keep(
+            bidir.select(F.col("a").alias("node"))
+            .distinct()
+            .withColumn("label", F.col("node"))
         )
-        new_labels = labels.join(neigh, F.col("node") == F.col("a"), "left").select(
-            "node",
-            F.least(F.col("label"), F.coalesce("nl", "label")).alias("label"),
-        )
-        if (it + 1) % CC_CHECKPOINT_EVERY == 0:
-            # cut the join-chain lineage: the plan for round N must not
-            # embed rounds 1..N-1 (plan size/analysis cost would grow
-            # per round and a lost partition would recompute the chain)
-            new_labels = new_labels.localCheckpoint(eager=True)
+        prev_sum = labels.agg(F.sum("label")).collect()[0][0]
+        for it in range(CC_MAX_ITERS):
+            neigh = (
+                bidir.join(labels, F.col("b") == F.col("node"))
+                .groupBy("a")
+                .agg(F.min("label").alias("nl"))
+            )
+            new_labels = labels.join(
+                neigh, F.col("node") == F.col("a"), "left"
+            ).select(
+                "node",
+                F.least(F.col("label"), F.coalesce("nl", "label")).alias("label"),
+            )
+            if (it + 1) % CC_CHECKPOINT_EVERY == 0:
+                # cut the join-chain lineage: the plan for round N must not
+                # embed rounds 1..N-1 (plan size/analysis cost would grow
+                # per round and a lost partition would recompute the chain)
+                new_labels = new_labels.localCheckpoint(eager=True)
+            else:
+                new_labels = keep(new_labels)
+            cur_sum = new_labels.agg(F.sum("label")).collect()[0][0]
+            keep.drop(labels)
+            labels = new_labels
+            if cur_sum == prev_sum:
+                break
+            prev_sum = cur_sum
         else:
-            new_labels = new_labels.persist()
-        cur_sum = new_labels.agg(F.sum("label")).collect()[0][0]
-        labels.unpersist()
-        labels = new_labels
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        raise RuntimeError(
-            f"label propagation did not converge in {CC_MAX_ITERS} rounds"
-        )
-    session_slots(spark)["cc_labels"] = labels
+            raise RuntimeError(
+                f"label propagation did not converge in {CC_MAX_ITERS} rounds"
+            )
     return labels
 
 
@@ -841,7 +846,7 @@ def dedup_crossdoc_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # being pushed below the projection, where InferFilters would clone
     # the whole shingle construction into a pre-Exchange single-task
     # filter over raw text (the doc_shingles trap).
-    arrs = cached_shingle_arrays(docs)
+    arrs = cached_shingle_arrays(docs, adaptive=False)
     base = arrs.select(
         "doc_id", F.size("arr").cast("bigint").alias("n_shingles")
     ).filter(F.col("n_shingles") > 0)
@@ -1229,7 +1234,7 @@ def dedup_minhash_estimate_quality(spark: SparkSession, sf_dir: str) -> DataFram
     dedup_minhash_lsh verification shape). Estimates are exact-int
     ratios; everything renders through round(6)."""
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    arrs = cached_shingle_arrays(docs)
+    arrs = cached_shingle_arrays(docs, adaptive=False)
     sh = arrs.select("doc_id", F.explode("arr").alias("shingle"))
     sigs = minhash_signatures(sh)
     cand = lsh_candidate_pairs(sigs)

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_pipeline_sam_gov_spark.registry import query
-from etl_pipeline_sam_gov_spark.slots import release, session_slots
+from etl_pipeline_sam_gov_spark.slots import slot
 from etl_pipeline_sam_gov_spark.tables import load_tables
 
 #: PageRank damping factor and fixed iteration count.
@@ -35,7 +35,7 @@ PR_ITERS = 3
 
 #: Persisted relations (edges, deg, per-iteration rank vectors) of the
 #: latest invocation live in weak-keyed per-session slots
-#: (slots.session_slots); the previous set is released when a new one
+#: (slots.slot); the previous set is released when a new one
 #: is built (bounded one-slot cache discipline, shared by every
 #: iterative operator in this module).
 
@@ -80,7 +80,7 @@ def _attach_dst_deg(rel: DataFrame, deg: DataFrame, order_cols) -> DataFrame:
         joined = rel.join(dd.hint("shuffle_hash"), "dst").repartition("src")
     else:
         joined = rel.join(F.broadcast(dd), "dst")
-    return joined.sortWithinPartitions(*order_cols).persist()
+    return joined.sortWithinPartitions(*order_cols)
 
 
 def _pagerank_oracle() -> str:
@@ -148,103 +148,82 @@ def graph_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey") * 2 + 1).alias("s"),
         )
     )
-    # Release the previous invocation's cache slot BEFORE persisting the
-    # new relations: CacheManager matches entries by logical-plan
-    # equality, and repeated invocations build identical plans — an
-    # unpersist AFTER the new persist would evict the new entry too.
-    release(spark, "pagerank")
-    # r7: the edge cache is hash-partitioned by src ONCE at setup —
-    # the degree groupBy then reuses that partitioning exchange-free
-    # (so the repartition largely pays for itself), and every round's
-    # message join probes the cache with ZERO edge-side exchange or
-    # sort (the one-time sortWithinPartitions below bakes the merge
-    # ordering in).
-    # r9: dedup AFTER the src repartition, not before symmetrize — a
-    # hash(src) partitioning satisfies the distinct's clustered
-    # distribution on (src, dst) (subset property), so the dedup runs
-    # exchange-free above the one repartition the cache needs anyway.
-    # The old pairs-level distinct paid its own full exchange on
-    # (c, s) first: two corpus-sized exchanges where one suffices
-    # (same 1,173,742-row edge set; measured 3.92 s → 2.03 s setup at
-    # sf0.1, guide §2.4).
-    edges = _symmetrize(raw).repartition("src").distinct().persist()
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
-    # r6/r8: the edge list CARRIES the destination's degree — a
-    # ONE-TIME setup join through _attach_dst_deg (broadcast at fixture
-    # scale; SPARK_GRAFT_SCALE_SETUP=1 executes the corpus-scale swap —
-    # shuffle join on dst + repartition("src") — hash-identically).
-    # Because the graph is symmetric, EVERY node receives mass, so
-    # contrib covers the whole node relation and the old per-round
-    # deg ⋈ contrib LEFT join (+ coalesce) was recomputing a fact the
-    # aggregation already knows. (The oracle keeps the LEFT-join
-    # formulation, so a node silently losing its mass would
-    # hash-mismatch. A pairs-side degree derivation that skips the
-    # edges persist entirely measured SLOWER — 1.57 vs 1.23 s setup —
-    # so the join-back shape stays.)
-    edges_dd = _attach_dst_deg(edges, deg, ("src",))
-    cached: list[DataFrame] = [edges, deg, edges_dd]
+    # Adaptive cache widths: 3.25 → 1.90 s at sf0.1 (r10 A/B).
+    with slot(spark, "pagerank", adaptive=True) as keep:
+        # r7: the edge cache is hash-partitioned by src ONCE at setup —
+        # the degree groupBy then reuses that partitioning exchange-free
+        # (so the repartition largely pays for itself), and every round's
+        # message join probes the cache with ZERO edge-side exchange or
+        # sort (the one-time sortWithinPartitions below bakes the merge
+        # ordering in).
+        # r9: dedup AFTER the src repartition, not before symmetrize — a
+        # hash(src) partitioning satisfies the distinct's clustered
+        # distribution on (src, dst) (subset property), so the dedup runs
+        # exchange-free above the one repartition the cache needs anyway.
+        # The old pairs-level distinct paid its own full exchange on
+        # (c, s) first: two corpus-sized exchanges where one suffices
+        # (same 1,173,742-row edge set; measured 3.92 s → 2.03 s setup at
+        # sf0.1, guide §2.4).
+        edges = keep(_symmetrize(raw).repartition("src").distinct())
+        deg = keep(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
+        # r6/r8: the edge list CARRIES the destination's degree — a
+        # ONE-TIME setup join through _attach_dst_deg (broadcast at fixture
+        # scale; SPARK_GRAFT_SCALE_SETUP=1 executes the corpus-scale swap —
+        # shuffle join on dst + repartition("src") — hash-identically).
+        # Because the graph is symmetric, EVERY node receives mass, so
+        # contrib covers the whole node relation and the old per-round
+        # deg ⋈ contrib LEFT join (+ coalesce) was recomputing a fact the
+        # aggregation already knows. (The oracle keeps the LEFT-join
+        # formulation, so a node silently losing its mass would
+        # hash-mismatch. A pairs-side degree derivation that skips the
+        # edges persist entirely measured SLOWER — 1.57 vs 1.23 s setup —
+        # so the join-back shape stays.)
+        edges_dd = keep(_attach_dst_deg(edges, deg, ("src",)))
 
-    # deg is keyed by src and every node of the symmetric graph has an
-    # out-edge, so deg IS the node relation — deriving nodes/counts from
-    # the cached degree table avoids a separate distinct-shuffle of the
-    # edge list per iteration (measured 40% of the sf0.1 runtime).
-    nn = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
-    # The rank vector CARRIES the node's degree and the corpus-size
-    # scalar (a broadcast 1-row cross join — fully lazy, no collected
-    # literal): the per-round message rank/outdeg is then a pure
-    # projection of the vector, not a deg ⋈ ranks join per round.
-    ranks = deg.crossJoin(F.broadcast(nn)).select(
-        F.col("src").alias("node"),
-        "deg",
-        "n_nodes",
-        (F.lit(1.0) / F.col("n_nodes")).alias("rank"),
-    )
-    for _ in range(PR_ITERS):
-        # The per-round message value rank/outdeg projects off the
-        # |V|-row vector and joins UNHINTED onto the pre-bucketed edge
-        # cache: the edge side needs no exchange and no sort (the
-        # cache carries hashpartitioning(src) + src ordering), so an
-        # iteration moves only |V| message rows plus |V| contribution
-        # sums — never the edges, and (r7) never a broadcast of the
-        # rank vector, which is entity-population-sized and was the
-        # one per-round relation this plan still shipped whole to
-        # every executor (infeasible exactly when the corpus grows;
-        # fair interleaved best-of-6 at sf0.1: 2.27 s vs the broadcast
-        # form's 2.34 s — parity locally). The r6 note "AQE chose
-        # sort-merge joins here: 2.3x slower" measured the UNBUCKETED
-        # cache, where SMJ re-exchanged and re-sorted the edges every
-        # round; with the partitioning baked into the cache that cost
-        # is gone. n_nodes rides the message rows (a constant column)
-        # so the round needs no nn re-broadcast.
-        # The contribution aggregation groups by dst ALONE — its
-        # output keeps hashpartitioning on the next round's join key,
-        # so consecutive rounds co-partition end-to-end; dst_deg and
-        # n_nodes are functionally dependent on dst, so max() is exact
-        # (same partial-agg cost as first(), but deterministic even if
-        # a future directed/asymmetric variant ever broke the
-        # dependency — first() would then vary run to run silently,
-        # max() stays a stable, oracle-catchable value).
-        msg = ranks.select(
-            F.col("node").alias("src"),
-            (F.col("rank") / F.col("deg")).alias("rd"),
+        # deg is keyed by src and every node of the symmetric graph has an
+        # out-edge, so deg IS the node relation — deriving nodes/counts from
+        # the cached degree table avoids a separate distinct-shuffle of the
+        # edge list per iteration (measured 40% of the sf0.1 runtime).
+        nn = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
+        # The rank vector CARRIES the node's degree and the corpus-size
+        # scalar (a broadcast 1-row cross join — fully lazy, no collected
+        # literal): the per-round message rank/outdeg is then a pure
+        # projection of the vector, not a deg ⋈ ranks join per round.
+        ranks = deg.crossJoin(F.broadcast(nn)).select(
+            F.col("src").alias("node"),
+            "deg",
             "n_nodes",
+            (F.lit(1.0) / F.col("n_nodes")).alias("rank"),
         )
-        ranks = (
-            edges_dd.join(msg, "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(
-                F.sum("rd").alias("m"),
-                F.max("dst_deg").alias("deg"),
-                F.max("n_nodes").alias("n_nodes"),
-            )
-            .select(
-                "node",
-                "deg",
+        for _ in range(PR_ITERS):
+            # The per-round message value rank/outdeg projects off the
+            # |V|-row vector and joins UNHINTED onto the pre-bucketed edge
+            # cache: the edge side needs no exchange and no sort (the
+            # cache carries hashpartitioning(src) + src ordering), so an
+            # iteration moves only |V| message rows plus |V| contribution
+            # sums — never the edges, and (r7) never a broadcast of the
+            # rank vector, which is entity-population-sized and was the
+            # one per-round relation this plan still shipped whole to
+            # every executor (infeasible exactly when the corpus grows;
+            # fair interleaved best-of-6 at sf0.1: 2.27 s vs the broadcast
+            # form's 2.34 s — parity locally). The r6 note "AQE chose
+            # sort-merge joins here: 2.3x slower" measured the UNBUCKETED
+            # cache, where SMJ re-exchanged and re-sorted the edges every
+            # round; with the partitioning baked into the cache that cost
+            # is gone. n_nodes rides the message rows (a constant column)
+            # so the round needs no nn re-broadcast.
+            # The contribution aggregation groups by dst ALONE — its
+            # output keeps hashpartitioning on the next round's join key,
+            # so consecutive rounds co-partition end-to-end; dst_deg and
+            # n_nodes are functionally dependent on dst, so max() is exact
+            # (same partial-agg cost as first(), but deterministic even if
+            # a future directed/asymmetric variant ever broke the
+            # dependency — first() would then vary run to run silently,
+            # max() stays a stable, oracle-catchable value).
+            msg = ranks.select(
+                F.col("node").alias("src"),
+                (F.col("rank") / F.col("deg")).alias("rd"),
                 "n_nodes",
-                (
-                    F.lit(1 - PR_DAMPING) / F.col("n_nodes")
-                    + F.lit(PR_DAMPING) * F.col("m")
-                ).alias("rank"),
             )
             # Persist the |V|-row rank vector per round: the next
             # round's message projects off it, and an unpersisted chain
@@ -254,10 +233,24 @@ def graph_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
             # node-count-sized — the same bounded per-round persist the
             # CC label loop uses; at real scale, checkpoint to cluster
             # storage to also truncate lineage.
-            .persist()
-        )
-        cached.append(ranks)
-    session_slots(spark)["pagerank"] = tuple(cached)
+            ranks = keep(
+                edges_dd.join(msg, "src")
+                .groupBy(F.col("dst").alias("node"))
+                .agg(
+                    F.sum("rd").alias("m"),
+                    F.max("dst_deg").alias("deg"),
+                    F.max("n_nodes").alias("n_nodes"),
+                )
+                .select(
+                    "node",
+                    "deg",
+                    "n_nodes",
+                    (
+                        F.lit(1 - PR_DAMPING) / F.col("n_nodes")
+                        + F.lit(PR_DAMPING) * F.col("m")
+                    ).alias("rank"),
+                )
+            )
     return ranks.select(
         F.when(F.col("node") % 2 == 0, "customer")
         .otherwise("supplier")
@@ -317,14 +310,14 @@ def _ordered_pairs(col: str):
     )
 
 
-def _co_supply_edges(spark: SparkSession, sf_dir: str):
+def _co_supply_edges(spark: SparkSession, sf_dir: str, keep) -> DataFrame:
     """Thresholded supplier co-supply edge relation shared by the
     triangle / clustering-coefficient / label-propagation family —
     the Spark twin of ``_TRI_EDGES_SQL``.
 
-    Returns ``(edges, scored)``; ``scored`` is persisted (it feeds
-    both the threshold derivation and the final filter) and the caller
-    owns its lifecycle via session_slots. The k-th-largest support
+    The unpersisted edges read ``scored``, which ``keep`` (the
+    caller's slot scope) persists: it feeds both the threshold
+    derivation and the final filter. The k-th-largest support
     value comes from ``orderBy(desc).limit(k).agg(min)`` — Spark plans
     a distributed top-k (per-partition TakeOrdered, k ints to one
     reducer), never a global sort of the pair relation; the oracle's
@@ -354,12 +347,11 @@ def _co_supply_edges(spark: SparkSession, sf_dir: str):
     arrs = li.groupBy("l_orderkey").agg(
         F.array_sort(F.array_distinct(F.collect_list("l_suppkey"))).alias("ss")
     )
-    scored = (
+    scored = keep(
         arrs.select(_ordered_pairs("ss").alias("p"))
         .select("p.s1", "p.s2")
         .groupBy("s1", "s2")
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .persist()
     )
     k = int(
         li.agg(F.count_distinct("l_suppkey").alias("n")).first()["n"]
@@ -370,12 +362,11 @@ def _co_supply_edges(spark: SparkSession, sf_dir: str):
         .limit(k)
         .agg(F.min("n_shared").alias("t"))
     )
-    edges = (
+    return (
         scored.crossJoin(F.broadcast(thr))
         .filter(F.col("n_shared") >= F.col("t"))
         .select("s1", "s2")
     )
-    return edges, scored
 
 
 @query(
@@ -419,10 +410,9 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # evict entries this query still holds (ADVICE r08). Whichever
     # family member runs releases the previous member's relations and
     # owns the slot until the next family invocation.
-    release(spark, "co_supply")
-    edges, scored = _co_supply_edges(spark, sf_dir)
-    edges = edges.persist()
-    session_slots(spark)["co_supply"] = (edges, scored)
+    # Adaptive cache widths: best 1.93 → 1.60 s at sf0.1 (r10 A/B).
+    with slot(spark, "co_supply", adaptive=True) as keep:
+        edges = keep(_co_supply_edges(spark, sf_dir, keep))
     e1 = edges.alias("e1")
     e2 = edges.alias("e2")
     e3 = edges.alias("e3")
@@ -640,16 +630,18 @@ def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey") * 2 + 1).alias("s"),
         )
     )
-    release(spark, "kcore")
-    # r9: one exchange builds the deduped symmetric edge cache — the
-    # dedup runs exchange-free above the src repartition (subset
-    # clustered distribution), replacing the old pairs-level distinct
-    # that paid a second corpus exchange (the PageRank r9 setup shape);
-    # hash(src) in the cache also makes round 1's degree count and
-    # src-side semi-join co-partitioned for free.
-    e0 = _symmetrize(raw).repartition("src").distinct()
-    surv, cached = kcore_peel(e0, KC_K, KC_ROUNDS)
-    session_slots(spark)["kcore"] = tuple(cached)
+    # Static widths: adaptive ones ran 20-26% slower at sf0.1 (r10
+    # A/B) — the early peel rounds do full-edge-set work that a
+    # bytes-coalesced cache narrows to too few cores.
+    with slot(spark, "kcore") as keep:
+        # r9: one exchange builds the deduped symmetric edge cache — the
+        # dedup runs exchange-free above the src repartition (subset
+        # clustered distribution), replacing the old pairs-level distinct
+        # that paid a second corpus exchange (the PageRank r9 setup shape);
+        # hash(src) in the cache also makes round 1's degree count and
+        # src-side semi-join co-partitioned for free.
+        e0 = _symmetrize(raw).repartition("src").distinct()
+        surv = kcore_peel(e0, KC_K, KC_ROUNDS, keep)
     return surv.select(
         F.col("src").alias("node"),
         F.when(F.col("src") % 2 == 0, F.lit("customer"))
@@ -659,14 +651,12 @@ def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def kcore_peel(
-    e: DataFrame, k: int, rounds: int
-) -> tuple[DataFrame, list[DataFrame]]:
+def kcore_peel(e: DataFrame, k: int, rounds: int, keep) -> DataFrame:
     """Synchronous k-core peeling over a symmetric (src, dst) edge
     relation: ``rounds`` rounds of "remove every node whose current
     degree < k"; returns the surviving (src, d) degree relation (d =
-    degree over the surviving edge set) plus the per-round persisted
-    relations the CALLER must release (the session_slots discipline).
+    degree over the surviving edge set). The per-round relations
+    persist through ``keep``, the caller's slot scope.
 
     Shape: per round one partial-combined degree count over the CURRENT
     (shrinking) edge set and two semi-joins restricting edges to
@@ -686,20 +676,16 @@ def kcore_peel(
     interleaved clean-box protocol.) Equivalence against a brute-force
     recount reference stays property-tested over random graphs,
     including non-fixpoint peels (tests/test_properties.py)."""
-    e = e.persist()
-    cached: list[DataFrame] = [e]
+    e = keep(e)
     for _ in range(rounds):
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-        keep = deg.filter(F.col("d") >= k).select("src").persist()
-        cached.append(keep)
-        e = (
-            e.join(keep, "src", "semi")
-            .join(keep.withColumnRenamed("src", "dst"), "dst", "semi")
+        alive = keep(deg.filter(F.col("d") >= k).select("src"))
+        e = keep(
+            e.join(alive, "src", "semi")
+            .join(alive.withColumnRenamed("src", "dst"), "dst", "semi")
             .select("src", "dst")
-            .persist()
         )
-        cached.append(e)
-    return e.groupBy("src").agg(F.count(F.lit(1)).alias("d")), cached
+    return e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
 
 
 #: HITS fixed iteration count (each iteration = one authority update +
@@ -774,37 +760,32 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
     )
-    release(spark, "hits")
-    pairs = pairs.persist()
-    cached: list[DataFrame] = [pairs]
-    hub = pairs.select("c").distinct().select("c", F.lit(1.0).alias("hub"))
-    auth = None
-    for _ in range(HITS_ITERS):
-        a_raw = (
-            pairs.join(hub, "c")
-            .groupBy("s")
-            .agg(F.sum("hub").alias("v"))
-        )
-        a_tot = a_raw.agg(F.sum("v").alias("tot"))
-        auth = (
-            a_raw.crossJoin(F.broadcast(a_tot))
-            .select("s", (F.col("v") / F.col("tot")).alias("auth"))
-            .persist()
-        )
-        cached.append(auth)
-        h_raw = (
-            pairs.join(auth, "s")
-            .groupBy("c")
-            .agg(F.sum("auth").alias("v"))
-        )
-        h_tot = h_raw.agg(F.sum("v").alias("tot"))
-        hub = (
-            h_raw.crossJoin(F.broadcast(h_tot))
-            .select("c", (F.col("v") / F.col("tot")).alias("hub"))
-            .persist()
-        )
-        cached.append(hub)
-    session_slots(spark)["hits"] = tuple(cached)
+    # Adaptive cache widths: 5.86 → 3.09 s at sf0.1 (r10 A/B).
+    with slot(spark, "hits", adaptive=True) as keep:
+        pairs = keep(pairs)
+        hub = pairs.select("c").distinct().select("c", F.lit(1.0).alias("hub"))
+        auth = None
+        for _ in range(HITS_ITERS):
+            a_raw = (
+                pairs.join(hub, "c")
+                .groupBy("s")
+                .agg(F.sum("hub").alias("v"))
+            )
+            a_tot = a_raw.agg(F.sum("v").alias("tot"))
+            auth = keep(
+                a_raw.crossJoin(F.broadcast(a_tot))
+                .select("s", (F.col("v") / F.col("tot")).alias("auth"))
+            )
+            h_raw = (
+                pairs.join(auth, "s")
+                .groupBy("c")
+                .agg(F.sum("auth").alias("v"))
+            )
+            h_tot = h_raw.agg(F.sum("v").alias("tot"))
+            hub = keep(
+                h_raw.crossJoin(F.broadcast(h_tot))
+                .select("c", (F.col("v") / F.col("tot")).alias("hub"))
+            )
     return (
         auth.select(
             F.lit("supplier").alias("kind"),
@@ -898,33 +879,30 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey") * 2 + 1).alias("s"),
         )
     )
-    release(spark, "bfs")
-    # r9: one-exchange edge cache (the PageRank r9 setup shape) — the
-    # dedup runs exchange-free above the src repartition, and hash(src)
-    # in the cache co-partitions every round's frontier⋈edges join.
-    edges = _symmetrize(pairs).repartition("src").distinct().persist()
-    cached: list[DataFrame] = [edges]
-    seeds = (
-        t["customer"]
-        .filter(F.col("c_custkey") % BFS_SEED_MOD == 0)
-        .select((F.col("c_custkey") * 2).alias("node"))
-    )
-    visited = seeds.select("node", F.lit(0).alias("hop")).persist()
-    frontier = visited.select("node")
-    cached.append(visited)
-    for i in range(1, BFS_MAX_HOPS + 1):
-        reached = (
-            edges.join(frontier.withColumnRenamed("node", "src"), "src")
-            .select(F.col("dst").alias("node"))
-            .distinct()
+    # Adaptive cache widths: median −23% at sf0.1 (r10 A/B).
+    with slot(spark, "bfs", adaptive=True) as keep:
+        # r9: one-exchange edge cache (the PageRank r9 setup shape) — the
+        # dedup runs exchange-free above the src repartition, and hash(src)
+        # in the cache co-partitions every round's frontier⋈edges join.
+        edges = keep(_symmetrize(pairs).repartition("src").distinct())
+        seeds = (
+            t["customer"]
+            .filter(F.col("c_custkey") % BFS_SEED_MOD == 0)
+            .select((F.col("c_custkey") * 2).alias("node"))
         )
-        fresh = reached.join(visited.select("node"), "node", "anti").select(
-            "node", F.lit(i).alias("hop")
-        )
-        visited = visited.unionAll(fresh).persist()
-        frontier = visited.filter(F.col("hop") == i).select("node")
-        cached.append(visited)
-    session_slots(spark)["bfs"] = tuple(cached)
+        visited = keep(seeds.select("node", F.lit(0).alias("hop")))
+        frontier = visited.select("node")
+        for i in range(1, BFS_MAX_HOPS + 1):
+            reached = (
+                edges.join(frontier.withColumnRenamed("node", "src"), "src")
+                .select(F.col("dst").alias("node"))
+                .distinct()
+            )
+            fresh = reached.join(visited.select("node"), "node", "anti").select(
+                "node", F.lit(i).alias("hop")
+            )
+            visited = keep(visited.unionAll(fresh))
+            frontier = visited.filter(F.col("hop") == i).select("node")
     return visited.select(
         "node",
         F.when(F.col("node") % 2 == 0, F.lit("customer"))
@@ -1033,114 +1011,110 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey") * 2 + 1).alias("s"),
         )
     )
-    release(spark, "rw")
-    # r8 persisted the shared setup relation (deg and the ranked
-    # neighbor window are SEPARATE consumers; unpersisted, each re-ran
-    # the lineitem ⋈ orders derivation — 2.35 s → 1.83 s interleaved).
-    # r9 moves the cache boundary to the SYMMETRIC DEDUPED edge list
-    # built with ONE exchange: dedup runs exchange-free above the src
-    # repartition (hash(src) satisfies the distinct's clustered
-    # distribution on (src, dst) — the PageRank r9 setup shape), and
-    # because the cache now carries hashpartitioning(src), the ranked-
-    # neighbor window sorts IN PLACE with zero exchange where the old
-    # pairs-level cache paid a full (c, s) distinct exchange plus a
-    # second 2|P|-row window exchange. The cache is |E| rows of two
-    # bigints — same bounded setup-cache class, MEMORY_AND_DISK at
-    # scale.
-    edges = _symmetrize(raw).repartition("src").distinct().persist()
-    # The ranked neighbor list and degree table are derived once and
-    # persisted (release-before-re-persist cache rule) — every step
-    # and every union branch of the output re-reads them instead of
-    # re-deriving the edge relation (measured 4.2 s → ~1 s at sf0.1:
-    # the unpersisted form re-ran the lineitem⋈orders distinct ~8×).
-    # idx is cast to bigint AT CONSTRUCTION: pick_idx below is bigint
-    # (hash60 % deg), and a cast(idx) inside the step-join keys would
-    # defeat both partitioning and ordering reuse of the cache (the
-    # planner compares key expressions symbolically — measured: the
-    # int-idx form re-exchanged the |E| side every step).
-    nbr = edges.select(
-        "src",
-        "dst",
-        (F.row_number().over(W.partitionBy("src").orderBy("dst")) - 1)
-        .cast("bigint")
-        .alias("idx"),
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
-    # r6: the ranked-neighbor relation CARRIES the destination's degree
-    # (one setup join, cached) and the walk state carries the current
-    # node's degree forward — a step then computes its pick index by
-    # pure projection instead of a cur ⋈ deg join (the PageRank
-    # degree-carrying move: 3 fewer |V|-keyed joins per query; measured
-    # time-parity at sf0.1 where those joins are stage-latency-bound,
-    # adopted for the at-scale shape).
-    # INNER join is safe only because _symmetrize guarantees no sinks
-    # (every dst also appears as a src, so every dst has an out-degree
-    # row). On a DIRECTED edge relation this join would silently drop
-    # edges into sinks and a walk stepping there would vanish one step
-    # early; reuse on directed edges must left-join with dst_deg
-    # defaulted to 0 and terminate the walk explicitly.
-    # r7: the cache keeps the window's hashpartitioning(src) — NO
-    # repartition (an explicit (src, idx) exchange measured +0.9 s of
-    # pure setup cost for nothing: hash(src) is a subset of the step
-    # keys and co-partitions the join under
-    # requireAllClusterKeysForCoPartition=false) — plus a one-time
-    # in-partition sort that renames the already-(src, dst)-ordered
-    # rows to the symbolically-(src, idx) ordering the step merge join
-    # asks for. InMemoryTableScan preserves both properties, so every
-    # step probes the cache with zero exchange and zero sort on the
-    # |E| side.
-    # The |V|-row deg join is a ONE-TIME setup join that also PRESERVES
-    # the window's hash(src) layout into the cache — _attach_dst_deg
-    # (broadcast at fixture scale; SPARK_GRAFT_SCALE_SETUP=1 executes
-    # the corpus-scale swap: shuffle join on dst + repartition("src"),
-    # hash-identical output — a bare unhint would lose the layout the
-    # steps reuse).
-    nbr_dd = _attach_dst_deg(nbr, deg, ("src", "idx"))
-    cached: list[DataFrame] = [edges, deg, nbr_dd]
-    cur = deg.select(
-        F.col("src").alias("walk_id"), F.col("src").alias("node"), "deg"
-    )
-    out = cur.select("walk_id", F.lit(0).cast("int").alias("step"), "node")
-    for step in range(1, RW_STEPS + 1):
-        pick = _spark_hash60(
-            F.concat(
-                F.lit("rw"),
-                F.col("walk_id").cast("string"),
-                F.lit(":"),
-                F.lit(step).cast("string"),
-            )
-        ) % F.col("deg")
-        picked = cur.select("walk_id", "node", pick.alias("pick_idx"))
-        # UNHINTED join, deliberately (see docstring): AQE broadcasts
-        # the |V|-row frontier while it is small (fixture scale —
-        # measured parity with the old explicit F.broadcast, 2.25 vs
-        # 2.33 s) and falls back to a merge join onto the cache's
-        # reused partitioning when it is not — only the frontier is
-        # ever exchanged; the |E| side is never re-shuffled per step
-        # (the r3 "per-step shuffle of nbr ~1 s/step" regression
-        # re-shuffled the WRONG side).
-        cur = (
-            nbr_dd.join(
-                picked,
-                (F.col("node") == nbr_dd["src"])
-                & (F.col("pick_idx") == nbr_dd["idx"]),
-            )
-            .select(
-                "walk_id",
-                nbr_dd["dst"].alias("node"),
-                nbr_dd["dst_deg"].alias("deg"),
-            )
+    # Adaptive cache widths: 2.56 → 1.68 s at sf0.1 (r10 A/B).
+    with slot(spark, "rw", adaptive=True) as keep:
+        # r8 persisted the shared setup relation (deg and the ranked
+        # neighbor window are SEPARATE consumers; unpersisted, each re-ran
+        # the lineitem ⋈ orders derivation — 2.35 s → 1.83 s interleaved).
+        # r9 moves the cache boundary to the SYMMETRIC DEDUPED edge list
+        # built with ONE exchange: dedup runs exchange-free above the src
+        # repartition (hash(src) satisfies the distinct's clustered
+        # distribution on (src, dst) — the PageRank r9 setup shape), and
+        # because the cache now carries hashpartitioning(src), the ranked-
+        # neighbor window sorts IN PLACE with zero exchange where the old
+        # pairs-level cache paid a full (c, s) distinct exchange plus a
+        # second 2|P|-row window exchange. The cache is |E| rows of two
+        # bigints — same bounded setup-cache class, MEMORY_AND_DISK at
+        # scale.
+        edges = keep(_symmetrize(raw).repartition("src").distinct())
+        # The ranked neighbor list and degree table are derived once and
+        # persisted (release-before-re-persist cache rule) — every step
+        # and every union branch of the output re-reads them instead of
+        # re-deriving the edge relation (measured 4.2 s → ~1 s at sf0.1:
+        # the unpersisted form re-ran the lineitem⋈orders distinct ~8×).
+        # idx is cast to bigint AT CONSTRUCTION: pick_idx below is bigint
+        # (hash60 % deg), and a cast(idx) inside the step-join keys would
+        # defeat both partitioning and ordering reuse of the cache (the
+        # planner compares key expressions symbolically — measured: the
+        # int-idx form re-exchanged the |E| side every step).
+        nbr = edges.select(
+            "src",
+            "dst",
+            (F.row_number().over(W.partitionBy("src").orderBy("dst")) - 1)
+            .cast("bigint")
+            .alias("idx"),
+        )
+        deg = keep(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
+        # r6: the ranked-neighbor relation CARRIES the destination's degree
+        # (one setup join, cached) and the walk state carries the current
+        # node's degree forward — a step then computes its pick index by
+        # pure projection instead of a cur ⋈ deg join (the PageRank
+        # degree-carrying move: 3 fewer |V|-keyed joins per query; measured
+        # time-parity at sf0.1 where those joins are stage-latency-bound,
+        # adopted for the at-scale shape).
+        # INNER join is safe only because _symmetrize guarantees no sinks
+        # (every dst also appears as a src, so every dst has an out-degree
+        # row). On a DIRECTED edge relation this join would silently drop
+        # edges into sinks and a walk stepping there would vanish one step
+        # early; reuse on directed edges must left-join with dst_deg
+        # defaulted to 0 and terminate the walk explicitly.
+        # r7: the cache keeps the window's hashpartitioning(src) — NO
+        # repartition (an explicit (src, idx) exchange measured +0.9 s of
+        # pure setup cost for nothing: hash(src) is a subset of the step
+        # keys and co-partitions the join under
+        # requireAllClusterKeysForCoPartition=false) — plus a one-time
+        # in-partition sort that renames the already-(src, dst)-ordered
+        # rows to the symbolically-(src, idx) ordering the step merge join
+        # asks for. InMemoryTableScan preserves both properties, so every
+        # step probes the cache with zero exchange and zero sort on the
+        # |E| side.
+        # The |V|-row deg join is a ONE-TIME setup join that also PRESERVES
+        # the window's hash(src) layout into the cache — _attach_dst_deg
+        # (broadcast at fixture scale; SPARK_GRAFT_SCALE_SETUP=1 executes
+        # the corpus-scale swap: shuffle join on dst + repartition("src"),
+        # hash-identical output — a bare unhint would lose the layout the
+        # steps reuse).
+        nbr_dd = keep(_attach_dst_deg(nbr, deg, ("src", "idx")))
+        cur = deg.select(
+            F.col("src").alias("walk_id"), F.col("src").alias("node"), "deg"
+        )
+        out = cur.select("walk_id", F.lit(0).cast("int").alias("step"), "node")
+        for step in range(1, RW_STEPS + 1):
+            pick = _spark_hash60(
+                F.concat(
+                    F.lit("rw"),
+                    F.col("walk_id").cast("string"),
+                    F.lit(":"),
+                    F.lit(step).cast("string"),
+                )
+            ) % F.col("deg")
+            picked = cur.select("walk_id", "node", pick.alias("pick_idx"))
+            # UNHINTED join, deliberately (see docstring): AQE broadcasts
+            # the |V|-row frontier while it is small (fixture scale —
+            # measured parity with the old explicit F.broadcast, 2.25 vs
+            # 2.33 s) and falls back to a merge join onto the cache's
+            # reused partitioning when it is not — only the frontier is
+            # ever exchanged; the |E| side is never re-shuffled per step
+            # (the r3 "per-step shuffle of nbr ~1 s/step" regression
+            # re-shuffled the WRONG side).
             # Persist each |V|-row frontier: the output unions every
             # step's frontier, and step t's lineage contains steps
             # 1..t-1 — unpersisted, the union re-executes the chain
             # O(steps²) times (the PageRank rank-vector rule).
-            .persist()
-        )
-        cached.append(cur)
-        out = out.union(
-            cur.select("walk_id", F.lit(step).cast("int").alias("step"), "node")
-        )
-    session_slots(spark)["rw"] = tuple(cached)
+            cur = keep(
+                nbr_dd.join(
+                    picked,
+                    (F.col("node") == nbr_dd["src"])
+                    & (F.col("pick_idx") == nbr_dd["idx"]),
+                ).select(
+                    "walk_id",
+                    nbr_dd["dst"].alias("node"),
+                    nbr_dd["dst_deg"].alias("deg"),
+                )
+            )
+            out = out.union(
+                cur.select("walk_id", F.lit(step).cast("int").alias("step"), "node")
+            )
     return out
 
 
@@ -1328,32 +1302,27 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical doubles, rounded once at the end. The 1-row transitivity
     scalar rides a broadcast cross join — never a collect. Edge set =
     the density-derived top-3·|V| co-supply pairs (_co_supply_edges)."""
-    # Release the family's previous relations BEFORE persisting the
-    # plan-identical new ones (CacheManager matches by logical-plan
-    # equality — a pop after the persists would evict the NEW entries
-    # and the returned plan would re-run the lineitem self-join ~5x;
-    # ADVICE r08). Shared "co_supply" slot: see graph_triangle_count.
-    release(spark, "co_supply")
-    edges, scored = _co_supply_edges(spark, sf_dir)
-    # Referenced by three self-join aliases, the degree count, AND
-    # the triangle total — persist so the lineitem self-join +
-    # distinct-count edge derivation runs once, not five times.
-    edges = edges.persist()
-    e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e1.s2") == F.col("e2.s1"))
-        .join(
-            e3,
-            (F.col("e1.s1") == F.col("e3.s1"))
-            & (F.col("e2.s2") == F.col("e3.s2")),
+    # Shared "co_supply" slot: see graph_triangle_count.
+    # Adaptive cache widths: 2.78 → 2.21 s at sf0.1 (r10 A/B).
+    with slot(spark, "co_supply", adaptive=True) as keep:
+        # Referenced by three self-join aliases, the degree count, AND
+        # the triangle total — persist so the lineitem self-join +
+        # distinct-count edge derivation runs once, not five times.
+        edges = keep(_co_supply_edges(spark, sf_dir, keep))
+        e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
+        tri = keep(
+            e1.join(e2, F.col("e1.s2") == F.col("e2.s1"))
+            .join(
+                e3,
+                (F.col("e1.s1") == F.col("e3.s1"))
+                & (F.col("e2.s2") == F.col("e3.s2")),
+            )
+            .select(
+                F.col("e1.s1").alias("a"),
+                F.col("e1.s2").alias("b"),
+                F.col("e2.s2").alias("c"),
+            )
         )
-        .select(
-            F.col("e1.s1").alias("a"),
-            F.col("e1.s2").alias("b"),
-            F.col("e2.s2").alias("c"),
-        )
-        .persist()
-    )
     deg = (
         edges.select(F.col("s1").alias("node"))
         .unionAll(edges.select(F.col("s2").alias("node")))
@@ -1388,7 +1357,6 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("transitivity")
         )
     )
-    session_slots(spark)["co_supply"] = (edges, tri, scored)
     return pern.crossJoin(F.broadcast(glob)).select(
         F.col("node").alias("suppkey"),
         "deg",
@@ -1467,50 +1435,47 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Shared family slot — see graph_triangle_count for why tri/cc/lp
     # share one key (plan-identical scored/edges, no CacheManager
     # refcounting).
-    release(spark, "co_supply")
-    edges, scored = _co_supply_edges(spark, sf_dir)
-    sym = (
-        edges.select(F.col("s1").alias("src"), F.col("s2").alias("dst"))
-        .unionAll(edges.select(F.col("s2").alias("src"), F.col("s1").alias("dst")))
-        .repartition("src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    cached: list[DataFrame] = [sym, scored]
-    labels = sym.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("lab")
-    )
-    for _ in range(LP_ROUNDS):
-        # r10 (VERDICT r09 #1): one exchange per round instead of two.
-        # The old shape exchanged on (node, lab) for the count, then
-        # again on (node) for the argmax window — Sort +
-        # WindowGroupLimit on BOTH sides of that second exchange
-        # (plans/r10/graph_label_propagation_before.txt). Repartitioning
-        # the messages on node FIRST satisfies the groupBy(node, lab)
-        # clustering (subset property) AND the window's
-        # partitionBy(node), so the count aggregates and the argmax
-        # ranks on the same single hash(node) exchange with one sort.
-        # (A max-over-struct(cnt, -lab) aggregation was A/B'd too: it
-        # falls back to SortAggregate — ordered-struct max has no hash
-        # buffer — and lost by ~45%.)
-        msgs = (
-            sym.join(
-                labels.select(F.col("node").alias("src"), "lab"),
-                "src",
+    # Adaptive cache widths: 0.634 / 0.775 time ratios at sf0.1 (r10 A/Bs).
+    with slot(spark, "co_supply", adaptive=True) as keep:
+        edges = _co_supply_edges(spark, sf_dir, keep)
+        sym = keep(
+            edges.select(F.col("s1").alias("src"), F.col("s2").alias("dst"))
+            .unionAll(edges.select(F.col("s2").alias("src"), F.col("s1").alias("dst")))
+            .repartition("src")
+            .sortWithinPartitions("src")
+        )
+        labels = sym.select(F.col("src").alias("node")).distinct().select(
+            "node", F.col("node").alias("lab")
+        )
+        for _ in range(LP_ROUNDS):
+            # r10 (VERDICT r09 #1): one exchange per round instead of two.
+            # The old shape exchanged on (node, lab) for the count, then
+            # again on (node) for the argmax window — Sort +
+            # WindowGroupLimit on BOTH sides of that second exchange
+            # (plans/r10/graph_label_propagation_before.txt). Repartitioning
+            # the messages on node FIRST satisfies the groupBy(node, lab)
+            # clustering (subset property) AND the window's
+            # partitionBy(node), so the count aggregates and the argmax
+            # ranks on the same single hash(node) exchange with one sort.
+            # (A max-over-struct(cnt, -lab) aggregation was A/B'd too: it
+            # falls back to SortAggregate — ordered-struct max has no hash
+            # buffer — and lost by ~45%.)
+            msgs = (
+                sym.join(
+                    labels.select(F.col("node").alias("src"), "lab"),
+                    "src",
+                )
+                .select(F.col("dst").alias("node"), "lab")
+                .repartition("node")
+                .groupBy("node", "lab")
+                .agg(F.count(F.lit(1)).alias("cnt"))
             )
-            .select(F.col("dst").alias("node"), "lab")
-            .repartition("node")
-            .groupBy("node", "lab")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        rn = F.row_number().over(
-            W.partitionBy("node").orderBy(F.desc("cnt"), F.asc("lab"))
-        )
-        labels = (
-            msgs.withColumn("rn", rn).filter(F.col("rn") == 1).select("node", "lab")
-        ).persist()
-        cached.append(labels)
-    session_slots(spark)["co_supply"] = tuple(cached)
+            rn = F.row_number().over(
+                W.partitionBy("node").orderBy(F.desc("cnt"), F.asc("lab"))
+            )
+            labels = keep(
+                msgs.withColumn("rn", rn).filter(F.col("rn") == 1).select("node", "lab")
+            )
     return labels.select(
         F.col("node").alias("suppkey"),
         F.col("lab").alias("community"),
@@ -1929,63 +1894,59 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey") * 2 + 1).alias("s"),
         )
     )
-    release(spark, "ppr")
-    # r9: one-exchange edge cache — dedup runs exchange-free above the
-    # src repartition (the graph_pagerank_bipartite r9 setup shape).
-    edges = (
-        _symmetrize(pairs)
-        .repartition("src")
-        .distinct()
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
-    cached: list[DataFrame] = [edges, deg]
+    # Adaptive cache widths: 2.89 → 1.57 s at sf0.1 (r10 A/B).
+    with slot(spark, "ppr", adaptive=True) as keep:
+        # r9: one-exchange edge cache — dedup runs exchange-free above the
+        # src repartition (the graph_pagerank_bipartite r9 setup shape).
+        edges = keep(
+            _symmetrize(pairs)
+            .repartition("src")
+            .distinct()
+            .sortWithinPartitions("src")
+        )
+        deg = keep(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
 
-    nodes = deg.select(F.col("src").alias("node"))
-    seed = (F.col("node") % 2 == 0) & (
-        F.expr("node div 2") % PPR_SEED_MOD == 0
-    )
-    ns = nodes.filter(seed).agg(F.count(F.lit(1)).alias("n_seeds"))
-    ranks = nodes.crossJoin(F.broadcast(ns)).select(
-        "node",
-        "n_seeds",
-        F.when(seed, F.lit(1.0) / F.col("n_seeds"))
-        .otherwise(F.lit(0.0))
-        .alias("rank"),
-    )
-    for _ in range(PR_ITERS):
-        msg = (
-            deg.join(
-                ranks.filter(F.col("rank") > 0).select(
-                    F.col("node").alias("src"), "rank"
-                ),
-                "src",
-            ).select("src", (F.col("rank") / F.col("deg")).alias("rd"))
+        nodes = deg.select(F.col("src").alias("node"))
+        seed = (F.col("node") % 2 == 0) & (
+            F.expr("node div 2") % PPR_SEED_MOD == 0
         )
-        contrib = (
-            edges.join(msg, "src")
-            .groupBy("dst")
-            .agg(F.sum("rd").alias("m"))
+        ns = nodes.filter(seed).agg(F.count(F.lit(1)).alias("n_seeds"))
+        ranks = nodes.crossJoin(F.broadcast(ns)).select(
+            "node",
+            "n_seeds",
+            F.when(seed, F.lit(1.0) / F.col("n_seeds"))
+            .otherwise(F.lit(0.0))
+            .alias("rank"),
         )
-        ranks = (
-            nodes.crossJoin(F.broadcast(ns))
-            .join(contrib.withColumnRenamed("dst", "node"), "node", "left")
-            .select(
-                "node",
-                "n_seeds",
-                (
-                    F.lit(1 - PR_DAMPING)
-                    * F.when(seed, F.lit(1.0) / F.col("n_seeds")).otherwise(
-                        F.lit(0.0)
-                    )
-                    + F.lit(PR_DAMPING) * F.coalesce(F.col("m"), F.lit(0.0))
-                ).alias("rank"),
+        for _ in range(PR_ITERS):
+            msg = (
+                deg.join(
+                    ranks.filter(F.col("rank") > 0).select(
+                        F.col("node").alias("src"), "rank"
+                    ),
+                    "src",
+                ).select("src", (F.col("rank") / F.col("deg")).alias("rd"))
             )
-            .persist()
-        )
-        cached.append(ranks)
-    session_slots(spark)["ppr"] = tuple(cached)
+            contrib = (
+                edges.join(msg, "src")
+                .groupBy("dst")
+                .agg(F.sum("rd").alias("m"))
+            )
+            ranks = keep(
+                nodes.crossJoin(F.broadcast(ns))
+                .join(contrib.withColumnRenamed("dst", "node"), "node", "left")
+                .select(
+                    "node",
+                    "n_seeds",
+                    (
+                        F.lit(1 - PR_DAMPING)
+                        * F.when(seed, F.lit(1.0) / F.col("n_seeds")).otherwise(
+                            F.lit(0.0)
+                        )
+                        + F.lit(PR_DAMPING) * F.coalesce(F.col("m"), F.lit(0.0))
+                    ).alias("rank"),
+                )
+            )
     return ranks.filter(F.col("rank") > 0).select(
         F.when(F.col("node") % 2 == 0, "customer")
         .otherwise("supplier")

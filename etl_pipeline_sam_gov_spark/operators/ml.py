@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_pipeline_sam_gov_spark.registry import query
-from etl_pipeline_sam_gov_spark.slots import release, session_slots, slot_persist
+from etl_pipeline_sam_gov_spark.slots import slot, slot_persist
 from etl_pipeline_sam_gov_spark.tables import load_tables
 
 #: cluster count, Lloyd iterations, and the fixed-point scale (2^10).
@@ -544,40 +544,34 @@ def ml_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ci",
         F.posexplode("arr").alias("j0", "cj"),
     )
-    release(spark, "pca")
-    cov = (
-        pairs.groupBy("i", (F.col("j0") + 1).alias("j"))
-        .agg(
-            (
-                F.round(
-                    F.sum(F.col("ci") * F.col("cj")) / F.count(F.lit(1)) * S, 0
-                )
-                / S
-            ).alias("c")
-        )
-        .persist()
-    )
-    cached = [cov]
-    w = cov.select("i").distinct().select("i", F.lit(1.0).alias("wi"))
-    nm = None
-    for _ in range(PCA_ITERS):
-        # p is referenced twice (the norm and the normalized iterate) —
-        # persist the d-row relation so the unrolled plan stays linear.
-        p = (
-            cov.join(
-                F.broadcast(w.select(F.col("i").alias("j"), "wi")), "j"
+    with slot(spark, "pca") as keep:
+        cov = keep(
+            pairs.groupBy("i", (F.col("j0") + 1).alias("j")).agg(
+                (
+                    F.round(
+                        F.sum(F.col("ci") * F.col("cj")) / F.count(F.lit(1)) * S, 0
+                    )
+                    / S
+                ).alias("c")
             )
-            .groupBy("i")
-            .agg(F.sum(F.col("c") * F.col("wi")).alias("p"))
-            .persist()
         )
-        cached.append(p)
-        nm = p.agg(F.max(F.abs(F.col("p"))).alias("nm"))
-        w = p.crossJoin(F.broadcast(nm)).select(
-            "i",
-            (F.round(F.col("p") / F.col("nm") * S, 0) / S).alias("wi"),
-        )
-    session_slots(spark)["pca"] = tuple(cached)
+        w = cov.select("i").distinct().select("i", F.lit(1.0).alias("wi"))
+        nm = None
+        for _ in range(PCA_ITERS):
+            # p is referenced twice (the norm and the normalized iterate) —
+            # persist the d-row relation so the unrolled plan stays linear.
+            p = keep(
+                cov.join(
+                    F.broadcast(w.select(F.col("i").alias("j"), "wi")), "j"
+                )
+                .groupBy("i")
+                .agg(F.sum(F.col("c") * F.col("wi")).alias("p"))
+            )
+            nm = p.agg(F.max(F.abs(F.col("p"))).alias("nm"))
+            w = p.crossJoin(F.broadcast(nm)).select(
+                "i",
+                (F.round(F.col("p") / F.col("nm") * S, 0) / S).alias("wi"),
+            )
     return w.crossJoin(
         F.broadcast(nm.select(F.round("nm", 6).alias("eigenvalue")))
     ).select(

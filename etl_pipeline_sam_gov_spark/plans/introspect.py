@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_pipeline_sam_gov_spark.slots import PIN_CONF
+
 
 def physical_plan(df: DataFrame) -> str:
     """The executed physical plan (post-AQE if already executed)."""
@@ -35,22 +37,6 @@ def scan_detail(df: DataFrame, marker: str) -> str:
     if marker not in s:
         return ""
     return s.split(marker, 1)[1].splitlines()[0]
-
-
-def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in physical_plan(df)
-
-
-def has_topk(df: DataFrame) -> bool:
-    """True when an ORDER BY + LIMIT lowered to TakeOrderedAndProject
-    (per-partition heaps + driver merge) instead of a full sort."""
-    return "TakeOrderedAndProject" in physical_plan(df)
-
-
-def python_in_hot_path(df: DataFrame) -> bool:
-    """True if row-at-a-time Python evaluation appears in the plan —
-    the thing the engine's relational paths must never do."""
-    return "BatchEvalPython" in physical_plan(df)
 
 
 def execution_metrics(df: DataFrame) -> dict[str, dict[str, int]]:
@@ -99,6 +85,28 @@ def cache_loads(df: DataFrame) -> list[bool]:
     leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
     return [
         leaves.apply(i).cacheBuilder().isCachedColumnBuffersLoaded()
+        for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "InMemoryRelation"
+    ]
+
+
+def cache_pins(df: DataFrame) -> list[bool]:
+    """The AQE pin (slots.PIN_CONF) every InMemoryRelation the plan of
+    ``df`` reads was persisted under, as CacheManager substitutes them
+    now; a persisted ``df`` reads just its own entry. Read from the
+    session the entry's physical plan was planned in, which keeps the
+    conf of persist time, so no job runs."""
+    cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    leaves = cm.useCachedData(df._jdf.queryExecution().analyzed()).collectLeaves()
+    return [
+        leaves.apply(i)
+        .cacheBuilder()
+        .cachedPlan()
+        .session()
+        .sessionState()
+        .conf()
+        .getConfString(PIN_CONF)
+        == "true"
         for i in range(leaves.size())
         if leaves.apply(i).getClass().getSimpleName() == "InMemoryRelation"
     ]

@@ -129,90 +129,12 @@ PLAN_CACHED_REARM: frozenset[str] = frozenset(
 )
 
 #: session → {(query name, sf_dir) → (prepared DataFrame, the slots its
-#: build wrote as slots.written_since records them)}. Weak-keyed so
-#: a stopped session's plans (bound to a dead JVM handle) can never be
-#: served to a new session that reuses the same id().
+#: build wrote as slots.written_since records them, pins included)}.
+#: Weak-keyed so a stopped session's plans (bound to a dead JVM handle)
+#: can never be served to a new session that reuses the same id().
 _PLAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
-
-#: r10 (VERDICT r09 #3): queries that run with AQE free to re-optimize
-#: the output partitioning of their persisted (InMemoryRelation) setup
-#: caches — ``canChangeCachedPlanOutputPartitioning=true``. With the
-#: default (false), a cached ``repartition("src")`` always materializes
-#: at the static shuffle-partition count (cores, locally), and every
-#: downstream per-round stage of the iterative kernels inherits that
-#: width no matter how small the cache is; with AQE allowed, the cache's
-#: partition count derives from its measured BYTES (advisory partition
-#: size) — the scale-adaptive sizing guide §2 asks for. Results are
-#: partitioning-invariant (all six iterative graph outputs asserted
-#: identical under both values; everything is rounded/exact per repo
-#: convention, full oracle sweep green under the pinned set).
-#:
-#: Membership is MEASURED per query (interleaved best-of-N at sf0.1,
-#: twice, plus an order-alternating tiebreak — OPTIMIZATION_r10.md §3):
-#: the listed queries improved 12–43%; ``graph_kcore_membership`` is
-#: deliberately ABSENT (it regressed ~20–26% both times: its early peel
-#: rounds do full-edge-set work that a bytes-coalesced cache narrows to
-#: too few cores at this SF), as are ``dedup_minhash_lsh`` (+7–10%),
-#: ``pipeline_training_corpus_v2`` and ``ml_isotonic_calibration``
-#: (flat-to-worse). Every registered query EXECUTES under an explicitly
-#: pinned value (true here, false otherwise), so plan shape never
-#: depends on which query ran before.
-CACHED_PLAN_AQE_REPARTITION: frozenset[str] = frozenset(
-    {
-        "graph_pagerank_bipartite",
-        "graph_personalized_pagerank",
-        "graph_bfs_hops",
-        "graph_label_propagation",
-        "graph_random_walks",
-        "reco_item_lift",
-        "text_bpe_merge_rounds",
-        # Non-headliner persisting queries, same A/B protocol (outputs
-        # identical; order-alternating best-of-6 at sf0.1):
-        # hits 0.53 (5.86->3.09, every sample separated), cc 0.79,
-        # triangle 0.83, cluster-components 0.88. ts_exponential_fit_ks
-        # measured flat (1.02) and stays false.
-        "graph_hits_scores",
-        "graph_clustering_coefficient",
-        "graph_triangle_count",
-        "dedup_cluster_components",
-    }
-)
-
-_CCPOP_CONF = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-
-
-def _pin_cached_plan_conf(name: str, fn: QueryFn) -> QueryFn:
-    """Pin _CCPOP_CONF for this query's build AND execution.
-
-    Set BEFORE the builder (iterative builders may run setup jobs) and
-    re-asserted AFTER it (composed builders invoke other registered
-    queries inline, whose own pins would otherwise leak into this
-    query's execution, which happens after the wrapper returns).
-
-    Assumes each query is built right before it executes, as the driver
-    contract, the bench and the benchmark all do: the pin is session
-    conf, read when the DataFrame runs. A DataFrame built earlier but
-    executed after another query's build runs under that later query's
-    pin. Results do not depend on partitioning, so only speed is
-    affected."""
-    val = "true" if name in CACHED_PLAN_AQE_REPARTITION else "false"
-
-    @functools.wraps(fn)
-    def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        try:
-            spark.conf.set(_CCPOP_CONF, val)
-        except Exception:  # conf-less session stub in unit tests
-            return fn(spark, sf_dir)
-        df = fn(spark, sf_dir)
-        spark.conf.set(_CCPOP_CONF, val)
-        return df
-
-    # tests' fresh() unwraps ONE level to reach the raw builder; keep
-    # that contract across the (pin ∘ plan-cache) double wrapper.
-    wrapper.__wrapped__ = getattr(fn, "__wrapped__", fn)
-    return wrapper
 
 
 def _plan_cached(name: str, fn: QueryFn) -> QueryFn:
@@ -232,8 +154,8 @@ def _plan_cached(name: str, fn: QueryFn) -> QueryFn:
         hit = per.get(key)
         if hit is not None:
             df, armed = hit
-            for slot, value, levels in armed:
-                rearm(spark, slot, value, levels)
+            for entry in armed:
+                rearm(spark, *entry)
             return df
         before = dict(session_slots(spark))
         df = fn(spark, sf_dir)
@@ -270,11 +192,10 @@ def query(
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = _pin_cached_plan_conf(
-            name,
+        QUERIES[name] = (
             _plan_cached(name, fn)
             if name in PLAN_CACHED | PLAN_CACHED_REARM
-            else fn,
+            else fn
         )
         if oracle is not None:
             ORACLES[name] = oracle

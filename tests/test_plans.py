@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 import etl_pipeline_sam_gov_spark as eng
 from etl_pipeline_sam_gov_spark.plans.introspect import (
     cache_loads,
+    cache_pins,
     codegen_stats,
     explain_formatted as formatted,
     physical_plan as plan,
@@ -1160,28 +1161,106 @@ def test_approx_topk_combine_survives_empty_corpus(spark, sf_dir, tmp_path):
     assert fresh("agg_approx_topk_merge")(spark, d).count() == 0
 
 
+#: Queries whose slot caches persist with AQE free to re-optimize their
+#: output partitioning (the r10 A/B winners). Each declares
+#: ``adaptive=True`` at its slot call sites; every other slot cache
+#: persists with it off.
+ADAPTIVE_SLOT_QUERIES = {
+    "graph_pagerank_bipartite",
+    "graph_personalized_pagerank",
+    "graph_bfs_hops",
+    "graph_label_propagation",
+    "graph_random_walks",
+    "reco_item_lift",
+    "text_bpe_merge_rounds",
+    "graph_hits_scores",
+    "graph_clustering_coefficient",
+    "graph_triangle_count",
+    "dedup_cluster_components",
+}
+
+
+def _release_all(spark):
+    """Empty every slot. CacheManager serves a plan-identical entry
+    another slot still holds, with that entry's pin (the two BPE tags
+    build the same vocabulary relations), so a build checks its own
+    call sites' pins only from empty slots."""
+    from etl_pipeline_sam_gov_spark.slots import _frames, release, session_slots
+
+    for key, value in list(session_slots(spark).items()):
+        if _frames(value):
+            release(spark, key)
+
+
+def _pins_of(spark, keys):
+    """The pin of every relation in the slots ``keys``."""
+    from etl_pipeline_sam_gov_spark.slots import _frames, session_slots
+
+    slots = session_slots(spark)
+    return [
+        p for key in keys for df in _frames(slots.get(key)) for p in cache_pins(df)
+    ]
+
+
 def test_cached_plan_aqe_partitioning_pinned_per_query(spark, sf_dir):
-    """Every registered query EXECUTES under an explicitly pinned
-    canChangeCachedPlanOutputPartitioning — true only for the measured
-    winners in registry.CACHED_PLAN_AQE_REPARTITION — regardless of
-    which query ran before (the pin is re-asserted after the builder,
-    so a composed query's inline sub-builders cannot leak their value
-    into the outer query's execution)."""
-    from etl_pipeline_sam_gov_spark.registry import (
-        _CCPOP_CONF,
-        CACHED_PLAN_AQE_REPARTITION,
+    """Every slot cache keeps the AQE pin its query declares — true for
+    ADAPTIVE_SLOT_QUERIES, false for the rest — read from each cache
+    entry, not from session conf: on a fresh build, on a prepared-plan
+    hit (which re-arms the slots under their recorded pin), and for a
+    query built before another one and executed after it. No call
+    leaves the pin in the live session conf."""
+    from test_slot_reinvocation import SLOT_QUERIES
+
+    from etl_pipeline_sam_gov_spark.registry import PLAN_CACHED_REARM
+    from etl_pipeline_sam_gov_spark.slots import (
+        PIN_CONF,
+        session_slots,
+        written_since,
     )
 
-    missing = CACHED_PLAN_AQE_REPARTITION - set(eng.QUERIES)
-    assert not missing, f"pinned names not in registry: {sorted(missing)}"
+    assert ADAPTIVE_SLOT_QUERIES <= set(SLOT_QUERIES)
+    default = spark.conf.get(PIN_CONF)
+    assert default == "false"
+    load_tables(spark, sf_dir)
+    written = {}
+    for name in SLOT_QUERIES:
+        _release_all(spark)
+        before = dict(session_slots(spark))
+        df = fresh(name)(spark, sf_dir)
+        assert spark.conf.get(PIN_CONF) == default, f"{name} left the pin set"
+        written[name] = [key for key, *_ in written_since(spark, before)]
+        want = name in ADAPTIVE_SLOT_QUERIES
+        pins = _pins_of(spark, written[name])
+        assert pins and set(pins) == {want}, f"{name}: slot pins {pins}"
+        assert set(cache_pins(df)) <= {want}, name
 
-    # A pinned-true query leaves the conf true for its own execution...
-    eng.QUERIES["graph_label_propagation"](spark, sf_dir)
-    assert spark.conf.get(_CCPOP_CONF) == "true"
-    # ...a pinned-false one re-pins false even right after a true query.
-    eng.QUERIES["graph_kcore_membership"](spark, sf_dir)
-    assert spark.conf.get(_CCPOP_CONF) == "false"
-    # Composed query: its builder invokes other registered queries
-    # inline; the OUTER pin must win for the returned plan's execution.
-    eng.QUERIES["pipeline_health_report"](spark, sf_dir)
-    assert spark.conf.get(_CCPOP_CONF) == "false"
+    # Prepared-plan hits: a sibling with another pin (or the live
+    # conf flipped) in between must not change the re-armed pins.
+    for name in sorted(PLAN_CACHED_REARM):
+        want = name in ADAPTIVE_SLOT_QUERIES
+        eng.QUERIES[name](spark, sf_dir)
+        if name == "dedup_minhash_lsh":
+            eng.QUERIES["dedup_cluster_components"](spark, sf_dir)
+        flipped = "false" if want else "true"
+        spark.conf.set(PIN_CONF, flipped)
+        try:
+            eng.QUERIES[name](spark, sf_dir)
+            assert spark.conf.get(PIN_CONF) == flipped
+        finally:
+            spark.conf.set(PIN_CONF, default)
+        pins = _pins_of(spark, written[name])
+        assert pins and set(pins) == {want}, f"{name} hit: slot pins {pins}"
+
+    # Build A, build B with the other pin, then execute A: A's caches
+    # keep A's pin (ADVICE #1: a session-conf pin would follow B).
+    for a, b in (
+        ("graph_pagerank_bipartite", "graph_kcore_membership"),
+        ("graph_kcore_membership", "graph_hits_scores"),
+    ):
+        want = a in ADAPTIVE_SLOT_QUERIES
+        df_a = eng.QUERIES[a](spark, sf_dir)
+        eng.QUERIES[b](spark, sf_dir)
+        assert spark.conf.get(PIN_CONF) == default
+        assert _run(df_a)
+        pins = _pins_of(spark, written[a])
+        assert pins and set(pins) == {want}, f"{a} after {b}: slot pins {pins}"

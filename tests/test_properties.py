@@ -539,6 +539,7 @@ def test_kcore_peel_matches_recount_reference(pairs, k, spark):
     docstring; it now guards the committed recount form the same
     way.)"""
     from etl_pipeline_sam_gov_spark.operators.graph import kcore_peel
+    from etl_pipeline_sam_gov_spark.slots import release, slot
 
     # symmetrize + dedup, drop self-loops (the query's edge relations
     # are symmetric and loop-free by construction)
@@ -552,10 +553,10 @@ def test_kcore_peel_matches_recount_reference(pairs, k, spark):
     if not edges:
         return  # Spark can't infer a schema from zero rows; ref is {}
     df = spark.createDataFrame(sorted(edges), "src long, dst long")
-    surv, cached = kcore_peel(df, k, rounds=3)
+    with slot(spark, "kcore_property") as keep:
+        surv = kcore_peel(df, k, 3, keep)
     got = {r["src"]: r["d"] for r in surv.collect()}
-    for c in cached:
-        c.unpersist()
+    release(spark, "kcore_property")
     assert got == expect
 
 
@@ -713,7 +714,7 @@ def test_minhash_lsh_matches_python_model(docs, dup_of, spark):
     )
     got = {
         (r["doc1"], r["doc2"], r["jaccard"])
-        for r in minhash_duplicate_pairs(df).collect()
+        for r in minhash_duplicate_pairs(df, adaptive=False).collect()
     }
     assert {(a, b) for a, b, _ in got} == {(a, b) for a, b, _ in expect}
     ej = {(a, b): j for a, b, j in expect}
