@@ -17,44 +17,65 @@ analytics engine designed for 100 TB scale:
 - ``registry``   — the query/oracle registry that backs
   ``__spark_entry__.py`` (driver correctness contract).
 
-Import the package to populate the registry::
+The registry loads on first use: reading ``QUERIES``, ``ORACLES``,
+``BASELINE_OF`` or ``query`` from the package imports the registering
+modules, so a bare ``import etl_pipeline_sam_gov_spark`` (what a Python
+worker runs when it unpickles engine code) stays light::
 
     import etl_pipeline_sam_gov_spark as eng
     eng.QUERIES["q1_pricing_summary"](spark, "/root/testdata/sf0.01")
 
-Registry order is registration (module import) order;
-``__spark_entry__.queries()`` orders the names for certification.
+Registry order is registration (module import) order, ``_REGISTERING``
+below in a fresh process; a registering module imported before the
+first read registers its queries first. ``__spark_entry__.queries()``
+orders the names for certification.
 """
 
 # First, so it runs in every Python worker that unpickles engine code
 # (see pyworker's docstring); a no-op in the driver.
 from etl_pipeline_sam_gov_spark import pyworker as _pyworker  # noqa: F401
-from etl_pipeline_sam_gov_spark.registry import BASELINE_OF, ORACLES, QUERIES, query
 
-# Importing these modules registers every query in the registry.
-from etl_pipeline_sam_gov_spark.pipeline import contracts as _contracts  # noqa: F401
-from etl_pipeline_sam_gov_spark.operators import (  # noqa: F401
-    aggregates as _aggregates,
-    analytics as _analytics,
-    behavior as _behavior,
-    bpe as _bpe,
-    curation as _curation,
-    dedup as _dedup,
-    dq as _dq,
-    graph as _graph,
-    ml as _ml,
-    relational as _relational,
-    retrieval as _retrieval,
-    setops as _setops,
-    similarity as _similarity,
-    text as _text,
-    tpch as _tpch,
-    windows as _windows,
+#: The modules whose import registers queries, in registration order.
+#: (aggregates imports dedup partway through, so dedup's queries land
+#: between aggregates' first and second halves.)
+_REGISTERING = (
+    "pipeline.contracts",
+    "operators.aggregates",
+    "operators.analytics",
+    "operators.behavior",
+    "operators.bpe",
+    "operators.curation",
+    "operators.dedup",
+    "operators.dq",
+    "operators.graph",
+    "operators.ml",
+    "operators.relational",
+    "operators.retrieval",
+    "operators.setops",
+    "operators.similarity",
+    "operators.text",
+    "operators.tpch",
+    "operators.windows",
+    "functions.collections",
+    "functions.scalar",
+    "functions.udfs",
+    "streaming.jobs",
+    "operators.multimodal",
 )
-from etl_pipeline_sam_gov_spark.functions import collections as _collections  # noqa: F401
-from etl_pipeline_sam_gov_spark.functions import scalar as _scalar  # noqa: F401
-from etl_pipeline_sam_gov_spark.functions import udfs as _udfs  # noqa: F401
-from etl_pipeline_sam_gov_spark.streaming import jobs as _jobs  # noqa: F401
-from etl_pipeline_sam_gov_spark.operators import multimodal as _multimodal  # noqa: F401
 
 __all__ = ["QUERIES", "ORACLES", "BASELINE_OF", "query"]
+
+
+def __getattr__(name: str):
+    """Serve the registry names (PEP 562): the first read imports every
+    registering module, then binds all four as module globals, so later
+    reads never come back here."""
+    import importlib
+
+    if name not in __all__:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    for module in _REGISTERING:
+        importlib.import_module(f"{__name__}.{module}")
+    registry = importlib.import_module(f"{__name__}.registry")
+    globals().update({n: getattr(registry, n) for n in __all__})
+    return globals()[name]

@@ -37,7 +37,11 @@ BPE_ROUNDS = 3
 #: Per-round vocabulary relations persist under the session's
 #: ("bpe", query tag) slot (slots.slot — bounded
 #: one-slot-per-query discipline; tagged so the two BPE queries don't
-#: evict each other's live relations mid-plan).
+#: evict each other's live relations mid-plan). The tag is also a
+#: column of the first vocabulary relation: CacheManager matches cache
+#: entries by plan equality, so untagged plans would make the two
+#: queries share one entry per relation, under the pin and the
+#: lifetime of whichever built first.
 
 
 def _adjacent_pairs(syms: Column) -> Column:
@@ -158,7 +162,8 @@ def _merge_chain(
 ) -> tuple[DataFrame, list[DataFrame]]:
     """(final vocabulary with merged symbol arrays, per-round top-pair
     1-row DataFrames). All lazy; per-round vocab relations persist
-    under the ("bpe", tag) slot with the caller's AQE pin."""
+    under the ("bpe", tag) slot with the caller's AQE pin, their plans
+    distinct per tag."""
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     words = (
         spread_docs(docs)
@@ -169,7 +174,10 @@ def _merge_chain(
     with slot(spark, ("bpe", tag), adaptive) as keep:
         vocab = keep(
             words.select(
-                "word", "wc", F.expr("regexp_extract_all(word, '.', 0)").alias("s")
+                "word",
+                "wc",
+                F.expr("regexp_extract_all(word, '.', 0)").alias("s"),
+                F.lit(tag).alias("tag"),
             )
         )
         tops: list[DataFrame] = []

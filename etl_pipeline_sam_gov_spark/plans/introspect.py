@@ -128,31 +128,50 @@ def codegen_stats(spark: SparkSession) -> tuple[int, float]:
 
 def _pyworker_probe(_rows):
     import importlib
+    import os
     import sys
     import time
+
+    import pyspark
 
     jars = [p for p in sys.path if isinstance(p, str) and p.endswith(".jar")]
     t0 = time.perf_counter()
     importlib.invalidate_caches()
-    yield jars, (time.perf_counter() - t0) * 1e3
+    ms = (time.perf_counter() - t0) * 1e3
+    in_zip = "pyspark.zip" + os.sep in pyspark.__file__
+    engine = sorted(m for m in sys.modules if m.startswith("etl_pipeline_sam_gov_spark."))
+    yield jars, ms, in_zip, engine
 
 
 def pyworker_import_cost(spark: SparkSession) -> dict:
     """What a Python worker pays for imports at the start of each
-    request, read inside one worker by a one-row task that imports the
-    engine: ``{"jars": [...], "invalidate_ms": ms}``, the ``.jar``
-    entries on that worker's ``sys.path`` and the milliseconds of one
-    ``importlib.invalidate_caches()`` (the call PySpark makes before
-    every planner call and task). ``pyworker`` brings these to no jars
-    and about 2 ms; without it each zip and jar on the path is re-read,
-    about 220 ms a request with the spark-core jar (4 cores, CPython
-    3.11)."""
-    jars, ms = (
+    request, read inside one executor worker by a one-row task:
+
+    - ``jars``: the ``.jar`` entries on that worker's ``sys.path``;
+    - ``invalidate_ms``: the milliseconds of one
+      ``importlib.invalidate_caches()``, the call PySpark makes before
+      every planner call and task. ``pyworker`` brings these to no jars
+      and about 2 ms; without it each zip and jar on the path is
+      re-read, about 220 ms a request with the spark-core jar (4 cores,
+      CPython 3.11);
+    - ``pyspark_in_zip``: whether the worker runs SPARK_HOME's
+      ``pyspark.zip``, compiled from source in every daemon, rather
+      than the installed pyspark (``pydaemon``);
+    - ``engine_modules``: the ``etl_pipeline_sam_gov_spark.*`` modules
+      the worker holds, this probe's own ``plans.introspect`` and
+      ``slots`` included. A worker that only served engine code that
+      needs no registry holds no ``operators.*`` module."""
+    jars, ms, in_zip, engine = (
         spark.sparkContext.parallelize([0], 1)
         .mapPartitions(_pyworker_probe)
         .collect()[0]
     )
-    return {"jars": jars, "invalidate_ms": ms}
+    return {
+        "jars": jars,
+        "invalidate_ms": ms,
+        "pyspark_in_zip": in_zip,
+        "engine_modules": engine,
+    }
 
 
 def total_metric(df: DataFrame, metric_key: str) -> int:

@@ -10,7 +10,13 @@ puts ``pyspark.zip``, ``py4j-*.zip`` and the spark-core jar (37 MB, about
 140-240 ms before doing any work (4-core box, CPython 3.11, Spark 4.1).
 
 The package ``__init__`` imports this module first, so it runs in every
-worker that unpickles engine code. There, and only there, it:
+worker that unpickles engine code. It imports only the standard
+library, never pyspark: ``pydaemon`` imports the package before it
+picks which pyspark the executor daemon loads. It tells a worker by the
+flag that PySpark's ``setup_spark_files`` sets on ``SparkFiles`` before
+a request unpickles anything, looked up in ``sys.modules``: a process
+that has not imported ``pyspark.core.files`` is not a worker. In a
+worker, and only there, it:
 
 - drops ``.jar`` entries from ``sys.path`` and ``sys.path_importer_cache``
   (a jar holds no importable Python);
@@ -28,8 +34,6 @@ from __future__ import annotations
 import os
 import sys
 import zipimport
-
-from pyspark.core.files import SparkFiles
 
 #: Archive path -> (st_mtime_ns, st_size, st_ino) of the archive whose
 #: directory zipimport's shared cache holds.
@@ -69,8 +73,14 @@ def _is_jar(path: object) -> bool:
 
 def install() -> bool:
     """Apply both changes in a PySpark worker on CPython < 3.13; return
-    whether they apply. A no-op in the driver and on CPython 3.13+."""
-    if sys.version_info >= (3, 13) or not SparkFiles._is_running_on_worker:
+    whether they apply. A no-op in the driver, in a daemon before it
+    forks, and on CPython 3.13+."""
+    files = sys.modules.get("pyspark.core.files")
+    if (
+        sys.version_info >= (3, 13)
+        or files is None
+        or not files.SparkFiles._is_running_on_worker
+    ):
         return False
     sys.path[:] = [p for p in sys.path if not _is_jar(p)]
     for p in [p for p in sys.path_importer_cache if _is_jar(p)]:

@@ -1182,9 +1182,8 @@ ADAPTIVE_SLOT_QUERIES = {
 
 def _release_all(spark):
     """Empty every slot. CacheManager serves a plan-identical entry
-    another slot still holds, with that entry's pin (the two BPE tags
-    build the same vocabulary relations), so a build checks its own
-    call sites' pins only from empty slots."""
+    another slot still holds, with that entry's pin, so a build checks
+    its own call sites' pins only from empty slots."""
     from etl_pipeline_sam_gov_spark.slots import _frames, release, session_slots
 
     for key, value in list(session_slots(spark).items()):

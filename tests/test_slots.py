@@ -48,6 +48,26 @@ def test_scope_releases_previous_and_drops_early(spark):
     release(spark, "scope_test")
 
 
+def test_bpe_tags_keep_their_own_caches(spark, sf_dir):
+    """The two BPE queries build their vocabulary chains under their own
+    slot keys and pins. Built encode first, merges still caches its
+    rounds under its own ``adaptive=True`` pin, and releasing either
+    tag leaves the other's caches in place."""
+    from etl_pipeline_sam_gov_spark.operators import bpe
+
+    encode = bpe.text_bpe_encode(spark, sf_dir)
+    merges = bpe.text_bpe_merge_rounds(spark, sf_dir)
+    merge_pins, encode_pins = cache_pins(merges), cache_pins(encode)
+    assert merge_pins and set(merge_pins) == {True}
+    assert encode_pins and set(encode_pins) == {False}
+    release(spark, ("bpe", "encode"))
+    assert cache_pins(merges) == merge_pins
+    encode = bpe.text_bpe_encode(spark, sf_dir)
+    release(spark, ("bpe", "merges"))
+    assert cache_pins(encode) == encode_pins
+    release(spark, ("bpe", "encode"))
+
+
 def test_only_slots_persists():
     """Every persist, unpersist and pin-conf write in the package goes
     through slots.py, so the release-before-persist rule and the AQE pin

@@ -11,9 +11,10 @@ For each named registry query at the given sf dir:
 - prints a per-operator metrics digest of the EXECUTED plan (rows,
   shuffle bytes, spill) so the expensive exchange/operator is named by
   measurement, not guesswork;
-- prints, once per run, the jars on a Python worker's path and what
-  one worker-side ``importlib.invalidate_caches()`` costs
-  (introspect.pyworker_import_cost).
+- prints, once per run, the jars on a Python worker's path, what one
+  worker-side ``importlib.invalidate_caches()`` costs, whether the
+  worker runs pyspark from ``pyspark.zip``, and the engine modules it
+  holds (introspect.pyworker_import_cost).
 
 Usage:
     python tools/profile_query.py <query> [<query> ...] \
@@ -82,7 +83,9 @@ def main() -> None:
     cost = pyworker_import_cost(spark)
     print(
         f"python worker: {len(cost['jars'])} jar(s) on sys.path, "
-        f"invalidate_caches {cost['invalidate_ms']:.1f} ms",
+        f"invalidate_caches {cost['invalidate_ms']:.1f} ms, "
+        f"pyspark from {'pyspark.zip' if cost['pyspark_in_zip'] else 'the installed package'}, "
+        f"engine modules: {', '.join(cost['engine_modules'])}",
         flush=True,
     )
 
