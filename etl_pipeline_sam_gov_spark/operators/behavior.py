@@ -1912,7 +1912,7 @@ def ab_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max span), not spark_partition_id over a sampled range
     exchange — the reuse-off sweep showed sampled boundaries can
     differ between two physical executions of one logical exchange,
-    and this query is a PLAN_CACHED headliner where the persist fix
+    and this query is a prepared-plan headliner where the persist fix
     the other five fan-out sites took costs a per-invocation cache
     cycle. Deterministic slicing needs neither: every plan branch
     computes the identical pid from the row itself, under any reuse,

@@ -78,11 +78,21 @@ def execution_metrics(df: DataFrame) -> dict[str, dict[str, int]]:
     return out
 
 
+def _cached_leaves(df: DataFrame):
+    """The leaves of ``df``'s analyzed plan with CacheManager's entries
+    substituted as they stand now, as a new action on ``df`` would bind
+    them. (``queryExecution().withCachedData()`` is a lazy val: it
+    keeps the entries of its first read, which a later re-arm may have
+    replaced.)"""
+    cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    return cm.useCachedData(df._jdf.queryExecution().analyzed()).collectLeaves()
+
+
 def cache_loads(df: DataFrame) -> list[bool]:
     """isCachedColumnBuffersLoaded of every InMemoryRelation the plan
     of ``df`` reads, as CacheManager substitutes them now: True where
     the plan would read blocks an earlier action already stored."""
-    leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
+    leaves = _cached_leaves(df)
     return [
         leaves.apply(i).cacheBuilder().isCachedColumnBuffersLoaded()
         for i in range(leaves.size())
@@ -96,8 +106,7 @@ def cache_pins(df: DataFrame) -> list[bool]:
     now; a persisted ``df`` reads just its own entry. Read from the
     session the entry's physical plan was planned in, which keeps the
     conf of persist time, so no job runs."""
-    cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
-    leaves = cm.useCachedData(df._jdf.queryExecution().analyzed()).collectLeaves()
+    leaves = _cached_leaves(df)
     return [
         leaves.apply(i)
         .cacheBuilder()
@@ -110,6 +119,14 @@ def cache_pins(df: DataFrame) -> list[bool]:
         for i in range(leaves.size())
         if leaves.apply(i).getClass().getSimpleName() == "InMemoryRelation"
     ]
+
+
+def jobs_started(spark: SparkSession) -> int:
+    """Jobs the session's DAGScheduler has started since its context
+    began, read synchronously (no listener-bus wait, about 0.04 ms a
+    py4j call). The difference of two reads counts the jobs any thread
+    started in between."""
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
 
 
 def codegen_stats(spark: SparkSession) -> tuple[int, float]:

@@ -30,12 +30,13 @@ releases and persists, restoring the previous value on exit. No
 session conf is left behind, and a DataFrame built before another
 query's build still runs its caches under its own pin.
 
-The prepared-plan cache (registry.py) serves a persisting query's
-plan again through ``written_since`` + ``rearm``: it records the slots
-the first build wrote, with their storage levels and pin, and on
-every later call swaps fresh, unloaded cache entries in for them under
-the same pin, so the next action recomputes each cached relation
-instead of reading the previous call's blocks.
+The prepared-plan cache (registry.py) serves every job-free build
+again through ``written_since`` + ``rearm``: it records the slots the
+build wrote and those its component queries' hits re-armed, with
+their storage levels and pin, and on every later call swaps fresh,
+unloaded cache entries in for them under the same pin, so the next
+action recomputes each cached relation instead of reading the
+previous call's blocks.
 """
 
 from __future__ import annotations

@@ -91,12 +91,11 @@ REPRESENTATIVE = [
 
 def _fresh(name):
     """Bypass the prepared-plan cache: this test NEEDS two physically
-    distinct executions (a PLAN_CACHED query would hand back the same
-    DataFrame, whose executedPlan is compiled once — the partition
+    distinct executions (every job-free build is served prepared, and
+    the same DataFrame compiles its executedPlan once — the partition
     override would never reach it and the comparison would be
     query-vs-itself)."""
-    fn = eng.QUERIES[name]
-    return getattr(fn, "__wrapped__", fn)
+    return eng.QUERIES[name].__wrapped__
 
 
 @pytest.mark.parametrize("name", REPRESENTATIVE)

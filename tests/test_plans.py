@@ -12,6 +12,7 @@ from etl_pipeline_sam_gov_spark.plans.introspect import (
     cache_loads,
     cache_pins,
     codegen_stats,
+    jobs_started,
     explain_formatted as formatted,
     physical_plan as plan,
 )
@@ -20,13 +21,13 @@ from oracle_compare import canonical_rows
 
 
 def fresh(name):
-    """Builder for a FRESH plan: PLAN_CACHED queries may hand back a
-    DataFrame another test already executed, and an AQE-finalized plan
-    prints runtime stage structure (extra exchanges, reused stages)
-    instead of the compile-time shape these gates assert. functools
-    .wraps exposes the raw builder on the cache wrapper."""
-    fn = eng.QUERIES[name]
-    return getattr(fn, "__wrapped__", fn)
+    """Builder for a FRESH plan: every job-free build is served
+    prepared, so the registry may hand back a DataFrame another test
+    already executed, and an AQE-finalized plan prints runtime stage
+    structure (extra exchanges, reused stages) instead of the
+    compile-time shape these gates assert. The registry's wrapper
+    exposes the raw builder as ``__wrapped__``."""
+    return eng.QUERIES[name].__wrapped__
 
 
 def test_filter_pushdown_reaches_parquet(spark, sf_dir):
@@ -822,48 +823,11 @@ def test_no_corpus_scale_global_windows(spark, sf_dir):
         )
 
 
-def test_plan_cached_queries_exist_and_hold_no_state(spark, sf_dir):
-    """The prepared-plan allowlist (registry.PLAN_CACHED) may only name
-    queries whose plan holds NO persisted relation: a cached DataFrame
-    that references an InMemoryRelation would serve repeat runs from
-    Spark's block cache, so bench would measure cache hits instead of
-    the query. Also pins that every allowlisted name is actually
-    registered (typo guard) and that the cache returns the same plan
-    object on a repeat call in one session."""
-    from etl_pipeline_sam_gov_spark.registry import PLAN_CACHED
-
-    missing = PLAN_CACHED - set(eng.QUERIES)
-    assert not missing, f"PLAN_CACHED names not in registry: {sorted(missing)}"
-    for name in sorted(PLAN_CACHED):
-        # Fresh builder: the optimizedPlan must be judged against the
-        # query's OWN persists, not a cached DataFrame's history.
-        df = fresh(name)(spark, sf_dir)
-        opt = df._jdf.queryExecution().optimizedPlan().toString()
-        assert "InMemoryRelation" not in opt, (
-            f"{name}: persisted relation inside a PLAN_CACHED query — "
-            "repeat invocations would measure the block cache"
-        )
-        # And the registry wrapper memoizes: same object per
-        # (session, name, sf_dir).
-        assert eng.QUERIES[name](spark, sf_dir) is eng.QUERIES[name](
-            spark, sf_dir
-        ), f"{name}: prepared-plan cache miss"
-
-
-def _last_job_id(spark) -> int:
-    """Id of the newest job in the status store (jobsList is newest
-    first), once the listener bus has delivered every event."""
-    jsc = spark.sparkContext._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    jobs = jsc.statusStore().jobsList(None)
-    return jobs.head().jobId() if jobs.nonEmpty() else -1
-
-
 def _jobs_launched(spark, thunk):
     """(Spark jobs ``thunk`` launched, its return value)."""
-    first = _last_job_id(spark)
+    first = jobs_started(spark)
     out = thunk()
-    return _last_job_id(spark) - first, out
+    return jobs_started(spark) - first, out
 
 
 def _run(df):
@@ -874,61 +838,281 @@ def _run(df):
     return canonical_rows(out.columns, [tuple(r) for r in out.collect()])
 
 
-def test_rearmed_prepared_plans_rebuild_their_caches(spark, sf_dir):
-    """registry.PLAN_CACHED_REARM names persisting queries whose
-    prepared plan is served again after slots.rearm swaps in fresh
-    cache entries. For each: the raw build launches no job (a build
-    that counts or collects cannot be replayed by a re-arm); a repeat
-    call returns the same object; right after that hit every cache the
-    plan reads is still unloaded, so the hit cannot read the previous
-    call's blocks; and executing the hit launches as many jobs as the
-    cold call and returns the same rows."""
-    from etl_pipeline_sam_gov_spark.registry import (
-        _PLAN_CACHE,
-        PLAN_CACHED,
-        PLAN_CACHED_REARM,
-    )
+#: SLOT_QUERIES entries whose build launches Spark jobs, so they are
+#: never served prepared: the co_supply family counts while it builds
+#: and cluster components checkpoints every label round.
+JOB_BUILDING_SLOT_QUERIES = {
+    "dedup_cluster_components",
+    "graph_triangle_count",
+    "graph_clustering_coefficient",
+    "graph_label_propagation",
+}
 
-    missing = PLAN_CACHED_REARM - set(eng.QUERIES)
-    assert not missing, f"PLAN_CACHED_REARM names not in registry: {sorted(missing)}"
-    assert not PLAN_CACHED_REARM & PLAN_CACHED
+
+def _job_free_slot_queries():
+    from test_slot_reinvocation import SLOT_QUERIES
+
+    assert JOB_BUILDING_SLOT_QUERIES <= set(SLOT_QUERIES)
+    return [n for n in SLOT_QUERIES if n not in JOB_BUILDING_SLOT_QUERIES]
+
+
+def _composed_queries():
+    """Queries whose builder calls another registered query through
+    the registry (``_Q[...]``)."""
+    import inspect
+
+    return [
+        name
+        for name, fn in eng.QUERIES.items()
+        if "_Q[" in inspect.getsource(fresh(name))
+    ]
+
+
+#: Queries whose every execution runs the same number of Spark jobs,
+#: so a hit must run exactly the cold call's. For most plans AQE's
+#: count varies from one execution of the same object to the next (the
+#: stages it plans depend on which stage finishes first):
+#: graph_bfs_hops ran 32 or 33 jobs, ml_classifier_scorecard 25-31.
+FIXED_JOB_COUNT = {
+    "graph_pagerank_bipartite",
+    "text_bpe_merge_rounds",
+    "reco_item_lift",
+    "dedup_minhash_lsh",
+    "curate_pack_token_shards",
+}
+
+
+def _assert_served_prepared(spark, sf_dir, name, cold, hits=1):
+    """``cold``, a prepared plan that has not run yet, runs; then each
+    of ``hits`` repeat calls returns the same object, reads no loaded
+    cache right after the call (a slot query reads some), and executes
+    with the cold call's rows and, for FIXED_JOB_COUNT, its job
+    count."""
+    from test_slot_reinvocation import SLOT_QUERIES
+
+    cold_jobs, cold_rows = _jobs_launched(spark, lambda: _run(cold))
+    assert cold_rows, f"{name}: no rows"
+    for i in range(hits):
+        hit = eng.QUERIES[name](spark, sf_dir)
+        assert hit is cold, f"{name}: prepared-plan cache miss"
+        loads = cache_loads(hit)
+        assert loads or name not in SLOT_QUERIES, f"{name} reads no cache"
+        assert not any(loads), (
+            f"{name} hit {i + 1}: reads loaded cache entries {loads} "
+            "before any action — it would measure the previous call's "
+            "blocks"
+        )
+        hit_jobs, hit_rows = _jobs_launched(spark, lambda: _run(hit))
+        assert name not in FIXED_JOB_COUNT or hit_jobs == cold_jobs, (
+            f"{name} hit {i + 1}: ran {hit_jobs} jobs, the cold call "
+            f"{cold_jobs}"
+        )
+        assert hit_rows == cold_rows, (
+            f"{name} hit {i + 1}: the prepared plan drifted from its "
+            "cold call"
+        )
+
+
+def _gate_queries():
+    """The prepared-plan gate's queries: every bench headliner, every
+    job-free slot query and every composed query."""
+    from bench import HEADLINE
+
+    composed = _composed_queries()
+    assert len(composed) >= 7, composed
+    return {*HEADLINE, *_job_free_slot_queries(), *composed}
+
+
+def _partition_gate(spark, sf_dir):
+    """(stateless, stateful) gate queries: whether a fresh build's
+    optimized plan references an InMemoryRelation, its own persists or
+    plan-identical ones."""
+    load_tables(spark, sf_dir)
+    stateless, stateful = set(), set()
+    for name in _gate_queries():
+        # Fresh builder: the optimizedPlan must be judged against the
+        # query's OWN persists, not a cached DataFrame's history.
+        df = fresh(name)(spark, sf_dir)
+        opt = df._jdf.queryExecution().optimizedPlan().toString()
+        (stateful if "InMemoryRelation" in opt else stateless).add(name)
+    return stateless, stateful
+
+
+def _assert_gate(spark, sf_dir, names):
+    """Each of ``names`` builds without a Spark job and is served
+    prepared (``_assert_served_prepared``) from a cold plan."""
+    from etl_pipeline_sam_gov_spark.registry import _PLAN_CACHE
+
     # The first read of a table in a session infers its parquet schema
     # with a Spark job; that is table loading, not plan building.
     load_tables(spark, sf_dir)
-    for name in sorted(PLAN_CACHED_REARM):
+    for name in sorted(names):
         n, _ = _jobs_launched(spark, lambda: fresh(name)(spark, sf_dir))
         assert n == 0, f"{name}: the build launched {n} Spark job(s)"
         # Start from a cold prepared plan: an earlier test may have
         # executed the cached object itself.
         _PLAN_CACHE.get(spark, {}).pop((name, sf_dir), None)
-        cold = eng.QUERIES[name](spark, sf_dir)
-        cold_jobs, cold_rows = _jobs_launched(spark, lambda: _run(cold))
-        hit = eng.QUERIES[name](spark, sf_dir)
-        assert hit is cold, f"{name}: prepared-plan cache miss"
-        loads = cache_loads(hit)
-        assert loads and not any(loads), (
-            f"{name}: the hit reads loaded cache entries {loads} before "
-            "any action — it would measure the previous call's blocks"
-        )
-        hit_jobs, hit_rows = _jobs_launched(spark, lambda: _run(hit))
-        assert hit_jobs == cold_jobs, (
-            f"{name}: hit ran {hit_jobs} jobs, the cold call {cold_jobs}"
-        )
-        assert hit_rows == cold_rows and len(hit_rows) > 0, (
-            f"{name}: the re-armed plan drifted from its cold call"
+        _assert_served_prepared(spark, sf_dir, name, eng.QUERIES[name](spark, sf_dir))
+
+
+def test_plan_cached_queries_exist_and_hold_no_state(spark, sf_dir):
+    """The gate queries whose plan holds no persisted relation are
+    served prepared and stay stateless: once the gate ran them, with
+    their stateful siblings' caches registered, a new action on each
+    prepared plan still binds no cache entry, so bench measures the query, not Spark's
+    block cache. Also pins that every gate query is registered (typo
+    guard) and that every slot query among them reads a cache."""
+    from test_slot_reinvocation import SLOT_QUERIES
+
+    gate = _gate_queries()
+    missing = gate - set(eng.QUERIES)
+    assert not missing, f"gate names not in registry: {sorted(missing)}"
+    stateless, stateful = _partition_gate(spark, sf_dir)
+    assert stateless and stateful, (stateless, stateful)
+    assert gate & set(SLOT_QUERIES) <= stateful, sorted(
+        gate & set(SLOT_QUERIES) & stateless
+    )
+    _assert_gate(spark, sf_dir, stateless)
+    for name in sorted(stateless):
+        loads = cache_loads(eng.QUERIES[name](spark, sf_dir))
+        assert loads == [], (
+            f"{name}: the prepared plan binds cache entries {loads} — "
+            "repeat invocations would measure the block cache"
         )
 
 
-#: Each re-armed query → the queries that release its slot key, or
-#: persist plan-identical relations under a key of their own.
+def test_rearmed_prepared_plans_rebuild_their_caches(spark, sf_dir):
+    """The gate queries whose plan reads persisted relations (job-free
+    slot queries, and composed queries and headliners that read slot
+    caches) build without a Spark job and are served prepared: the raw
+    build launches no job; a repeat call returns the same object;
+    right after that hit no cache the plan reads is loaded
+    (slots.rearm swapped in fresh entries, a composed query's
+    components' included), so the hit cannot read the previous call's
+    blocks; and executing the hit returns the cold call's rows, and
+    for FIXED_JOB_COUNT runs its job count."""
+    _, stateful = _partition_gate(spark, sf_dir)
+    _assert_gate(spark, sf_dir, stateful)
+
+
+def test_composed_query_hits_rearm_their_components(spark, sf_dir):
+    """reco_eval_coverage_novelty reads reco_item_lift's cached basket
+    through a prepared-plan hit of that component. Its own hits must
+    re-arm those caches too, on every hit, not only the first."""
+    from etl_pipeline_sam_gov_spark.registry import _PLAN_CACHE
+
+    name = "reco_eval_coverage_novelty"
+    load_tables(spark, sf_dir)
+    _run(eng.QUERIES["reco_item_lift"](spark, sf_dir))
+    _PLAN_CACHE.get(spark, {}).pop((name, sf_dir), None)
+    cold = eng.QUERIES[name](spark, sf_dir)
+    assert cache_loads(cold), f"{name} reads no cache"
+    _assert_served_prepared(spark, sf_dir, name, cold, hits=2)
+
+
+def test_concurrent_builds_memoize_sound_plans(spark, sf_dir):
+    """More threads than cores build and hit composed queries and their
+    components at once, under a short switch interval. Builds and hits
+    take turns, so no thread releases a slot another thread's build is
+    recording, and every plan memoized meanwhile is sound: its hits
+    re-arm every cache it reads."""
+    import sys
+    import threading
+
+    from etl_pipeline_sam_gov_spark.registry import _PLAN_CACHE
+
+    names = [
+        "reco_item_lift",
+        "reco_eval_coverage_novelty",
+        "ab_sequential_sprt",
+        "pipeline_experiment_report",
+    ]
+    load_tables(spark, sf_dir)
+    for name in names:
+        _PLAN_CACHE.get(spark, {}).pop((name, sf_dir), None)
+    errors = []
+
+    def work(k):
+        try:
+            for i in range(4):
+                eng.QUERIES[names[(k + i) % len(names)]](spark, sf_dir)
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=work, args=(k,)) for k in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads), "a build hung"
+    assert not errors, errors
+    for name in names:
+        _assert_served_prepared(spark, sf_dir, name, eng.QUERIES[name](spark, sf_dir))
+
+
+def test_job_launching_builds_are_not_memoized(spark, sf_dir):
+    """A build that launches a Spark job is rebuilt on every call."""
+    load_tables(spark, sf_dir)
+    for name in (
+        "sql_session_variables",
+        "stream_tumbling_hourly",
+        *sorted(JOB_BUILDING_SLOT_QUERIES),
+    ):
+        n, first = _jobs_launched(spark, lambda: eng.QUERIES[name](spark, sf_dir))
+        assert n > 0, f"{name}: the build launched no job"
+        assert eng.QUERIES[name](spark, sf_dir) is not first, name
+
+
+def test_first_read_of_a_table_delays_the_prepared_plan(spark, sf_dir, tmp_path):
+    """The first build over tables this session has not read runs their
+    schema jobs, so it is not memoized; the next build is."""
+    import shutil
+
+    d = str(tmp_path / "sf")
+    shutil.copytree(sf_dir, d)
+    first = eng.QUERIES["q1_pricing_summary"](spark, d)
+    second = eng.QUERIES["q1_pricing_summary"](spark, d)
+    assert second is not first
+    assert eng.QUERIES["q1_pricing_summary"](spark, d) is second
+
+
+def test_cache_loads_binds_as_a_new_action(spark, sf_dir):
+    """cache_loads reads the cache entries a new action would bind now,
+    not the ones the object first bound: after a sibling re-armed the
+    shared caches and loaded them, the prepared object reads them
+    loaded."""
+    load_tables(spark, sf_dir)
+    lift = eng.QUERIES["reco_item_lift"](spark, sf_dir)
+    assert not any(cache_loads(lift))
+    _run(eng.QUERIES["reco_eval_coverage_novelty"](spark, sf_dir))
+    loads = cache_loads(lift)
+    assert loads and all(loads), f"reco_item_lift reads {loads}"
+
+
+#: Each prepared slot query → the queries that release its slot key,
+#: persist plan-identical relations under a key of their own, or re-arm
+#: it as a composed query's component.
 REARM_SIBLINGS = {
     "dedup_minhash_lsh": [
         "dedup_cluster_components",
         "dedup_crossdoc_ngrams",
         "dedup_minhash_estimate_quality",
     ],
+    "dedup_crossdoc_ngrams": ["dedup_minhash_estimate_quality"],
+    "dedup_ngram_jaccard": ["dedup_shingle_containment"],
+    "dedup_semantic_clusters": [
+        "dedup_semantic_capped",
+        "pipeline_training_corpus_v2",
+    ],
     "text_bpe_merge_rounds": ["text_bpe_encode"],
     "curate_pack_token_shards": ["pipeline_training_corpus"],
+    "reco_item_lift": ["reco_eval_coverage_novelty"],
+    "ab_sequential_sprt": ["pipeline_experiment_report"],
 }
 
 
@@ -1210,7 +1394,6 @@ def test_cached_plan_aqe_partitioning_pinned_per_query(spark, sf_dir):
     leaves the pin in the live session conf."""
     from test_slot_reinvocation import SLOT_QUERIES
 
-    from etl_pipeline_sam_gov_spark.registry import PLAN_CACHED_REARM
     from etl_pipeline_sam_gov_spark.slots import (
         PIN_CONF,
         session_slots,
@@ -1235,7 +1418,7 @@ def test_cached_plan_aqe_partitioning_pinned_per_query(spark, sf_dir):
 
     # Prepared-plan hits: a sibling with another pin (or the live
     # conf flipped) in between must not change the re-armed pins.
-    for name in sorted(PLAN_CACHED_REARM):
+    for name in _job_free_slot_queries():
         want = name in ADAPTIVE_SLOT_QUERIES
         eng.QUERIES[name](spark, sf_dir)
         if name == "dedup_minhash_lsh":

@@ -21,8 +21,8 @@ from etl_pipeline_sam_gov_spark.plans.introspect import cache_loads
 from oracle_compare import canonical_rows
 
 #: Slot queries whose build launches no Spark job, so a fresh build
-#: must plan over unloaded caches only. (The re-armed prepared plans
-#: are job-free too; tests/test_plans.py gates them.)
+#: must plan over unloaded caches only. (Every job-free slot query is
+#: also served prepared; tests/test_plans.py gates its hits.)
 JOB_FREE_SLOT_QUERIES = [
     "dedup_ngram_jaccard",       # "shingles"
     "dedup_shingle_containment",  # "shingles"
@@ -69,8 +69,7 @@ def _fresh(name):
     """Bypass the prepared-plan cache: each call must run the build's
     own release-before-persist path (the re-armed prepared plans are
     gated in tests/test_plans.py)."""
-    fn = eng.QUERIES[name]
-    return getattr(fn, "__wrapped__", fn)
+    return eng.QUERIES[name].__wrapped__
 
 
 @pytest.mark.parametrize("name", SLOT_QUERIES)

@@ -4,8 +4,11 @@ For each named registry query at the given sf dir:
 
 - times the full plan end-to-end with the noop sink, best-of-N (the
   bench methodology), with the job labelled via setJobDescription,
-  and prints each run's plan-build time and the classes Janino
-  compiled during it (introspect.codegen_stats);
+  and prints each run's plan-build time, whether the build was a
+  prepared-plan hit (the same object as the previous run), the Spark
+  jobs the build launched (a build that launched any is not prepared;
+  introspect.jobs_started) and the classes Janino compiled during the
+  run (introspect.codegen_stats);
 - dumps ``explain("formatted")`` to an output directory (the judge's
   plan evidence: plans/rNN/<query>_{before,after}.txt);
 - prints a per-operator metrics digest of the EXECUTED plan (rows,
@@ -36,6 +39,7 @@ from etl_pipeline_sam_gov_spark.plans.introspect import (  # noqa: E402
     codegen_stats,
     execution_metrics,
     explain_formatted,
+    jobs_started,
     pyworker_import_cost,
 )
 from etl_pipeline_sam_gov_spark.session import get_spark  # noqa: E402
@@ -96,9 +100,11 @@ def main() -> None:
         for i in range(args.runs):
             spark.sparkContext.setJobDescription(f"profile:{name}#{i}")
             n0, ms0 = codegen_stats(spark)
+            prev, j0 = df, jobs_started(spark)
             t0 = time.perf_counter()
             df = fn(spark, args.sf)
             t_build = time.perf_counter() - t0
+            build_jobs = jobs_started(spark) - j0
             df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             times.append(dt)
@@ -107,6 +113,8 @@ def main() -> None:
             # means the codegen cache evicted this query's classes.
             print(
                 f"{name} run{i}: {dt:.3f}s (plan build {t_build:.3f}s, "
+                f"{'prepared hit' if df is prev else 'built'}, "
+                f"{build_jobs} build job(s), "
                 f"codegen {n1 - n0} classes ~{ms1 - ms0:.0f} ms)",
                 flush=True,
             )
