@@ -12,7 +12,7 @@ for auditable data lineage (and for the DuckDB oracles here).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_pipeline_sam_gov_spark.operators.dedup import (
@@ -374,6 +374,19 @@ TEMP_C = 5
 _TEMP_HBITS = 20  # per-row hash resolution (2^20 buckets)
 
 
+def _temperature_keep() -> Column:
+    """The keep test of temperature resampling on a relation with
+    ``doc_id`` and ``n_lang``: h²·n_lang < TEMP_C²·2^(2B) for the row's
+    B-bit hash h, in bigint arithmetic."""
+    h = (
+        _spark_hash60(F.concat(F.lit("temp|"), F.col("doc_id").cast("string")))
+        % (1 << _TEMP_HBITS)
+    )
+    return h * h * F.col("n_lang") < F.lit(
+        TEMP_C * TEMP_C * (1 << (2 * _TEMP_HBITS))
+    ).cast("bigint")
+
+
 @query(
     "curate_temperature_resample",
     oracle=f"""
@@ -407,21 +420,8 @@ def curate_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale, never the engine's plan.)"""
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     sizes = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_lang"))
-    h = (
-        _spark_hash60(F.concat(F.lit("temp|"), F.col("doc_id").cast("string")))
-        % (1 << _TEMP_HBITS)
-    )
-    return (
-        docs.join(F.broadcast(sizes), "lang")
-        .select(
-            "doc_id",
-            "lang",
-            "n_lang",
-            (
-                h * h * F.col("n_lang")
-                < F.lit(TEMP_C * TEMP_C * (1 << (2 * _TEMP_HBITS))).cast("bigint")
-            ).alias("keep"),
-        )
+    return docs.join(F.broadcast(sizes), "lang").select(
+        "doc_id", "lang", "n_lang", _temperature_keep().alias("keep")
     )
 
 
@@ -501,16 +501,9 @@ def pipeline_training_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q1 = docs.filter(F.col("logit") > 0)
     sizes = q1.groupBy("lang").agg(F.count(F.lit(1)).alias("n_lang"))
-    h = (
-        _spark_hash60(F.concat(F.lit("temp|"), F.col("doc_id").cast("string")))
-        % (1 << _TEMP_HBITS)
-    )
     q2 = (
         q1.join(F.broadcast(sizes), "lang")
-        .filter(
-            h * h * F.col("n_lang")
-            < F.lit(TEMP_C * TEMP_C * (1 << (2 * _TEMP_HBITS))).cast("bigint")
-        )
+        .filter(_temperature_keep())
         .select("doc_id", "lang", "n_tokens")
     )
     emb = t["embeddings"].join(

@@ -173,7 +173,7 @@ def pyworker_import_cost(spark: SparkSession) -> dict:
       CPython 3.11);
     - ``pyspark_in_zip``: whether the worker runs SPARK_HOME's
       ``pyspark.zip``, compiled from source in every daemon, rather
-      than the installed pyspark (``pydaemon``);
+      than the installed pyspark (``session.python_launcher``);
     - ``engine_modules``: the ``etl_pipeline_sam_gov_spark.*`` modules
       the worker holds, this probe's own ``plans.introspect`` and
       ``slots`` included. A worker that only served engine code that

@@ -9,14 +9,17 @@ puts ``pyspark.zip``, ``py4j-*.zip`` and the spark-core jar (37 MB, about
 5,400 entries, no Python modules) on that path, so each request paid
 140-240 ms before doing any work (4-core box, CPython 3.11, Spark 4.1).
 
+``session.python_launcher`` drops ``pyspark.zip`` only on a matching
+install and never runs for a session the engine did not build; this
+module covers those workers too, and it alone handles the jar.
+
 The package ``__init__`` imports this module first, so it runs in every
 worker that unpickles engine code. It imports only the standard
-library, never pyspark: ``pydaemon`` imports the package before it
-picks which pyspark the executor daemon loads. It tells a worker by the
-flag that PySpark's ``setup_spark_files`` sets on ``SparkFiles`` before
-a request unpickles anything, looked up in ``sys.modules``: a process
-that has not imported ``pyspark.core.files`` is not a worker. In a
-worker, and only there, it:
+library, never pyspark, so importing the package stays light where
+Spark never starts. It tells a worker by the flag that PySpark's
+``setup_spark_files`` sets on ``SparkFiles`` before a request unpickles
+anything, looked up in ``sys.modules``: a process that has not imported
+``pyspark.core.files`` is not a worker. In a worker, and only there, it:
 
 - drops ``.jar`` entries from ``sys.path`` and ``sys.path_importer_cache``
   (a jar holds no importable Python);

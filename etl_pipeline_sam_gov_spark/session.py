@@ -7,8 +7,13 @@ partition coalescing); only memory/parallelism sizing is deployment-specific.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shlex
+import subprocess
+import tempfile
 import weakref
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -138,6 +143,72 @@ def _default_driver_mem() -> str:
     return "8g"
 
 
+#: Prints where an interpreter would import pyspark from, without importing it.
+_FIND_PYSPARK = (
+    "import importlib.util as u; s = u.find_spec('pyspark'); "
+    "print(s.submodule_search_locations[0] if s and s.submodule_search_locations else '')"
+)
+
+
+def installed_matches_zip(spark_zip: str, pyspark_dir: str) -> bool:
+    """Whether the pyspark package in ``pyspark_dir`` ("" for none) is
+    the release in ``spark_zip``: their ``version.py`` are equal byte
+    for byte."""
+    if not pyspark_dir:
+        return False
+    try:
+        with zipfile.ZipFile(spark_zip) as z:
+            pinned = z.read("pyspark/version.py")
+        with open(os.path.join(pyspark_dir, "version.py"), "rb") as f:
+            return f.read() == pinned
+    except (OSError, KeyError, zipfile.BadZipFile):
+        return False
+
+
+def launcher_script(python: str, root: str, spark_zip: str | None) -> str:
+    """A shell launcher that puts ``root`` first on ``PYTHONPATH``, drops
+    ``spark_zip`` from it (unless None) and ``exec``s ``python``."""
+    keep = f'[ "$e" = {shlex.quote(spark_zip)} ] || ' if spark_zip else ""
+    return (
+        "#!/bin/sh\n"
+        f"p={shlex.quote(root)}\n"
+        "IFS=:; set -f\n"
+        f'for e in $PYTHONPATH; do {keep}p="$p:$e"; done\n'
+        'export PYTHONPATH="$p"\n'
+        f'exec {shlex.quote(python)} "$@"\n'
+    )
+
+
+def python_launcher(python: str) -> str:
+    """Write the launcher that every Python daemon of a get_spark session
+    (executor tasks' and the DataSource planners') runs instead of
+    ``python``; return its path. It puts the package root first on
+    ``PYTHONPATH``, so workers import this engine wherever the driver
+    runs. It drops SPARK_HOME's ``pyspark.zip``, which every daemon
+    compiles from source (0.4 s from start to fork against 0.15 s, 4
+    cores, CPython 3.11), only if ``python``'s pyspark is its release."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spark_zip = os.path.join(_find_spark_home(), "python", "lib", "pyspark.zip")
+    try:
+        found = subprocess.run(
+            [python, "-c", _FIND_PYSPARK], capture_output=True, text=True,
+            timeout=60, check=True,
+        ).stdout.strip()
+    except (OSError, subprocess.SubprocessError):
+        found = ""
+    drop = installed_matches_zip(spark_zip, found)
+    script = launcher_script(python, root, spark_zip if drop else None)
+    key = hashlib.sha256(script.encode()).hexdigest()[:16]
+    path = os.path.join(tempfile.gettempdir(), f"etl-pylaunch-{key}")
+    with tempfile.NamedTemporaryFile("w", dir=os.path.dirname(path), delete=False) as f:
+        f.write(script)
+    os.chmod(f.name, 0o700)
+    os.replace(f.name, path)
+    return path
+
+
 def get_spark(app_name: str = "etl_pipeline_sam_gov_spark") -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     # local[N, K]: K task-attempt retries before a stage aborts — the
@@ -175,12 +246,6 @@ def get_spark(app_name: str = "etl_pipeline_sam_gov_spark") -> SparkSession:
         # is set here, when the session is created.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        # Executor tasks' Python workers fork from a daemon that runs
-        # the installed pyspark when it is the same version as
-        # SPARK_HOME's pyspark.zip, which every daemon otherwise
-        # compiles from source: about 0.1 s from start to fork instead
-        # of 0.4 s (see pydaemon).
-        .config("spark.python.daemon.module", "etl_pipeline_sam_gov_spark.pydaemon")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
@@ -188,19 +253,22 @@ def get_spark(app_name: str = "etl_pipeline_sam_gov_spark") -> SparkSession:
     # other scheduler confs are frozen at SparkContext startup, so a
     # runtime spark.conf.set cannot exercise them):
     # SPARK_GRAFT_EXTRA_CONFS="k1=v1,k2=v2".
-    extra = {}
     for pair in filter(None, os.environ.get("SPARK_GRAFT_EXTRA_CONFS", "").split(",")):
         k, _, v = pair.partition("=")
-        extra[k.strip()] = v.strip()
-    # Python workers import the engine (and pydaemon) from the package
-    # root whatever the driver's working directory and PYTHONPATH;
-    # without it every Python UDF of a driver started outside the
-    # checkout fails with "No module named 'etl_pipeline_sam_gov_spark'".
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pypath = "spark.executorEnv.PYTHONPATH"
-    extra[pypath] = os.pathsep.join(filter(None, (extra.get(pypath), root)))
-    for k, v in extra.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+        builder = builder.config(k.strip(), v.strip())
+    # PySpark reads PYSPARK_PYTHON once, when the SparkContext starts,
+    # and the JVM it launches inherits it: set it for that moment only.
+    # The launcher is a file on the driver's host, so only local
+    # masters (local-cluster included) use it.
+    caller = os.environ.get("PYSPARK_PYTHON")
+    if master.startswith("local"):
+        os.environ["PYSPARK_PYTHON"] = python_launcher(caller or "python3")
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if caller is None:
+            os.environ.pop("PYSPARK_PYTHON", None)
+        else:
+            os.environ["PYSPARK_PYTHON"] = caller
     spark.sparkContext.setLogLevel("WARN")
     return configure_runtime(spark)

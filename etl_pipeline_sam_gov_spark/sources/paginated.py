@@ -33,22 +33,22 @@ worker request, in this order:
 3. each partition is one task on an executor's Python worker
    (``PaginatedReader.read``).
 
-Each of the three starts its own Python daemon, so the first action
-in a session pays three daemon starts, one after another, and each
-forked worker's first request (4 cores, CPython 3.11, Spark 4.1):
-
-- daemon start to fork: about 0.4 s for each planner daemon, which
-  Spark always runs from ``SPARK_HOME``'s ``pyspark.zip`` (compiled from
-  source, no ``.pyc``); about 0.1 s for the executor daemon, which
-  ``pydaemon`` runs on the installed pyspark (0.4 s from the zip);
-- fork to first call: 0.1-0.2 s. Unpickling this module imports the
-  engine package, which now runs only ``pyworker``; it took 0.3-0.45 s
-  while the package loaded all 381 queries and pandas with it.
-
-A cold 200-page read on a fresh session took 2.9-3.3 s against
-3.6-4.0 s before, and 0.16-0.21 s warm. Workers are reused, and
-``pyworker`` keeps a reused worker from re-reading the spark-core jar
-and ``pyspark.zip`` at the start of every request.
+Each of the three starts its own Python daemon, and the session's
+first ``spark.read.format`` lookup starts a fourth
+(``lookup_data_sources``), so the first action pays four daemon starts,
+one after another. ``session.get_spark`` starts each through one
+launcher, which drops SPARK_HOME's ``pyspark.zip`` (compiled from
+source, no ``.pyc``) when the installed pyspark is its release. A
+daemon on the zip takes 0.37-0.55 s from start to fork; through the
+launcher, 0.13-0.15 s for ``lookup_data_sources`` and
+``create_data_source``, 0.15-0.20 s for ``plan_data_source_read`` and
+0.12-0.14 s for the executor daemon (4 cores, CPython 3.11, Spark
+4.1). Fork to first call is 0.1-0.2 s:
+unpickling this module imports the engine package, which runs only
+``pyworker``. A cold 200-page read on a fresh session took 4.0-4.1 s,
+against 4.9-5.2 s with the three planners on the zip; warm reads are
+unchanged. Workers are reused, and ``pyworker`` keeps a reused worker
+from re-reading the spark-core jar at the start of every request.
 """
 
 from __future__ import annotations
