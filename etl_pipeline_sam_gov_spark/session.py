@@ -7,14 +7,20 @@ partition coalescing); only memory/parallelism sizing is deployment-specific.
 
 from __future__ import annotations
 
+import atexit
+import fcntl
+import glob
 import hashlib
 import os
 import shlex
+import shutil
 import subprocess
+import sys
 import tempfile
 import weakref
 import zipfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 #: Runtime (SQL) confs that matter for correctness and must hold even when
@@ -209,7 +215,161 @@ def python_launcher(python: str) -> str:
     return path
 
 
+#: JVM logging that would print class-data-sharing warnings to the
+#: stdout the driver JVM shares with its Python caller (recording
+#: printed about 4500 lines): off on the recording and the mapping JVM.
+_CDS_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
+
+#: The first bytes of a dynamic CDS archive (0xf00baba8, little-endian).
+_CDS_MAGIC = b"\xa8\xab\x0b\xf0"
+
+
+def cds_dir() -> str:
+    """Where get_spark keeps its driver class-data-sharing archives."""
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    return os.path.join(cache, "etl_pipeline_sam_gov_spark", "cds")
+
+
+def cds_archive() -> str | None:
+    """Path of the driver JVM's class-data-sharing archive for this Java
+    runtime, Spark jar set and conf dir, or None when the driver must
+    start without one.
+
+    The JVM cannot record an archive while a non-empty directory is on
+    its classpath, and Spark's launcher puts the conf dir there; so CDS
+    is used only when that dir holds nothing but ``*.template`` files
+    (get_spark then swaps in an empty dir) and no Hadoop or YARN conf
+    dir is set."""
+    if os.environ.get("HADOOP_CONF_DIR") or os.environ.get("YARN_CONF_DIR"):
+        return None
+    from pyspark.find_spark_home import _find_spark_home
+
+    spark_home = _find_spark_home()
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    if not java:
+        return None
+    java_home = os.path.dirname(os.path.dirname(os.path.realpath(java)))
+    key = hashlib.sha256(f"{java_home}\0{conf_dir}\0".encode())
+    try:
+        if not all(n.endswith(".template") for n in os.listdir(conf_dir)):
+            return None
+        with open(os.path.join(java_home, "release"), "rb") as f:
+            key.update(f.read())
+        for jar in sorted(os.scandir(os.path.join(spark_home, "jars")), key=lambda e: e.name):
+            st = jar.stat()
+            key.update(f"{jar.name}\0{st.st_size}\0{st.st_mtime_ns}\0".encode())
+    except OSError:
+        return None
+    return os.path.join(cds_dir(), key.hexdigest()[:16] + ".jsa")
+
+
+def _cds_valid(archive: str) -> bool:
+    """Whether ``archive`` is whole: a dynamic archive (by its magic
+    number) of the size its recorder wrote into its lock file after
+    publishing it. The JVM crashes at start (SIGBUS) on a truncated
+    archive."""
+    try:
+        with open(archive + ".lock") as f:
+            size = int(f.read())
+        with open(archive, "rb") as f:
+            return os.fstat(f.fileno()).st_size == size and f.read(4) == _CDS_MAGIC
+    except (OSError, ValueError):
+        return False
+
+
+def _cds_start(archive: str) -> tuple[str, str, int | None] | None:
+    """Plan one driver JVM start with ``archive``: its java options, the
+    empty conf dir to start it on and, when this start records the
+    archive, the descriptor holding the recording lock. None means a
+    normal start."""
+    conf = os.path.join(os.path.dirname(archive), "conf")
+    mapped = f"-XX:SharedArchiveFile={archive} {_CDS_QUIET}", conf, None
+    try:
+        os.makedirs(conf, exist_ok=True)
+        if os.listdir(conf):
+            return None
+        if _cds_valid(archive):
+            return mapped
+        lock = os.open(archive + ".lock", os.O_RDWR | os.O_CREAT, 0o600)
+    except OSError:
+        return None
+    try:
+        fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    except OSError:
+        os.close(lock)  # another process is recording it
+        return None
+    if _cds_valid(archive):  # published since the check above
+        os.close(lock)
+        return mapped
+    for stale in glob.glob(glob.escape(archive) + ".*.tmp"):
+        os.remove(stale)  # left by a recorder killed mid-dump
+    return f"-XX:+RecordDynamicDumpInfo {_CDS_QUIET}", conf, lock
+
+
+def _java_array(gateway, java_class, *items):
+    """A Java array of ``java_class`` holding ``items``."""
+    array = gateway.new_array(java_class, len(items))
+    for i, item in enumerate(items):
+        array[i] = item
+    return array
+
+
+def _cds_dump(archive: str, lock: int) -> None:
+    """Dump the running driver JVM's loaded classes to ``archive``, then
+    release the recording lock. Runs at interpreter exit, before
+    PySpark's own exit handlers, and works after ``spark.stop()``."""
+    jvm, gateway = SparkContext._jvm, SparkContext._gateway
+    tmp = f"{archive}.{os.getpid()}.tmp"
+    try:
+        system = jvm.java.lang.System
+        out = system.out
+        # The JDK reports the dump on Java's System.out, which is the
+        # caller's stdout: send it to stderr for the dump's duration.
+        system.setOut(system.err)
+        try:
+            lang, cls = jvm.java.lang, jvm.java.lang.Class
+            # py4j cannot resolve `invoke` on the platform MBeanServer's
+            # class, so call it through the interface's Method.
+            invoke = cls.forName("javax.management.MBeanServerConnection").getMethod(
+                "invoke", _java_array(gateway, cls, *map(cls.forName, (
+                    "javax.management.ObjectName", "java.lang.String",
+                    "[Ljava.lang.Object;", "[Ljava.lang.String;"))))
+            invoke.invoke(lang.management.ManagementFactory.getPlatformMBeanServer(), _java_array(
+                gateway, lang.Object,
+                jvm.javax.management.ObjectName("com.sun.management:type=DiagnosticCommand"),
+                "vmCds",
+                _java_array(gateway, lang.Object, _java_array(gateway, lang.String, "dynamic_dump", tmp)),
+                _java_array(gateway, lang.String, "[Ljava.lang.String;"),
+            ))
+        finally:
+            system.setOut(out)
+        os.replace(tmp, archive)
+        os.ftruncate(lock, 0)
+        os.pwrite(lock, str(os.path.getsize(archive)).encode(), 0)
+    except Exception as e:  # an exit hook: report, and the next run records again
+        print(f"get_spark: no class-data-sharing archive recorded: {e!r}", file=sys.stderr)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        os.close(lock)
+
+
 def get_spark(app_name: str = "etl_pipeline_sam_gov_spark") -> SparkSession:
+    """The engine's session: ``local[SPARK_GRAFT_CPUS]`` (or
+    ``SPARK_GRAFT_MASTER``) with the confs above, Python daemons started
+    through ``python_launcher`` on local masters.
+
+    When this call launches the driver JVM, the JVM starts from a
+    dynamic class-data-sharing archive of the classes an earlier run
+    loaded (``cds_archive``: one per Java runtime, Spark jar set and conf
+    dir, under ``cds_dir()``). When there is none, this run records one:
+    it takes the key's lock, and an exit hook dumps the archive to a
+    temp file and publishes it with ``os.replace``, about 5 s after the
+    caller's last line. A missing, damaged or locked archive, an
+    unwritable cache or a conf dir with real content means a normal
+    start."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     # local[N, K]: K task-attempt retries before a stage aborts — the
     # robustness-sweep knob (executor loss / speculative retry
@@ -249,6 +409,26 @@ def get_spark(app_name: str = "etl_pipeline_sam_gov_spark") -> SparkSession:
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
+    # PySpark reads PYSPARK_PYTHON once, when the SparkContext starts,
+    # and the JVM it launches inherits it: set it for that moment only.
+    # The launcher is a file on the driver's host, so only local
+    # masters (local-cluster included) use it. SPARK_CONF_DIR below is
+    # scoped the same way.
+    env, archive, lock = {}, None, None
+    if master.startswith("local"):
+        env["PYSPARK_PYTHON"] = python_launcher(os.environ.get("PYSPARK_PYTHON") or "python3")
+    # The driver JVM maps a class-data-sharing archive of the classes
+    # an earlier run loaded, or records one when there is none. Only a
+    # JVM this call launches can: not under spark-submit, not on a
+    # second call. Default (not extra) java options, so
+    # SPARK_GRAFT_EXTRA_CONFS' extraJavaOptions add to them; an
+    # explicit defaultJavaOptions there replaces them.
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        archive = cds_archive()
+        cds = _cds_start(archive) if archive else None
+        if cds:
+            java_options, env["SPARK_CONF_DIR"], lock = cds
+            builder = builder.config("spark.driver.defaultJavaOptions", java_options)
     # Build-time conf overrides for robustness sweeps (speculation and
     # other scheduler confs are frozen at SparkContext startup, so a
     # runtime spark.conf.set cannot exercise them):
@@ -256,19 +436,23 @@ def get_spark(app_name: str = "etl_pipeline_sam_gov_spark") -> SparkSession:
     for pair in filter(None, os.environ.get("SPARK_GRAFT_EXTRA_CONFS", "").split(",")):
         k, _, v = pair.partition("=")
         builder = builder.config(k.strip(), v.strip())
-    # PySpark reads PYSPARK_PYTHON once, when the SparkContext starts,
-    # and the JVM it launches inherits it: set it for that moment only.
-    # The launcher is a file on the driver's host, so only local
-    # masters (local-cluster included) use it.
-    caller = os.environ.get("PYSPARK_PYTHON")
-    if master.startswith("local"):
-        os.environ["PYSPARK_PYTHON"] = python_launcher(caller or "python3")
+    caller = {k: os.environ.get(k) for k in env}
+    os.environ.update(env)
     try:
         spark = builder.getOrCreate()
+    except BaseException:
+        if lock is not None:
+            os.close(lock)
+        raise
     finally:
-        if caller is None:
-            os.environ.pop("PYSPARK_PYTHON", None)
-        else:
-            os.environ["PYSPARK_PYTHON"] = caller
+        for k, v in caller.items():
+            if v is None:
+                os.environ.pop(k, None)
+            else:
+                os.environ[k] = v
+    if lock is not None:
+        # Registered after getOrCreate, so it runs before PySpark's
+        # exit handlers, while the JVM is still up.
+        atexit.register(_cds_dump, archive, lock)
     spark.sparkContext.setLogLevel("WARN")
     return configure_runtime(spark)

@@ -3,6 +3,9 @@ pagination as a real spark.read relation."""
 
 from __future__ import annotations
 
+import os
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from etl_pipeline_sam_gov_spark.sources.paginated import (
@@ -28,6 +31,22 @@ def test_paginated_datasource_reads_all_pages(spark):
     # rows match the deterministic fetcher exactly
     first = df.orderBy("noticeId").first()
     assert tuple(first) == _fetch_page(0)[0]
+
+
+def test_paginated_default_plans_about_one_task_per_core(spark):
+    """Without ``pages_per_task`` a 200-page read plans at most one task
+    per core, and yields the same rows as the old default of 2."""
+    register(spark)
+    default = spark.read.format("paginated_opportunities").option("n_pages", "200").load()
+    assert default.rdd.getNumPartitions() <= (os.cpu_count() or 1)
+    two = (
+        spark.read.format("paginated_opportunities")
+        .option("n_pages", "200")
+        .option("pages_per_task", "2")
+        .load()
+    )
+    assert two.rdd.getNumPartitions() == 100
+    assert Counter(map(tuple, default.collect())) == Counter(map(tuple, two.collect()))
 
 
 def test_paginated_datasource_composes_with_relational_ops(spark):
