@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from etl_pipeline_sam_gov_spark.functions.prefix import range_sliced, running_sums
 from etl_pipeline_sam_gov_spark.registry import query
 from etl_pipeline_sam_gov_spark.slots import slot, slot_persist
 from etl_pipeline_sam_gov_spark.tables import load_tables
@@ -1440,21 +1441,15 @@ def ts_level_shift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("ts").alias("ts_us"),
         F.round(F.col("value") * 100, 0).cast("bigint").alias("y"),
     )
-    n_parts = spark.sparkContext.defaultParallelism
-    # PERSISTED (r8 reuse-off sweep: this query returned 2970 rows vs
-    # the oracle's 2986 with spark.sql.exchange.reuse=false — the
-    # sampled range boundaries differed between the two physical
-    # executions feeding the local windows and the per-slice overlap
-    # carry, so slices mis-joined their frame overlap). The persist
-    # pins ONE execution's pids; see ab_sequential_sprt for the class.
+    # Persisted (functions/prefix.py's slice contract): with exchange
+    # reuse off, the local windows and the per-slice overlap carry saw
+    # different sampled slices and returned 2970 rows vs the oracle's
+    # 2986.
     ranged = slot_persist(
-        spark,
-        "lshift",
-        seq.repartitionByRange(n_parts, "event_type", "ts_us", "event_id")
-        .withColumn("pid", F.spark_partition_id()),
+        spark, "lshift", range_sliced(seq, "event_type", "ts_us", "event_id")
     )
-    w_loc = W.partitionBy("event_type", "pid").orderBy("ts_us", "event_id")
-    w_loc_d = W.partitionBy("event_type", "pid").orderBy(
+    w_loc = W.partitionBy("event_type", "_pid").orderBy("ts_us", "event_id")
+    w_loc_d = W.partitionBy("event_type", "_pid").orderBy(
         F.desc("ts_us"), F.desc("event_id")
     )
     edged = ranged.select(
@@ -1463,7 +1458,7 @@ def ts_level_shift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(w_loc_d).alias("rn_d"),
     )
     own = edged.select(
-        "event_type", "event_id", "ts_us", "y", "pid",
+        "event_type", "event_id", "ts_us", "y", "_pid",
         F.lit(False).alias("ctx"),
     )
     # Context carry across ALL preceding/following slices (ADVICE r05:
@@ -1482,20 +1477,20 @@ def ts_level_shift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     _row = F.struct("ts_us", "event_id", "y")
     sfx = (
         edged.filter(F.col("rn_d") <= SHIFT_K)
-        .groupBy("event_type", "pid")
+        .groupBy("event_type", "_pid")
         .agg(F.sort_array(F.collect_list(_row)).alias("rows"))
     )
-    w_prev = W.partitionBy("event_type").orderBy("pid").rowsBetween(
+    w_prev = W.partitionBy("event_type").orderBy("_pid").rowsBetween(
         W.unboundedPreceding, -1
     )
     fwd = sfx.select(
         "event_type",
-        "pid",
+        "_pid",
         F.flatten(F.collect_list("rows").over(w_prev)).alias("carr"),
     )
     ctx_fwd = fwd.select(
         "event_type",
-        "pid",
+        "_pid",
         F.explode(
             F.when(F.size("carr") <= SHIFT_K, F.col("carr")).otherwise(
                 F.slice("carr", -SHIFT_K, SHIFT_K)
@@ -1506,12 +1501,12 @@ def ts_level_shift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r.event_id").alias("event_id"),
         F.col("r.ts_us").alias("ts_us"),
         F.col("r.y").alias("y"),
-        "pid",
+        "_pid",
         F.lit(True).alias("ctx"),
     )
     pfx = (
         edged.filter(F.col("rn_a") <= SHIFT_K - 1)
-        .groupBy("event_type", "pid")
+        .groupBy("event_type", "_pid")
         .agg(F.sort_array(F.collect_list(_row)).alias("rows"))
     )
     # "All FOLLOWING slices" as a GROWING frame over descending pid —
@@ -1523,17 +1518,17 @@ def ts_level_shift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     # first K−1 global successors are then its last K−1 elements.
     # Context rows are a SET (explode feeds a union the downstream
     # windows re-sort), so the mirrored element order is immaterial.
-    w_next = W.partitionBy("event_type").orderBy(F.desc("pid")).rowsBetween(
+    w_next = W.partitionBy("event_type").orderBy(F.desc("_pid")).rowsBetween(
         W.unboundedPreceding, -1
     )
     bwd = pfx.select(
         "event_type",
-        "pid",
+        "_pid",
         F.flatten(F.collect_list(F.reverse("rows")).over(w_next)).alias("carr"),
     )
     ctx_bwd = bwd.select(
         "event_type",
-        "pid",
+        "_pid",
         F.explode(
             F.when(F.size("carr") <= SHIFT_K - 1, F.col("carr")).otherwise(
                 F.slice("carr", -(SHIFT_K - 1), SHIFT_K - 1)
@@ -1544,11 +1539,11 @@ def ts_level_shift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r.event_id").alias("event_id"),
         F.col("r.ts_us").alias("ts_us"),
         F.col("r.y").alias("y"),
-        "pid",
+        "_pid",
         F.lit(True).alias("ctx"),
     )
     unioned = own.unionByName(ctx_fwd).unionByName(ctx_bwd)
-    order = W.partitionBy("event_type", "pid").orderBy("ts_us", "event_id")
+    order = W.partitionBy("event_type", "_pid").orderBy("ts_us", "event_id")
     wb = order.rowsBetween(-SHIFT_K, -1)
     wa = order.rowsBetween(W.currentRow, SHIFT_K - 1)
     frames = unioned.select(
@@ -3262,45 +3257,39 @@ def ts_exponential_fit_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     both: the adjacent-gap lag runs per (type, slice) on a range
     partition with the previous slice's last timestamp carried across
     the boundary (the caliper-match carry), and the distinct-gap
-    ECDF prefix runs as the two-phase per-(type, slice) sum with
-    broadcast offsets (the Mann-Whitney decomposition). The oracle
+    ECDF prefix is ``functions.prefix.running_sums``. The oracle
     keeps the plain windows — formulation independence."""
     ev = load_tables(spark, sf_dir, ("events",))["events"]
     seq = ev.select(
         "event_type", F.unix_micros("ts").alias("t_us"), "ts", "event_id"
     )
-    n_parts = spark.sparkContext.defaultParallelism
-    # BOTH fan-out relations persisted (r8 reuse-off sweep: the KS
-    # statistic read 2501.8 vs the oracle's 0.012 with exchange reuse
-    # off — ranged feeds the lag windows AND the boundary-carry
-    # aggregation, granged feeds the in-slice ECDF prefix AND the
-    # per-slice subtotals; each pair must see one execution's sampled
-    # boundaries). See ab_sequential_sprt for the class.
+    # BOTH slicings persisted (functions/prefix.py's slice contract):
+    # with exchange reuse off the KS statistic read 2501.8 vs the
+    # oracle's 0.012. ranged feeds the lag windows AND the
+    # boundary-carry aggregation; granged feeds both phases of the ECDF
+    # running sum.
     with slot(spark, "ks") as keep:
-        ranged = keep(
-            seq.repartitionByRange(n_parts, "event_type", "ts", "event_id")
-            .withColumn("pid", F.spark_partition_id())
-        )
-        w_loc = W.partitionBy("event_type", "pid").orderBy("ts", "event_id")
+        ranged = keep(range_sliced(seq, "event_type", "ts", "event_id"))
+        w_loc = W.partitionBy("event_type", "_pid").orderBy("ts", "event_id")
         local = ranged.select(
-            "event_type", "pid", "t_us",
+            "event_type", "_pid", "t_us",
             F.lag("t_us").over(w_loc).alias("prev_us"),
         )
         # Boundary carry: each (type, slice)'s last timestamp, carried to
         # the NEXT slice holding that type (last non-null over preceding
         # slices — the bounded |types| x n_parts edge relation).
-        edges = ranged.groupBy("event_type", "pid").agg(
+        edges = ranged.groupBy("event_type", "_pid").agg(
             F.max("t_us").alias("last_us")
         )
-        w_c = W.partitionBy("event_type").orderBy("pid").rowsBetween(
+        w_c = W.partitionBy("event_type").orderBy("_pid").rowsBetween(
             W.unboundedPreceding, -1
         )
         carry = edges.select(
-            "event_type", "pid",
+            "event_type", "_pid",
             F.last("last_us", ignorenulls=True).over(w_c).alias("carry_us"),
         )
         gaps = (
-            local.join(F.broadcast(carry), ["event_type", "pid"])
+            local.join(F.broadcast(carry), ["event_type", "_pid"])
             .select(
                 "event_type",
                 (
@@ -3316,32 +3305,9 @@ def ts_exponential_fit_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
         byval = gaps.groupBy("event_type", "g").agg(
             F.count(F.lit(1)).cast("bigint").alias("c")
         )
-        # Two-phase distinct-gap prefix: |V| grows with the corpus.
-        # Persisted: second fan-out of the same class (see the ranged
-        # persist above — slot "ks" releases both).
-        granged = keep(
-            byval.repartitionByRange(n_parts, "event_type", "g")
-            .withColumn("gpid", F.spark_partition_id())
-        )
-    w_in = W.partitionBy("event_type", "gpid").orderBy("g").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    gsub = granged.groupBy("event_type", "gpid").agg(F.sum("c").alias("sub"))
-    w_off = W.partitionBy("event_type").orderBy("gpid").rowsBetween(
-        W.unboundedPreceding, -1
-    )
-    goff = gsub.select(
-        "event_type", "gpid",
-        F.coalesce(F.sum("sub").over(w_off), F.lit(0)).alias("off"),
-    )
-    cum = (
-        granged.withColumn("cle_in", F.sum("c").over(w_in))
-        .join(F.broadcast(goff), ["event_type", "gpid"])
-        .select(
-            "event_type", "g",
-            (F.col("off") + F.col("cle_in")).cast("bigint").alias("cle"),
-        )
-    )
+        # Distinct-gap ECDF prefix: |V| grows with the corpus.
+        granged = keep(range_sliced(byval, "event_type", "g"))
+    cum = running_sums(granged, ["event_type"], ["g"], {"cle": F.col("c")})
     j = cum.join(F.broadcast(tot), "event_type")
     fn_hi = F.col("cle").cast("double") / F.col("n")
     fn_lo = (F.col("cle") - 1).cast("double") / F.col("n")

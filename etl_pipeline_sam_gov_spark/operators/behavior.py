@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from etl_pipeline_sam_gov_spark.functions.prefix import range_sliced, running_sums
 from etl_pipeline_sam_gov_spark.registry import query
 from etl_pipeline_sam_gov_spark.slots import slot_persist
 from etl_pipeline_sam_gov_spark.tables import load_tables
@@ -1903,22 +1904,15 @@ def ab_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one shuffle on user_id, one groupBy(v) partial-
     combined collapse, then a prefix sum over distinct values. |V| ≪
     corpus rows but still GROWS with users (cent-grain spend totals are
-    nearly all distinct), so the prefix sum runs as the two-phase
-    range-partitioned decomposition (per-partition running sum +
-    broadcast exclusive offsets — the packed_prev_tokens / lift-table
-    pattern), never one global window task. The offsets window rides
-    the ≤ n_parts-row subtotal relation only. r8: the slice id is a
-    PURE FUNCTION of the value (width_bucket over the broadcast
-    min/max span), not spark_partition_id over a sampled range
-    exchange — the reuse-off sweep showed sampled boundaries can
-    differ between two physical executions of one logical exchange,
-    and this query is a prepared-plan headliner where the persist fix
-    the other five fan-out sites took costs a per-invocation cache
-    cycle. Deterministic slicing needs neither: every plan branch
-    computes the identical pid from the row itself, under any reuse,
-    retry, or replan. Slices are value-equidistant rather than
-    count-balanced — correctness only needs ordered disjoint spans,
-    and the offsets window stays ≤ n_parts+1 rows."""
+    nearly all distinct), so the prefix sum is
+    ``functions.prefix.running_sums``, never one global window task.
+    The slice id is a PURE FUNCTION of the value (width_bucket over
+    the broadcast min/max span) rather than a sampled range slicing:
+    this query is a prepared-plan headliner, where persisting the
+    slices would cost a per-invocation cache cycle. Slices are
+    value-equidistant rather than count-balanced — correctness only
+    needs ordered disjoint spans, and the offsets window stays
+    ≤ n_parts+1 rows."""
     from etl_pipeline_sam_gov_spark.operators.dedup import _spark_hash60
 
     ev = load_tables(spark, sf_dir, ("events",))["events"]
@@ -1936,39 +1930,25 @@ def ab_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("ceq"),
         F.sum((F.col("arm") == 0).cast("bigint")).alias("ca"),
     )
-    n_parts = spark.sparkContext.defaultParallelism
-    # Deterministic slicing (r8 reuse-off sweep class, see
-    # ab_sequential_sprt and the docstring): pid = width_bucket of v
-    # over the broadcast min/max span — a pure row function, so the
-    # in-slice prefix window and the per-slice subtotals agree on
-    # slices under ANY reuse/retry/replan, with no persist and no
-    # sampled exchange. byval fans out to the span aggregate too, but
-    # it is fully deterministic, so independent re-executions agree.
+    # _pid = width_bucket of v over the broadcast min/max span: a pure
+    # row function (functions/prefix.py's slice contract), so the
+    # running sums need no persist and no sampled exchange. byval fans
+    # out to the span aggregate too, but it is fully deterministic, so
+    # independent re-executions agree.
     span = byval.agg(
         F.min("v").alias("vlo"), F.max("v").alias("vhi")
     )
+    n_parts = spark.sparkContext.defaultParallelism
     ranged = byval.crossJoin(F.broadcast(span)).select(
         "v",
         "ceq",
         "ca",
         F.width_bucket(
             "v", "vlo", F.col("vhi") + 1, F.lit(n_parts)
-        ).alias("pid"),
+        ).alias("_pid"),
     )
-    w_in = W.partitionBy("pid").orderBy("v").rowsBetween(
-        W.unboundedPreceding, -1
-    )
-    subtot = ranged.groupBy("pid").agg(F.sum("ceq").alias("sub"))
-    w_off = W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = subtot.select(
-        "pid", F.coalesce(F.sum("sub").over(w_off), F.lit(0)).alias("off")
-    )
-    ranked = (
-        ranged.withColumn(
-            "clt_in", F.coalesce(F.sum("ceq").over(w_in), F.lit(0))
-        )
-        .join(F.broadcast(offsets), "pid")
-        .select("ceq", "ca", (F.col("off") + F.col("clt_in")).alias("clt"))
+    ranked = running_sums(ranged, [], ["v"], {"cle": F.col("ceq")}).select(
+        "ceq", "ca", (F.col("cle") - F.col("ceq")).alias("clt")
     )
     sums = ranked.agg(
         F.sum(
@@ -2350,13 +2330,12 @@ def ab_sequential_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a sequential test is an inherently ordered scan — but
     PARTITION BY arm alone puts HALF THE CORPUS in one window task
     (two arms; measured 6.25x super-linear at the 16x stress step).
-    The per-arm prefix sums run as the two-phase range-partition
-    decomposition instead: range-split on (arm, ts, event_id), rank
-    and cumsum within each (arm, slice) in parallel, prefix the
-    per-slice (row count, success count) subtotals over the
-    2·n_parts-row subtotal relation, broadcast the offsets back. The
-    first-crossing lookup is then a partial-combined MIN per arm plus
-    a broadcast 2-row join — never a driver-side loop."""
+    The per-arm n (a running sum of 1) and k run as
+    ``functions.prefix.running_sums`` over (arm, ts, event_id)
+    slices instead: one task per slice, the offsets over the
+    2·n_parts-row subtotal relation. The first-crossing lookup is
+    then one partial-combined aggregate per arm — never a driver-side
+    loop."""
     ev = load_tables(spark, sf_dir, ("events",))["events"]
     from etl_pipeline_sam_gov_spark.operators.dedup import _spark_hash60
 
@@ -2368,50 +2347,19 @@ def ab_sequential_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "event_id",
     )
-    n_parts = spark.sparkContext.defaultParallelism
-    # PERSISTED, not merely shared (r8 exchange-reuse-off sweep):
-    # repartitionByRange samples its boundaries with an rdd.id-seeded
-    # sampler, so two physical executions of this exchange can split
-    # differently — and `ranged` feeds BOTH the local rank/cumsum and
-    # the per-slice subtotals, which must agree on pid or the offsets
-    # misalign (measured: n_total off by ±10 with
-    # spark.sql.exchange.reuse=false). ReuseExchange normally pins the
-    # two reads to one execution; the persist makes the consistency a
-    # property of the PLAN rather than of a physical-dedup optimization
-    # (tests/test_reuse_independence.py).
+    # Persisted: the slices feed both phases of the running sums
+    # (functions/prefix.py's slice contract).
     ranged = slot_persist(
-        spark,
-        "sprt",
-        tagged.repartitionByRange(n_parts, "arm", "ts", "event_id")
-        .withColumn("pid", F.spark_partition_id()),
-    )
-    w_rank = W.partitionBy("arm", "pid").orderBy("ts", "event_id")
-    w_in = w_rank.rowsBetween(W.unboundedPreceding, W.currentRow)
-    local = ranged.select(
-        "arm",
-        "pid",
-        F.row_number().over(w_rank).alias("rn_l"),
-        F.sum("succ").over(w_in).alias("k_l"),
-    )
-    sub = ranged.groupBy("arm", "pid").agg(
-        F.count(F.lit(1)).alias("n_s"), F.sum("succ").alias("k_s")
-    )
-    w_off = W.partitionBy("arm").orderBy("pid").rowsBetween(
-        W.unboundedPreceding, -1
-    )
-    offs = sub.select(
-        "arm",
-        "pid",
-        F.coalesce(F.sum("n_s").over(w_off), F.lit(0)).alias("off_n"),
-        F.coalesce(F.sum("k_s").over(w_off), F.lit(0)).alias("off_k"),
+        spark, "sprt", range_sliced(tagged, "arm", "ts", "event_id")
     )
     scored = (
-        local.join(F.broadcast(offs), ["arm", "pid"])
-        .select(
-            "arm",
-            (F.col("rn_l") + F.col("off_n")).alias("rn"),
-            (F.col("k_l") + F.col("off_k")).cast("bigint").alias("k"),
+        running_sums(
+            ranged,
+            ["arm"],
+            ["ts", "event_id"],
+            {"rn": F.lit(1), "k": F.col("succ")},
         )
+        .select("arm", "rn", "k")
         .withColumn(
             "llr",
             F.col("k").cast("double") * F.lit(SPRT_C1)
@@ -2577,24 +2525,15 @@ def ab_propensity_caliper_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # columns are NULL; the forward walk is the reversed-sort running
     # frame (the resample_interpolate_hourly move). The oracle keeps
     # the textbook frames — semantics are identical.
-    # PERSISTED (r8 reuse-off sweep class, see ab_sequential_sprt):
-    # `ranged` feeds both the directional edge-control windows and the
-    # per-slice extreme aggregation — pid consistency across the two
-    # reads must not depend on ReuseExchange deduping the sampled
-    # range exchange.
-    ranged = slot_persist(
-        spark,
-        "caliper",
-        lab.repartitionByRange(
-            spark.sparkContext.defaultParallelism, "bp", "user_id"
-        )
-        .withColumn("pid", F.spark_partition_id()),
-    )
-    w_prev = W.partitionBy("pid").orderBy("bp", "user_id").rowsBetween(
+    # Persisted: `ranged` feeds both the directional edge-control
+    # windows and the per-slice extreme aggregation, which must agree
+    # on _pid (functions/prefix.py's slice contract).
+    ranged = slot_persist(spark, "caliper", range_sliced(lab, "bp", "user_id"))
+    w_prev = W.partitionBy("_pid").orderBy("bp", "user_id").rowsBetween(
         W.unboundedPreceding, W.currentRow
     )
     w_next = (
-        W.partitionBy("pid")
+        W.partitionBy("_pid")
         .orderBy(F.col("bp").desc(), F.col("user_id").desc())
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
@@ -2605,7 +2544,7 @@ def ab_propensity_caliper_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         ~F.col("treated"), F.struct("bp", "user_id", "spend")
     )
     walk_local = ranged.select(
-        "pid",
+        "_pid",
         "treated",
         "bp",
         "spend",
@@ -2615,21 +2554,21 @@ def ab_propensity_caliper_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Boundary carry: per slice, its extreme controls; prefix/suffix
     # extremes over the ≤ n_parts-row slice relation give each slice
     # the nearest control in every EARLIER (resp. LATER) slice.
-    edges = ranged.groupBy("pid").agg(
+    edges = ranged.groupBy("_pid").agg(
         F.max(ctrl).alias("last_c"), F.min(ctrl).alias("first_c")
     )
     # Suffix extreme as the reversed-sort RUNNING frame (the repo-wide
     # rule: [1 FOLLOWING, unbounded] frames re-aggregate per row).
-    w_before = W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)
-    w_after = W.orderBy(F.col("pid").desc()).rowsBetween(
+    w_before = W.orderBy("_pid").rowsBetween(W.unboundedPreceding, -1)
+    w_after = W.orderBy(F.col("_pid").desc()).rowsBetween(
         W.unboundedPreceding, -1
     )
     carry = edges.select(
-        "pid",
+        "_pid",
         F.max("last_c").over(w_before).alias("cprev"),
         F.min("first_c").over(w_after).alias("cnext"),
     )
-    walk = walk_local.join(F.broadcast(carry), "pid").select(
+    walk = walk_local.join(F.broadcast(carry), "_pid").select(
         "treated",
         "bp",
         "spend",

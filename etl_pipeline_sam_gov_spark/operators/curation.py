@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from etl_pipeline_sam_gov_spark.functions.prefix import range_sliced, running_sums
 from etl_pipeline_sam_gov_spark.operators.dedup import (
     _spark_hash60,
     _sql_hash60,
@@ -31,75 +32,27 @@ SPLIT_TRAIN, SPLIT_VAL = 90, 95
 #: shard capacity in whitespace tokens.
 SHARD_TOKENS = 1000
 
-#: The currently-persisted range-split relation of packed_prev_tokens
-#: lives under the session's ("pack", group-cols) slot
-#: (slots.slot_persist), released on the next same-shape call.
-
-
 def packed_prev_tokens(
     toks: DataFrame, group_cols: list[str], n_parts: int | None = None
 ) -> DataFrame:
     """Distributed per-group running token total (exclusive of the
-    current row), as a two-phase prefix sum.
+    current row): ``functions.prefix.running_sums`` over (group…,
+    doc_id) slices. doc_id is a total order within each group, so the
+    DuckDB oracle's single window gives the same numbers.
 
-    A plain ``SUM() OVER (PARTITION BY group ORDER BY doc_id)`` puts an
-    entire group in ONE task — with few languages and 100 TB of docs
-    that is a straggler by construction (VERDICT r2 "What's wrong" #3).
-    Instead:
-
-    1. Range-partition by (group…, doc_id): each group's doc_id order is
-       preserved *across* partitions, but a huge group now spans many
-       partitions of bounded size.
-    2. Phase 1 — per-(partition, group) subtotals: ≤ n_parts × |groups|
-       rows, a map-side-combined aggregation.
-    3. Offsets: exclusive prefix sum of the subtotals in partition-id
-       order — a window over the tiny subtotal relation only.
-    4. Phase 2 — within-partition running sum (window keyed by
-       (partition-id, group…), so max task size is one range split, not
-       one group) + broadcast-join the offsets back.
-
-    Same arithmetic as the single window — doc_id is a total order
-    within each group either way — so the DuckDB oracle is unchanged.
-
-    The range-partitioned relation is persisted because both phases must
-    observe the SAME partition assignment; a narrow (doc_id, group,
-    n_tokens) projection, so the cache is a fraction of corpus size (at
-    real scale: checkpoint to cluster storage instead).
+    The sliced relation is persisted in the session's ("pack",
+    group-cols) slot, released on the next same-shape call: a narrow
+    (doc_id, group, n_tokens) projection, so the cache is a fraction of
+    corpus size (at real scale: checkpoint to cluster storage instead).
     """
-    spark = toks.sparkSession
-    if n_parts is None:
-        n_parts = spark.sparkContext.defaultParallelism
-    # Bound the cache: repeated invocations (bench loops, amplification
-    # sweeps) would otherwise pin every past run's projection in storage
-    # memory forever. One slot per (session, grouping): the previous
-    # same-shape relation is released when a new one is built.
     stamped = slot_persist(
-        spark,
+        toks.sparkSession,
         ("pack", tuple(group_cols)),
-        toks.repartitionByRange(n_parts, *group_cols, "doc_id").withColumn(
-            "_pid", F.spark_partition_id()
-        ),
+        range_sliced(toks, *group_cols, "doc_id", n_parts=n_parts),
     )
-    subtot = stamped.groupBy("_pid", *group_cols).agg(F.sum("n_tokens").alias("_sub"))
-    w_off = (
-        W.partitionBy(*group_cols)
-        .orderBy("_pid")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    offsets = subtot.withColumn(
-        "_off", F.sum("_sub").over(w_off) - F.col("_sub")
-    ).drop("_sub")
-    w_in = (
-        W.partitionBy("_pid", *group_cols)
-        .orderBy("doc_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return (
-        stamped.withColumn("_run", F.sum("n_tokens").over(w_in))
-        .join(F.broadcast(offsets), ["_pid", *group_cols])
-        .withColumn("prev_tokens", F.col("_off") + F.col("_run") - F.col("n_tokens"))
-        .drop("_pid", "_run", "_off")
-    )
+    return running_sums(
+        stamped, group_cols, ["doc_id"], {"prev_tokens": F.col("n_tokens")}
+    ).withColumn("prev_tokens", F.col("prev_tokens") - F.col("n_tokens"))
 
 
 @query(

@@ -27,6 +27,7 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from etl_pipeline_sam_gov_spark.functions.prefix import range_sliced, running_sums
 from etl_pipeline_sam_gov_spark.registry import query
 from etl_pipeline_sam_gov_spark.slots import slot, slot_persist
 from etl_pipeline_sam_gov_spark.tables import load_tables
@@ -1860,7 +1861,7 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             # rows arrive sorted by (source, score, doc_id) within the
             # partition; groupby preserves the order inside each group
             blocks = _pool([[int(y), 1] for y in g["label"]])
-            out = g[["doc_id", "source", "score", "label", "pid"]].copy()
+            out = g[["doc_id", "source", "score", "label", "_pid"]].copy()
             out["blk"] = np.repeat(
                 np.arange(len(blocks), dtype="int64"),
                 [c for _, c in blocks],
@@ -1871,9 +1872,9 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     def pav_merge(pdf: pd.DataFrame) -> pd.DataFrame:
         """Level 2: weighted PAV per source over the ordered block
         sequence. Merges only ever POOL blocks, so every level-1 block
-        maps to exactly one final block — fitted is a per-(pid, blk)
+        maps to exactly one final block — fitted is a per-(_pid, blk)
         lookup."""
-        pdf = pdf.sort_values(["pid", "blk"]).reset_index(drop=True)
+        pdf = pdf.sort_values(["_pid", "blk"]).reset_index(drop=True)
         blocks = _pool([[int(s), int(c)] for s, c in zip(pdf["s"], pdf["c"])])
         fitted: list[float] = []
         for s, c in blocks:
@@ -1887,15 +1888,12 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
                 n_members += int(pdf["c"].iloc[i])
                 i += 1
                 fitted.append(s / c)
-        out = pdf[["source", "pid", "blk"]].copy()
+        out = pdf[["source", "_pid", "blk"]].copy()
         out["fitted"] = fitted
         return out
 
-    n_parts = spark.sparkContext.defaultParallelism
-    ranged = (
-        scored.repartitionByRange(n_parts, "source", "score", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .sortWithinPartitions("source", "score", "doc_id")
+    ranged = range_sliced(scored, "source", "score", "doc_id").sortWithinPartitions(
+        "source", "score", "doc_id"
     )
     row_schema = T.StructType(
         [
@@ -1903,7 +1901,7 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("source", T.StringType()),
             T.StructField("score", T.LongType()),
             T.StructField("label", T.LongType()),
-            T.StructField("pid", T.IntegerType()),
+            T.StructField("_pid", T.IntegerType()),
             T.StructField("blk", T.LongType()),
         ]
     )
@@ -1913,19 +1911,19 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # release the previous invocation's relation BEFORE persisting the
     # new one (CacheManager matches by logical-plan equality).
     rows = slot_persist(spark, "iso", ranged.mapInPandas(pav_slices, row_schema))
-    blocks = rows.groupBy("source", "pid", "blk").agg(
+    blocks = rows.groupBy("source", "_pid", "blk").agg(
         F.sum("label").alias("s"), F.count(F.lit(1)).alias("c")
     )
     merge_schema = T.StructType(
         [
             T.StructField("source", T.StringType()),
-            T.StructField("pid", T.IntegerType()),
+            T.StructField("_pid", T.IntegerType()),
             T.StructField("blk", T.LongType()),
             T.StructField("fitted", T.DoubleType()),
         ]
     )
     merged = blocks.groupBy("source").applyInPandas(pav_merge, merge_schema)
-    return rows.join(F.broadcast(merged), ["source", "pid", "blk"]).select(
+    return rows.join(F.broadcast(merged), ["source", "_pid", "blk"]).select(
         "doc_id",
         "source",
         "score",
@@ -1939,11 +1937,6 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 LIFT_BUCKETS = 10
-
-#: Range partitions for the distributed-rank decomposition — matches
-#: the session's shuffle parallelism; at cluster scale set this to the
-#: cluster's task parallelism (rank correctness never depends on it).
-LIFT_RANK_PARTS = 32
 
 
 def _lift_oracle() -> str:
@@ -1995,17 +1988,14 @@ def ml_lift_gain_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the naive plan (a global no-partition ntile window)
     funnels the corpus through ONE partition — the classic 100×-scale
     killer. This implementation computes the SAME ntile buckets with
-    the standard DISTRIBUTED RANKING decomposition instead: range-
-    repartition on the sort key, row_number within each partition
-    (window partitioned by spark_partition_id — every partition ranks
-    independently in parallel), prefix-sum the per-partition counts on
-    a #partitions-row relation, and broadcast the offsets back. The
-    global rank is exact for ANY ordered disjoint partitioning, so the
-    sampled range boundaries never affect the answer; the decile then
-    falls out of integer arithmetic on (rank, n, k) — the same
+    the DISTRIBUTED RANKING decomposition instead: the global rank is
+    the running sum of 1 in (score DESC, doc_id) order,
+    ``functions.prefix.running_sums`` over range slices of that order.
+    The rank is exact for ANY ordered disjoint slicing, so the sampled
+    range boundaries never affect the answer; the decile then falls
+    out of integer arithmetic on (rank, n, k) — the same
     first-(n mod k)-buckets-get-one-extra rule ntile defines. No
-    single-partition exchange anywhere; the only whole-relation
-    shuffles are the range partition and one hash partition on pid."""
+    single-partition exchange of rows anywhere."""
     from etl_pipeline_sam_gov_spark.operators.dedup import spread_docs
     from etl_pipeline_sam_gov_spark.operators.text import quality_logit
 
@@ -2015,39 +2005,13 @@ def ml_lift_gain_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         quality_logit().alias("score"),
         (F.col("lang") == "en").cast("int").alias("y"),
     )
-    # Distributed exact rank: ordered disjoint ranges -> local rank ->
-    # global offset. repartitionByRange samples boundaries, and the
-    # final rank is boundary-independent (any ordered split works) —
-    # but only if the local ranks and the per-slice counts see the
-    # SAME boundaries, so the fan-out is PERSISTED (r8 reuse-off sweep
-    # class, see ab_sequential_sprt: the sampler is rdd.id-seeded, two
-    # physical executions of the exchange can split differently).
-    ranged = slot_persist(
-        spark,
-        "lift",
-        scored.repartitionByRange(
-            LIFT_RANK_PARTS, F.desc("score"), F.asc("doc_id")
-        )
-        .withColumn("pid", F.spark_partition_id()),
-    )
-    w_part = W.partitionBy("pid").orderBy(F.desc("score"), "doc_id")
-    local = ranged.withColumn("rn", F.row_number().over(w_part))
-    # Per-partition counts: a <= LIFT_RANK_PARTS-row relation; the
-    # no-partition window below it rides THAT bounded relation (the
-    # plan-gate-sanctioned shape), never the corpus.
-    counts = ranged.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt"))
-    w_off = W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = counts.select(
-        "pid",
-        F.coalesce(F.sum("cnt").over(w_off), F.lit(0)).alias("off"),
-        F.sum("cnt").over(
-            W.orderBy("pid").rangeBetween(
-                W.unboundedPreceding, W.unboundedFollowing
-            )
-        ).alias("n_total"),
-    )
-    ranked = local.join(F.broadcast(offsets), "pid").withColumn(
-        "rank", F.col("off") + F.col("rn")
+    # Persisted: the slices feed both phases of the rank's running sum
+    # and the row count (functions/prefix.py's slice contract).
+    order = [F.desc("score"), F.asc("doc_id")]
+    ranged = slot_persist(spark, "lift", range_sliced(scored, *order))
+    n_total = ranged.agg(F.count(F.lit(1)).alias("n_total"))
+    ranked = running_sums(ranged, [], order, {"rank": F.lit(1)}).crossJoin(
+        F.broadcast(n_total)
     )
     # ntile(k) as integer arithmetic on the exact global rank: with
     # q = n div k, rem = n mod k, the first rem buckets have q+1 rows.

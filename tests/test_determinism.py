@@ -137,3 +137,66 @@ def test_prefix_sum_invariant_under_range_partition_count(spark, sf_dir):
         )
     assert outs[0] == outs[1] == outs[2]
     assert len(outs[0]) > 0
+
+
+def _running_sums_fixture(spark):
+    """One dominant group ("a", 48 rows), two small ones, ties on t
+    broken by k descending, negative and decimal summands."""
+    from pyspark.sql import functions as F
+
+    rows = (
+        [("a", i // 3, i, (i * 7) % 11 - 5) for i in range(48)]
+        + [("b", i, 100 + i, i - 3) for i in range(5)]
+        + [("c", 4, 200, 9)]
+    )
+    return spark.createDataFrame(rows, "g string, t int, k int, x int").withColumn(
+        "d", (F.col("x") / 4).cast("decimal(18,2)")
+    )
+
+
+@pytest.mark.parametrize("by", [[], ["g"]])
+def test_running_sums_equal_plain_window(spark, by):
+    """functions.prefix.running_sums equals SUM() OVER (PARTITION BY by
+    ORDER BY t, k DESC ROWS UNBOUNDED PRECEDING) for any slicing: one
+    slice, three, the default, more slices than rows (empty slices),
+    and a _pid that is a pure function of the row."""
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
+    from etl_pipeline_sam_gov_spark.functions.prefix import range_sliced, running_sums
+
+    df = _running_sums_fixture(spark)
+    order = [F.col("t"), F.desc("k")]
+    sums = {"n": F.lit(1), "sx": F.col("x"), "sd": F.col("d")}
+    w = W.partitionBy(*by).orderBy(*order).rowsBetween(
+        W.unboundedPreceding, W.currentRow
+    )
+    plain = df.select("*", *(F.sum(e).over(w).alias(n) for n, e in sums.items()))
+    expected = sorted(tuple(r) for r in plain.collect())
+    slicings = [
+        range_sliced(df, *by, *order, n_parts=n) for n in (1, 3, None, 4 * df.count())
+    ]
+    slicings.append(df.withColumn("_pid", (F.col("t") * 3).cast("int")))
+    for sliced in slicings:
+        out = running_sums(sliced, by, order, sums)
+        assert out.columns == plain.columns
+        assert sorted(tuple(r) for r in out.collect()) == expected
+
+
+def test_only_prefix_slices_by_range():
+    """Range slicing and slice-id stamping live in functions/prefix.py
+    alone, so every running sum and range fan-out keeps its one slice
+    contract (persist the slices, or compute _pid from the row)."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "etl_pipeline_sam_gov_spark"
+    banned = re.compile(r"repartitionByRange|spark_partition_id")
+    hits = [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.relative_to(pkg).as_posix() != "functions/prefix.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if banned.search(line)
+    ]
+    assert not hits, "\n".join(hits)

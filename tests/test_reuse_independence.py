@@ -1,19 +1,20 @@
 """Results must not lean on ReuseExchange/ReuseSubquery (r8 lane).
 
-repartitionByRange samples its partition boundaries with an
-rdd.id-seeded sampler, so two physical executions of the same logical
-range exchange can split differently. Any query that reads a
-`spark_partition_id()`-stamped range relation from TWO plan branches
-(local ranks + per-slice subtotals) therefore only agreed with its
-oracle because ReuseExchange deduplicated the two executions into one
-— a physical-plan optimization, not a guarantee. The r8 sweep with
+A range slicing samples its partition boundaries with an rdd.id-seeded
+sampler, so two physical executions of the same logical range exchange
+can split differently. Any query that reads a `_pid`-stamped range
+relation from TWO plan branches (local ranks + per-slice subtotals)
+therefore only agreed with its oracle because ReuseExchange
+deduplicated the two executions into one — a physical-plan
+optimization, not a guarantee. The r8 sweep with
 `spark.sql.exchange.reuse=false` caught three real mismatches
 (ab_sequential_sprt ±10 on n_total, ts_level_shift_detect 16 rows
 short, ts_exponential_fit_ks KS statistic 2501 vs 0.012) and three
-latent twins of the same shape. All six now persist the stamped
-relation, which pins ONE execution's boundaries regardless of reuse;
-these tests run each against its oracle with reuse disabled so the
-class cannot recur.
+latent twins of the same shape. All eight queries below either persist
+the stamped relation, which pins ONE execution's boundaries regardless
+of reuse, or stamp `_pid` as a pure function of the row
+(functions/prefix.py states the contract); these tests run each
+against its oracle with reuse disabled so the class cannot recur.
 """
 
 from __future__ import annotations
@@ -31,6 +32,8 @@ FIXED = [
     "ts_level_shift_detect",
     "ts_exponential_fit_ks",
     "ml_lift_gain_table",
+    "curate_pack_token_shards",
+    "pipeline_training_corpus",
 ]
 
 
