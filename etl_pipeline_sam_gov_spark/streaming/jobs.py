@@ -20,6 +20,16 @@ drop anything in a replay of historical data (all data arrives before
 the watermark advances past it) — exactly the semantics a backfill run
 would have in production.
 
+Every stream is read by ``read_stream`` into
+``session.stream_session(spark)``: one child of the caller's session
+with its own SQL conf, at width ``min(session.STREAM_WIDTH, caller's
+width)``. No stream writes a conf on the caller's session, and
+``run_to_memory`` leaves no view in either. Batch inputs
+(``load_tables`` dims) stay in the caller's session; both share one
+SparkContext and cache. RocksDB state is a deployment conf:
+``SPARK_GRAFT_EXTRA_CONFS=spark.sql.streaming.stateStore.providerClass=
+org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``.
+
 Scale notes: event-time windowed aggs keep O(open windows × groups)
 state per partition; the watermark bounds state size. The snapshot
 sink pattern (foreachBatch + overwrite) is the streaming version of
@@ -38,7 +48,7 @@ from pyspark.sql import types as T
 
 from etl_pipeline_sam_gov_spark.operators import curation as _cur
 from etl_pipeline_sam_gov_spark.registry import query
-from etl_pipeline_sam_gov_spark.session import configure_runtime
+from etl_pipeline_sam_gov_spark.session import stream_session
 from etl_pipeline_sam_gov_spark.slots import session_slots
 
 _counter = itertools.count()
@@ -76,15 +86,19 @@ def _stream_dir_for(path: str) -> str:
     return d
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``readStream`` over the events parquet (file-source streaming —
-    the same plan a kafka source would feed). Normalizes the
-    nanos-as-long timestamp exactly like tables.load_tables."""
-    configure_runtime(spark)
-    path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema  # pre-normalization schema
-    stream = spark.readStream.schema(schema).parquet(_stream_dir_for(path))
-    if dict(stream.dtypes)["ts"] == "bigint":
+def read_stream(
+    spark: SparkSession, sf_dir: str, table: str = "events", landing: str | None = None
+) -> DataFrame:
+    """``readStream`` over ``sf_dir``'s ``table`` parquet in
+    ``stream_session(spark)`` (file-source streaming — the same plan a
+    kafka source would feed), listing ``landing`` instead of the table
+    when given. Normalizes the nanos-as-long timestamp exactly like
+    tables.load_tables."""
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    child = stream_session(spark)
+    schema = child.read.parquet(path).schema  # pre-normalization schema
+    stream = child.readStream.schema(schema).parquet(landing or _stream_dir_for(path))
+    if dict(stream.dtypes).get("ts") == "bigint":
         stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return _denaive(stream)
 
@@ -99,71 +113,32 @@ def _denaive(stream: DataFrame) -> DataFrame:
     return stream
 
 
-#: State-store backend per SPARK_GRAFT_STATE_STORE: the default HDFS
-#: provider keeps all state on the JVM heap (fine for replay-scale
-#: fixtures); "rocksdb" switches to the spillable RocksDB provider —
-#: the 100 TB choice, where per-partition state outgrows executor heap
-#: and incremental checkpointing beats full-snapshot uploads.
-_STATE_PROVIDERS = {
-    "rocksdb": (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    ),
-}
-
-
-def run_to_memory(
-    agg: DataFrame, mode: str = "complete", shuffle_partitions: int | None = None
-) -> DataFrame:
-    """Drive a streaming aggregation to completion against a memory
-    sink; returns the final result table.
-
-    ``shuffle_partitions`` scopes ``spark.sql.shuffle.partitions`` to
-    this query: a stateful operator materializes one state-store
-    instance (and, for Pandas-stateful ops, one Python worker round)
-    PER shuffle partition PER micro-batch, so the session's scan-sized
-    default is pure overhead for replay-scale state. The count is
-    frozen into the query's state layout at start — results are
-    partition-count-independent; on a live deployment size it to state
-    volume, not scan volume.
-
-    ``SPARK_GRAFT_STATE_STORE=rocksdb`` switches every stateful job to
-    the RocksDB state store (results identical — the provider is a
-    storage backend, not a semantics change; tests/test_streaming.py
-    pins that)."""
+def run_to_memory(agg: DataFrame, mode: str = "complete") -> DataFrame:
+    """Drive a streaming query to completion against a memory sink, in
+    ``agg``'s own session (the stream session, at its width, for a
+    ``read_stream`` stream); returns the final result table. The sink's
+    view is dropped once ``table`` has resolved it, so the session does
+    not hold every call's rows for its life: the returned DataFrame is
+    already analysed, so it still reads the sink, whose rows live as
+    long as a DataFrame over them."""
     spark = agg.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    provider = _STATE_PROVIDERS.get(os.environ.get("SPARK_GRAFT_STATE_STORE", ""))
-    _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = None
-    if provider:
-        prev_provider = spark.conf.get(_PROVIDER_KEY, None)
-        spark.conf.set(_PROVIDER_KEY, provider)
     name = f"stream_out_{next(_counter)}"
+    q = (
+        agg.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
     try:
-        q = (
-            agg.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination()
+        q.processAllAvailable()
     finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if provider:  # scope the provider to this query like the partitions
-            if prev_provider is None:
-                spark.conf.unset(_PROVIDER_KEY)
-            else:
-                spark.conf.set(_PROVIDER_KEY, prev_provider)
-    return spark.table(name)
+        q.stop()
+        q.awaitTermination()
+    try:
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 @query(
@@ -181,7 +156,7 @@ def stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time window × event_type, computed by the
     streaming runtime (watermarked, complete mode) and checked against
     the batch-equivalent oracle."""
-    events = read_events_stream(spark, sf_dir)
+    events = read_stream(spark, sf_dir)
     agg = (
         events.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
@@ -216,7 +191,7 @@ def stream_sliding_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding window (1 h length, 15 min slide): each event lands in 4
     overlapping windows. Oracle replays the window assignment rule
     (aligned origin) relationally."""
-    events = read_events_stream(spark, sf_dir)
+    events = read_stream(spark, sf_dir)
     agg = (
         events.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour", "15 minutes").alias("win"))
@@ -265,7 +240,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """session_window(ts, 30 min) per user in the streaming runtime —
     stateful gap-based session assignment. Oracle = the batch
     sessionization (operators.analytics) reduced to (user, start, n)."""
-    events = read_events_stream(spark, sf_dir)
+    events = read_stream(spark, sf_dir)
     agg = (
         events.withWatermark("ts", "1 hour")
         .groupBy(F.session_window("ts", "30 minutes").alias("win"), "user_id")
@@ -287,7 +262,7 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming dedup (dropDuplicatesWithinWatermark) on
     (user_id, event_type) — state is bounded by the watermark instead
     of growing forever. Output keys equal batch DISTINCT."""
-    events = read_events_stream(spark, sf_dir)
+    events = read_stream(spark, sf_dir)
     deduped = (
         events.withWatermark("ts", "1 hour")
         .select("user_id", "event_type", "ts")
@@ -341,10 +316,8 @@ def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     MULTIPLE micro-batches and checks the final state per user is
     unchanged — the incremental path, not just the one-shot replay.)
     """
-    events = read_events_stream(spark, sf_dir)
-    out = run_to_memory(
-        stateful_user_totals(events), mode="update", shuffle_partitions=8
-    )
+    events = read_stream(spark, sf_dir)
+    out = run_to_memory(stateful_user_totals(events), mode="update")
     # one availableNow replay = one batch = one update row per user; a
     # multi-batch run would emit one row per (user, batch) and the final
     # row per user would be the comparable value.
@@ -405,7 +378,7 @@ def stream_stream_join_purchase_click(spark: SparkSession, sf_dir: str) -> DataF
     bound Spark (correctly) refuses the join as unbounded-state. The
     historical replay equals the batch interval self-join the oracle
     runs."""
-    events = read_events_stream(spark, sf_dir)
+    events = read_stream(spark, sf_dir)
     purchases = (
         events.filter(F.col("event_type") == "purchase")
         .select(
@@ -430,22 +403,13 @@ def stream_stream_join_purchase_click(spark: SparkSession, sf_dir: str) -> DataF
         & (F.col("c_ts") <= F.col("p_ts"))
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTES")),
     )
-    out = run_to_memory(joined, mode="append", shuffle_partitions=8)
+    out = run_to_memory(joined, mode="append")
     return out.select(
         "purchase_id",
         "click_id",
         F.col("p_user").alias("user_id"),
         (F.unix_timestamp("p_ts") - F.unix_timestamp("c_ts")).cast("bigint").alias("lag_s"),
     )
-
-
-def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``readStream`` over the documents parquet — the landing-zone
-    stream a continuously-ingesting corpus pipeline tails."""
-    configure_runtime(spark)
-    path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(path).schema
-    return _denaive(spark.readStream.schema(schema).parquet(_stream_dir_for(path)))
 
 
 @query(
@@ -490,7 +454,7 @@ def stream_curation_corpus_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     One stateful aggregation in complete mode; at 100 TB the counters
     are the corpus-health dashboard a continuously-ingesting pipeline
     watches, and the state is |langs × splits| rows — constant."""
-    docs = read_documents_stream(spark, sf_dir)
+    docs = read_stream(spark, sf_dir, "documents")
     sp = _cur.curated_split_docs(docs)
     agg = sp.groupBy("lang", "split").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -522,7 +486,7 @@ def stream_static_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     state)."""
     from etl_pipeline_sam_gov_spark.tables import load_tables as _lt
 
-    events = read_events_stream(spark, sf_dir)
+    events = read_stream(spark, sf_dir)
     cust = _lt(spark, sf_dir, ("customer",))["customer"].select(
         "c_custkey", "c_mktsegment"
     )
@@ -578,7 +542,7 @@ def stream_ewma_user_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-matches the batch recursive-CTE oracle."""
     from etl_pipeline_sam_gov_spark.functions.udfs import EWMA_ALPHA
 
-    events = read_events_stream(spark, sf_dir)
+    events = read_stream(spark, sf_dir)
 
     def update_ewma(key, pdfs, state):
         import pandas as pd
@@ -616,7 +580,7 @@ def stream_ewma_user_values(spark: SparkSession, sf_dir: str) -> DataFrame:
             GroupStateTimeout.NoTimeout,
         )
     )
-    out = run_to_memory(smoothed, mode="update", shuffle_partitions=8)
+    out = run_to_memory(smoothed, mode="update")
     return out.select(
         "user_id", "n_events", F.round("ewma_raw", 6).alias("ewma")
     )
@@ -733,14 +697,8 @@ def stream_left_outer_join_purchases(spark: SparkSession, sf_dir: str) -> DataFr
     timeline and the final table equals the batch LEFT JOIN the oracle
     runs. State stays O(rate × window) on both sides at any stream
     length — same bound as the inner join."""
-    configure_runtime(spark)
     landing = _heartbeat_landing(spark, sf_dir)
-    path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
-    stream = spark.readStream.schema(schema).parquet(landing)
-    if dict(stream.dtypes)["ts"] == "bigint":
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    stream = _denaive(stream).withWatermark("ts", "1 hour")
+    stream = read_stream(spark, sf_dir, landing=landing).withWatermark("ts", "1 hour")
     purchases = stream.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),
         F.col("user_id").alias("p_user"),
@@ -758,7 +716,7 @@ def stream_left_outer_join_purchases(spark: SparkSession, sf_dir: str) -> DataFr
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTES")),
         "left_outer",
     )
-    out = run_to_memory(joined, mode="append", shuffle_partitions=8)
+    out = run_to_memory(joined, mode="append")
     return out.filter(F.col("purchase_id") >= 0).select(
         "purchase_id",
         "click_id",
@@ -806,7 +764,7 @@ def stream_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         M5_US,
     )
 
-    events = read_events_stream(spark, sf_dir)
+    events = read_stream(spark, sf_dir)
     partial = events.groupBy(
         F.expr(f"unix_micros(ts) div {M5_US}").alias("b5"), "event_type"
     ).agg(
@@ -863,7 +821,7 @@ def stream_pit_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     epochs are picked up without restarting the stream)."""
     from etl_pipeline_sam_gov_spark.tables import load_tables
 
-    events = read_events_stream(spark, sf_dir)
+    events = read_stream(spark, sf_dir)
     ev = load_tables(spark, sf_dir, ("events",))["events"]
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     ts_us = F.unix_micros("ts")
@@ -933,7 +891,7 @@ def stream_window_topk_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs on the windows×types-sized rollup, partitioned by window —
     WindowGroupLimit prunes to STREAM_TOPK per partition before the
     final sort. Deterministic tiebreak on event_type."""
-    events = read_events_stream(spark, sf_dir)
+    events = read_stream(spark, sf_dir)
     agg = (
         events.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
@@ -1067,7 +1025,7 @@ def stream_cdc_snapshot_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    events = read_events_stream(spark, sf_dir).select(
+    events = read_stream(spark, sf_dir).select(
         "user_id", F.unix_micros("ts").alias("ts_us"), "event_id", "value"
     )
     prev = session_slots(spark).pop("cdc", None)
@@ -1118,7 +1076,7 @@ def stream_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller than the windowed aggs' open-window state; the pair stream
     is append-mode (each pair emitted exactly once), so the downstream
     aggregation could itself be a streaming groupBy in production."""
-    events = read_events_stream(spark, sf_dir)
+    events = read_stream(spark, sf_dir)
 
     def update_pairs(key, pdfs, state):
         import pandas as pd
@@ -1154,7 +1112,7 @@ def stream_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             GroupStateTimeout.NoTimeout,
         )
     )
-    pairs = run_to_memory(pairs_stream, mode="append", shuffle_partitions=8)
+    pairs = run_to_memory(pairs_stream, mode="append")
     counted = pairs.groupBy("prev_type", "next_type").agg(
         F.count(F.lit(1)).alias("n_transitions")
     )
@@ -1200,7 +1158,7 @@ def stream_pattern_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     open windows, no watermark-held rows; detections stream out the
     moment the closing event arrives (one-event latency, the CEP
     ideal)."""
-    events = read_events_stream(spark, sf_dir)
+    events = read_stream(spark, sf_dir)
 
     def detect(key, pdfs, state):
         import pandas as pd
@@ -1268,7 +1226,7 @@ def stream_pattern_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
             GroupStateTimeout.NoTimeout,
         )
     )
-    peaks = run_to_memory(detected, mode="append", shuffle_partitions=8)
+    peaks = run_to_memory(detected, mode="append")
     return peaks.select(
         "user_id",
         "event_id",
@@ -1318,7 +1276,7 @@ def stream_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_pipeline_sam_gov_spark.operators.dedup import _spark_hash60
     from etl_pipeline_sam_gov_spark.tables import load_tables
 
-    events = read_events_stream(spark, sf_dir)
+    events = read_stream(spark, sf_dir)
     hrows = F.explode(
         F.array(*[F.lit(i) for i in range(CMS_DEPTH)])
     ).alias("i")
@@ -1332,7 +1290,7 @@ def stream_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("i", "bucket")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    cells = run_to_memory(cells_stream, mode="complete", shuffle_partitions=8)
+    cells = run_to_memory(cells_stream, mode="complete")
     ev = load_tables(spark, sf_dir, ("events",))["events"]
     exact = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("exact_count")
@@ -1392,7 +1350,7 @@ def stream_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bucket index is the bit length of integer cents (string length of
     the binary rendering — no libm on bucket boundaries, the
     agg_exponential_histogram contract)."""
-    events = read_events_stream(spark, sf_dir)
+    events = read_stream(spark, sf_dir)
     cents = events.filter(F.col("value") > 0).select(
         F.round(F.col("value") * 100, 0).cast("bigint").alias("c")
     )
@@ -1402,7 +1360,7 @@ def stream_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("c").cast("bigint").alias("sum_cents"),
     )
-    out = run_to_memory(agg, mode="complete", shuffle_partitions=4)
+    out = run_to_memory(agg, mode="complete")
     tot = out.agg(F.sum("n").cast("bigint").alias("nt"))
     return out.crossJoin(F.broadcast(tot)).select(
         "bucket",
@@ -1450,7 +1408,7 @@ def stream_funnel_timebound(spark: SparkSession, sf_dir: str) -> DataFrame:
     update mode re-emits only users whose chain advanced."""
     from etl_pipeline_sam_gov_spark.operators.behavior import FUNNEL_WINDOW_US
 
-    events = read_events_stream(spark, sf_dir)
+    events = read_stream(spark, sf_dir)
 
     def update_funnel(key, pdfs, state):
         import pandas as pd
@@ -1519,7 +1477,7 @@ def stream_funnel_timebound(spark: SparkSession, sf_dir: str) -> DataFrame:
             GroupStateTimeout.NoTimeout,
         )
     )
-    out = run_to_memory(chains, mode="update", shuffle_partitions=8)
+    out = run_to_memory(chains, mode="update")
     steps = (
         F.lit(1)
         + F.when(F.col("click_us").isNull(), 0).otherwise(1)
@@ -1559,7 +1517,7 @@ def stream_max_drawdown_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_value_histogram and stream_hypertable_rollup, here feeding
     a risk metric instead of a histogram. Oracle shared verbatim with
     the batch twin."""
-    events = read_events_stream(spark, sf_dir)
+    events = read_stream(spark, sf_dir)
     cells = (
         events.select(
             F.col("event_type").alias("t"),
@@ -1572,7 +1530,7 @@ def stream_max_drawdown_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("t", "h")
         .agg(F.sum("net").cast("bigint").alias("net"))
     )
-    grid = run_to_memory(cells, mode="complete", shuffle_partitions=4)
+    grid = run_to_memory(cells, mode="complete")
     w = (
         W.partitionBy("t")
         .orderBy("h")
@@ -1630,7 +1588,7 @@ def stream_kalman_filter_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE oracle."""
     from etl_pipeline_sam_gov_spark.functions.udfs import KF_Q, KF_R
 
-    events = read_events_stream(spark, sf_dir)
+    events = read_stream(spark, sf_dir)
 
     def update_kalman(key, pdfs, state):
         import pandas as pd
@@ -1691,7 +1649,7 @@ def stream_kalman_filter_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             GroupStateTimeout.NoTimeout,
         )
     )
-    out = run_to_memory(filtered, mode="update", shuffle_partitions=8)
+    out = run_to_memory(filtered, mode="update")
     return out.select(
         "user_id",
         "n_events",
@@ -1737,14 +1695,8 @@ def stream_session_timeout_close(spark: SparkSession, sf_dir: str) -> DataFrame:
     event, holds state forever for one-visit users)."""
     import etl_pipeline_sam_gov_spark.operators.analytics as _an
 
-    configure_runtime(spark)
     landing = _heartbeat_landing(spark, sf_dir)
-    path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
-    stream = spark.readStream.schema(schema).parquet(landing)
-    if dict(stream.dtypes)["ts"] == "bigint":
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    stream = _denaive(stream).withWatermark("ts", "10 minutes")
+    stream = read_stream(spark, sf_dir, landing=landing).withWatermark("ts", "10 minutes")
     gap_us = _an.SESSION_GAP_S * 1_000_000
 
     def fold(key, pdfs, state):
@@ -1816,7 +1768,7 @@ def stream_session_timeout_close(spark: SparkSession, sf_dir: str) -> DataFrame:
             GroupStateTimeout.EventTimeTimeout,
         )
     )
-    out = run_to_memory(sessions, mode="append", shuffle_partitions=8)
+    out = run_to_memory(sessions, mode="append")
     return out.filter(F.col("user_id") >= 0).select(
         "user_id",
         "session_seq",

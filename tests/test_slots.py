@@ -83,3 +83,19 @@ def test_only_slots_persists():
         if banned.search(line)
     ]
     assert not hits, "\n".join(hits)
+
+
+def test_only_session_and_slots_write_confs():
+    """Session confs are written only where a session is set up
+    (session.py: the builder, configure_runtime, the stream session) and
+    by the AQE pin scope (slots.py). No query builder changes session
+    state behind its caller."""
+    banned = re.compile(r"conf\.(un)?set\(")
+    hits = [
+        f"{path.relative_to(PKG)}:{n}: {line.strip()}"
+        for path in sorted(PKG.rglob("*.py"))
+        if path.name not in ("session.py", "slots.py")
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if banned.search(line)
+    ]
+    assert not hits, "\n".join(hits)

@@ -4,20 +4,31 @@ semantics and runtime behaviors the oracle can't see."""
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import sys
+import textwrap
 
 from pyspark.sql import functions as F
 
+from etl_pipeline_sam_gov_spark.session import stream_session
 from etl_pipeline_sam_gov_spark.streaming.jobs import (
-    read_events_stream,
+    read_stream,
     run_to_memory,
     snapshot_stream,
 )
 from etl_pipeline_sam_gov_spark.tables import load_tables
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+#: The stream session's per-session confs that no stream may change on
+#: the caller's session.
+_WATCHED = ("spark.sql.shuffle.partitions", "spark.sql.streaming.stateStore.providerClass")
+
 
 def test_stream_is_actually_streaming(spark, sf_dir):
-    events = read_events_stream(spark, sf_dir)
+    events = read_stream(spark, sf_dir)
     assert events.isStreaming
 
 
@@ -27,7 +38,7 @@ def test_foreachbatch_snapshot_sink_overwrites(spark, sf_dir, tmp_path):
     re-running leaves exactly one snapshot's worth of data."""
     out = os.path.join(str(tmp_path), "snapshot")
     for _ in range(2):  # run twice: second run must overwrite, not append
-        q = snapshot_stream(read_events_stream(spark, sf_dir), out)
+        q = snapshot_stream(read_stream(spark, sf_dir), out)
         q.processAllAvailable()
         q.stop()
         q.awaitTermination()
@@ -44,7 +55,7 @@ def test_foreachbatch_snapshot_sink_overwrites(spark, sf_dir, tmp_path):
 
 
 def test_memory_sink_roundtrip_counts(spark, sf_dir):
-    events = read_events_stream(spark, sf_dir)
+    events = read_stream(spark, sf_dir)
     agg = events.withWatermark("ts", "1 hour").groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -101,23 +112,79 @@ def test_session_window_exact_gap_boundary(spark, tmp_path):
     assert per_user == {10: 1, 20: 1, 30: 2}, per_user
 
 
-def test_rocksdb_state_store_gives_identical_results(spark, monkeypatch):
+def test_rocksdb_state_store_gives_identical_results(spark, sf_dir):
     """The RocksDB provider is a storage backend swap, not a semantics
-    change: the stateful replay must produce byte-identical rows under
-    either provider (SPARK_GRAFT_STATE_STORE is the deployment knob —
-    heap state for replay scale, spillable RocksDB at 100 TB state)."""
+    change: the stateful replay must produce identical rows under
+    either provider. RocksDB is selected the way a deployment selects
+    it, through SPARK_GRAFT_EXTRA_CONFS in a fresh process; the stream
+    session inherits it from the SparkConf, and the stream leaves the
+    caller's provider and width as they were."""
     from etl_pipeline_sam_gov_spark.streaming.jobs import stream_stateful_user_totals
 
-    sf = "/root/testdata/sf0.001"
-    baseline = sorted(map(tuple, stream_stateful_user_totals(spark, sf).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_STATE_STORE", "rocksdb")
-    rocks = sorted(map(tuple, stream_stateful_user_totals(spark, sf).collect()))
-    # run_to_memory scopes the provider conf to the query; the session
-    # must come back on the default provider afterwards
-    assert (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass", None) is None
+    baseline = sorted(map(list, stream_stateful_user_totals(spark, sf_dir).collect()))
+    rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    code = f"""
+        import json, sys
+        sys.path.insert(0, ".")
+        from etl_pipeline_sam_gov_spark.session import get_spark, stream_session
+        from etl_pipeline_sam_gov_spark.streaming.jobs import stream_stateful_user_totals
+
+        spark = get_spark("rocksdb-lane")
+        spark.sparkContext.setLogLevel("ERROR")
+        watched = {_WATCHED!r}
+        before = [spark.conf.get(k, None) for k in watched]
+        rows = sorted(map(list, stream_stateful_user_totals(spark, {sf_dir!r}).collect()))
+        print(json.dumps({{
+            "rows": rows,
+            "before": before,
+            "after": [spark.conf.get(k, None) for k in watched],
+            "stream_provider": stream_session(spark).conf.get(watched[1]),
+        }}))
+        """
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_CPUS="4",
+        SPARK_DRIVER_MEM="2g",
+        SPARK_GRAFT_EXTRA_CONFS=f"spark.sql.streaming.stateStore.providerClass={rocks}",
     )
-    assert rocks == baseline and len(rocks) > 0
+    proc = subprocess.run(
+        [sys.executable, "-c", textwrap.dedent(code)],
+        capture_output=True, text=True, cwd=REPO, env=env, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(proc.stdout.splitlines()[-1])
+    assert got["stream_provider"] == rocks
+    assert got["before"] == got["after"] == ["4", rocks]
+    assert got["rows"] == baseline and len(baseline) > 0
+
+
+def test_streams_leave_caller_session_as_it_was(spark, sf_dir):
+    """A windowed aggregation, an applyInPandasWithState fold, the
+    heartbeat outer join and the CDC upsert each run in the stream
+    session: afterwards the caller's width and state-store provider
+    are what they were, and neither session holds a view the stream
+    made (run_to_memory drops its memory sink's view once resolved)."""
+    import etl_pipeline_sam_gov_spark as eng
+
+    load_tables(spark, sf_dir)  # the caller's table views, made up front
+
+    def views(s):
+        return sorted(t.name for t in s.catalog.listTables() if t.isTemporary)
+
+    confs = [spark.conf.get(k, None) for k in _WATCHED]
+    parent_views = views(spark)
+    for name in (
+        "stream_tumbling_hourly",
+        "stream_stateful_user_totals",
+        "stream_left_outer_join_purchases",
+        "stream_cdc_snapshot_upsert",
+    ):
+        assert eng.QUERIES[name](spark, sf_dir).count() > 0, name
+        assert [spark.conf.get(k, None) for k in _WATCHED] == confs, name
+        assert views(spark) == parent_views, name
+        assert views(stream_session(spark)) == [], name
+    width = int(confs[0])
+    assert stream_session(spark).conf.get(_WATCHED[0]) == str(min(8, width))
 
 
 def test_stateful_totals_accumulate_across_microbatches(spark, tmp_path):
@@ -148,9 +215,7 @@ def test_stateful_totals_accumulate_across_microbatches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    out = run_to_memory(
-        stateful_user_totals(stream), mode="update", shuffle_partitions=4
-    )
+    out = run_to_memory(stateful_user_totals(stream), mode="update")
     # some users must have been updated in BOTH batches (else this test
     # degenerates to the single-batch case)
     per_user = out.groupBy("user_id").count()
@@ -243,7 +308,7 @@ def test_stream_ewma_resumes_state_across_microbatches(spark, tmp_path):
             GroupStateTimeout.NoTimeout,
         )
     )
-    out = J.run_to_memory(smoothed, mode="update", shuffle_partitions=4)
+    out = J.run_to_memory(smoothed, mode="update")
     per_user = out.groupBy("user_id").count()
     assert per_user.filter(F.col("count") >= 2).count() > 0  # true multi-batch
     from pyspark.sql import Window as W
@@ -458,11 +523,11 @@ def test_directory_source_streams_part_files(spark, sf_dir, tmp_path):
     events = load_tables(spark, sf_dir, ("events",))["events"]
     events.write.parquet(os.path.join(d, "events.parquet"))
     agg = (
-        read_events_stream(spark, d)
+        read_stream(spark, d)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    got = run_to_memory(agg, mode="complete", shuffle_partitions=4)
+    got = run_to_memory(agg, mode="complete")
     batch = events.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     assert {(r["event_type"], r["n"]) for r in got.collect()} == {
         (r["event_type"], r["n"]) for r in batch.collect()
